@@ -273,7 +273,11 @@ object Bench {
       // future format drift dies here instead of voiding a round.
       val readBack = scala.io.Source.fromFile(out)
       val firstLine = try readBack.getLines().next() finally readBack.close()
-      validateProtocolLine(firstLine, requireQueries = true)
+      try validateProtocolLine(firstLine, requireQueries = true)
+      catch { case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[bench] protocol read-back failed: ${e.getMessage}")
+        sys.exit(2)
+      }
     } catch { case e: java.io.IOException =>
       System.err.println(s"[bench] could not write bench_total.json: ${e.getMessage}")
     }

@@ -16,15 +16,12 @@ import org.apache.spark.sql.functions._
   * State: requests live in a versioned [[StateTable]] (the `asdf.det`
   * stand-in); completed work lives in the content-addressed [[Cache]].
   */
-final class Engine(
-    val spark: SparkSession,
-    workDir: String,
-    bucketed: Boolean = true) {
+final class Engine(val spark: SparkSession, workDir: String) {
 
   /** The engine's working root (artifacts live under `<workRoot>/out/<id>`). */
   val workRoot: String = workDir
   val cache = new Cache(spark, s"$workDir/cache")
-  val pipeline = new Pipeline(spark, cache, bucketed = bucketed)
+  val pipeline = new Pipeline(spark, cache)
   private val states = new StateTable(spark, s"$workDir/state", Seq("id"))
   /** Durable request documents (the `asdf.det` body store): full typed
     * [[Request]] rows in a versioned state table, so a restarted engine
@@ -102,7 +99,8 @@ final class Engine(
       Artifacts.writeRequestJson(
         Map("id" -> id, "complete_time" -> now()), s"$outDir/$id/request.json")
       1
-    } catch { case scala.util.control.NonFatal(_) =>
+    } catch { case scala.util.control.NonFatal(e) =>
+      Pipeline.logFailure(id, e)
       // a failure AFTER the results-parquet commit (CSV/JSON write)
       // must not leave a -2 request serving a complete-looking
       // result: results() keys on _SUCCESS, so drop the marker
@@ -202,7 +200,8 @@ final class Engine(
           Artifacts.writeRequestJson(
             Map("id" -> id, "complete_time" -> now()), s"$outDir/$id/request.json")
           id -> 1
-        } catch { case scala.util.control.NonFatal(_) =>
+        } catch { case scala.util.control.NonFatal(e) =>
+          Pipeline.logFailure(id, e)
           new java.io.File(s"$outDir/$id/results/_SUCCESS").delete()
           id -> -2
         }

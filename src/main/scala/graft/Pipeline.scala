@@ -25,22 +25,12 @@ final class Pipeline(
     cache: Cache,
     msrVersion: String = "0.1",
     msrResolution: Double = 0.05,
-    // bucketed-by-default: every materialized extract is persisted bucketed
-    // by the merge key, so the wide merge is exchange-free on the extract
-    // side — the 100 TB layout (SURVEY.md §4); pass false for plain-Parquet
-    // cache dirs (no session catalog required)
-    bucketed: Boolean = true,
-    buckets: Int = 32,
     // dataset-catalog stand-in: the reference reads each raster's class
     // list from `asdf.data` metadata (`queue/extract_check.py:27-52`);
     // offline it surfaces as config — a raster with a different class
     // domain (land-cover codes, …) passes its own list, instead of the
     // pivot silently zeroing every unlisted class
-    categoricalClasses: Seq[String] = Seq("A", "N", "R"),
-    // merge-result memoization (see buildOutput). Off only for plan-shape
-    // inspection: with it on, a repeated request returns a cached scan
-    // and the merge JOIN plan is never the returned frame
-    memoizeMerge: Boolean = true) {
+    categoricalClasses: Seq[String] = Seq("A", "N", "R")) {
 
   /** The msr descriptor the reference hashes
     * (`queue/request_tools.py:371-383`). */
@@ -121,7 +111,7 @@ final class Pipeline(
     * the in-engine replacement for the external worker fleets. */
   def compute(item: WorkItem, pixels: DataFrame, locations: DataFrame,
       dryRun: Boolean = false): DataFrame =
-    materialize(item.key, dryRun) {
+    cache.getOrCompute(item.key, dryRun) {
       item.kind match {
         case "release" =>
           // A12 order (`queue/request_tools.py:362-383`): the selection's
@@ -154,13 +144,6 @@ final class Pipeline(
             classes = categoricalClasses)
       }
     }
-
-  /** Cache materialization: `bucketed=true` persists every extract bucketed
-    * by `asdf_id` (the merge key) so the wide merge needs no exchange on the
-    * extract sides — the 100 TB layout (SURVEY.md §4 physical notes). */
-  private def materialize(key: String, dryRun: Boolean)(compute: => DataFrame): DataFrame =
-    if (bucketed && !dryRun) cache.getOrComputeBucketed(key, buckets)(compute)
-    else cache.getOrCompute(key, dryRun)(compute)
 
   /** build_output (`queue/request_tools.py:516-613`): compute/reuse every
     * extract, rename through the [[Naming]] grammar, wide-merge onto the
@@ -219,10 +202,7 @@ final class Pipeline(
     // byte-golden contract rides on it (multi-part parquet read-back
     // returns partitions in file order, not write order). Same
     // single-file assumption Artifacts.writeCsv already makes.
-    val merged =
-      if (memoizeMerge)
-        cache.getOrCompute(s"merge_$mergeKey")(mergedFresh.coalesce(1))
-      else mergedFresh
+    val merged = cache.getOrCompute(s"merge_$mergeKey")(mergedFresh.coalesce(1))
     val echo = render(toJVal(Map(
       "id" -> req.id,
       "boundary" -> req.boundary.name,
@@ -252,8 +232,17 @@ final class Pipeline(
       else try {
         (req.id, 1, buildOutput(req, base, pixels, locations)._1)
       } catch {
-        case scala.util.control.NonFatal(_) => (req.id, -2, spark.emptyDataFrame)
+        case scala.util.control.NonFatal(e) =>
+          Pipeline.logFailure(req.id, e)
+          (req.id, -2, spark.emptyDataFrame)
       }
     }
   }
+}
+
+object Pipeline {
+  /** A request that ends at -2 names its cause on stderr, so a cron
+    * pass's log says why it failed. */
+  def logFailure(id: String, e: Throwable): Unit =
+    System.err.println(s"request $id failed: ${e.getClass.getName}: ${e.getMessage}")
 }

@@ -2392,6 +2392,7 @@ object QueriesExt {
       // TRUE by the oracle). The estimate value never feeds the compare.
       (s, d) => {
         val wBuckets = 4096; val dRows = 4
+        require(dRows * 8 <= 32, "md5 slice rows")
         // three consumers (sketch build, total count, exact top-20) —
         // localCheckpoint the one-column token projection so each reads
         // the materialized blocks instead of re-running the scan +

@@ -176,8 +176,7 @@ object native {
       Bridge.expression(med.cast("double"))))
 
   /** Make the native expressions callable by name from `spark.sql` on a
-    * live session (cluster-wide: `--conf spark.sql.extensions=
-    * graft.plans.GraftExtensions`). */
+    * live session (per session: call it on each session that runs SQL). */
   def registerAll(spark: org.apache.spark.sql.SparkSession): Unit = {
     Bridge.registerFunction(spark, "graft_dot", args => DotProduct(args(0), args(1)))
     Bridge.registerFunction(spark, "min_rolling_hash",

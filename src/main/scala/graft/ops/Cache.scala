@@ -105,10 +105,12 @@ final class Cache(spark: SparkSession, root: String, version: String = "v1") {
   def probe(key: String): Boolean =
     probePlain(key) || spark.catalog.tableExists(bucketTable(key))
 
-  /** Memoized compute: return the cached frame if the probe passes, else
-    * compute, persist (bucket-friendly single write), and read back. Reading
-    * back (rather than returning `compute` directly) means downstream plans
-    * see a plain Parquet scan — prunable and reusable. */
+  /** Memoized compute in the plain layout (key dir + `_SUCCESS`, which
+    * lives on the filesystem and so survives a process restart): return
+    * the cached frame if the key dir passes the probe, else compute,
+    * persist, and read back. Reading back (rather than returning `compute`
+    * directly) means downstream plans see a plain Parquet scan — prunable
+    * and reusable. */
   def getOrCompute(key: String, dryRun: Boolean = false)(compute: => DataFrame): DataFrame = {
     if (probePlain(key)) {
       // probe-hits re-queue the mark: an artifact whose original mark was
@@ -116,9 +118,6 @@ final class Cache(spark: SparkSession, root: String, version: String = "v1") {
       // recomputed forever
       queueMark(key)
       spark.read.parquet(dir(key))
-    } else if (spark.catalog.tableExists(bucketTable(key))) {
-      queueMark(key)
-      spark.table(bucketTable(key)) // entry materialized in the bucketed layout
     } else if (dryRun) Ckpt.planOnly(compute) // probe-only: no checkpoint
     // materialization — under AQE even a lazy localCheckpoint would run
     // every upstream stage during frame CONSTRUCTION (see Ckpt.planOnly)
@@ -243,12 +242,12 @@ final class Cache(spark: SparkSession, root: String, version: String = "v1") {
     spark.read.parquet(keys.map(dir): _*)
   }
 
-  /** Bucketed materialization (SURVEY.md §4 physical notes): extracts are
-    * |zones|-keyed frames that get fold-joined on `asdf_id` at merge time;
-    * persisting them bucketed by the merge key makes every downstream merge
-    * join shuffle-free — the decisive layout at 100 TB, where the extract
-    * cache is consulted by every request. Requires a session catalog
-    * (embedded metastore locally; any HMS-compatible catalog on a cluster).
+  /** Bucketed materialization (SURVEY.md §4 physical notes): persist a
+    * frame bucketed by `bucketCol`, so joins between tables bucketed the
+    * same way need no exchange (the fine-grid [[Tables.pixelsBucketed]] /
+    * [[Tables.zoneMapBucketed]] pair). Requires a session catalog; with
+    * the default in-memory catalog the entry is forgotten when the process
+    * exits, so the request path uses the plain layout of [[getOrCompute]].
     */
   def getOrComputeBucketed(key: String, buckets: Int = 32,
       bucketCol: String = "asdf_id")(compute: => DataFrame): DataFrame = {
@@ -262,7 +261,7 @@ final class Cache(spark: SparkSession, root: String, version: String = "v1") {
     }
     // hit AND fill paths both queue the mark — the self-heal contract
     // (a mark lost before flush re-queues on next touch) must hold for
-    // the engine's default bucketed layout too, not just plain dirs
+    // the bucketed layout too, not just plain dirs
     queueMark(key)
     spark.table(table)
   }

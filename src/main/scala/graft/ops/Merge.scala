@@ -16,9 +16,8 @@ import org.apache.spark.sql.functions._
   * (SURVEY.md §7.5.2).
   *
   * Scale: each extract frame is already aggregated to |zones| rows, so every
-  * join side is small relative to the fact data; frames under the broadcast
-  * threshold are broadcast automatically, and a persisted extract cache
-  * bucketed by `asdf_id` (see [[Cache]]) makes the fold shuffle-free.
+  * join side is small relative to the fact data and is broadcast at the
+  * default threshold.
   */
 object Merge {
 

@@ -165,9 +165,10 @@ object Tables {
     *
     * Paid once per (corpus version, grid): the bucketed write is a full
     * shuffle-and-sort of the raster, amortized over every boundary ×
-    * method extract that reads it afterwards — the same trade as the
-    * bucketed extract cache for merges. ScaleSpec pins the no-fact-side-
-    * exchange plan with broadcast disabled. */
+    * method extract that reads it afterwards. The bucketed tables live in
+    * the session catalog, so they do not survive a process restart.
+    * ScaleSpec pins the no-fact-side-exchange plan with broadcast
+    * disabled. */
   def pixelsBucketed(s: SparkSession, d: String, cache: Cache,
       buckets: Int = 32): DataFrame =
     // bucket count is part of the cache key: getOrComputeBucketed returns

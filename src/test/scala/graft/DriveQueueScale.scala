@@ -85,7 +85,7 @@ object DriveQueueScale {
     println("== leg 1: queue machinery decades (fail-fast backlog) ==")
     machineryTiers.foreach { n =>
       val dir = java.nio.file.Files.createTempDirectory(s"graft_q$n").toString
-      val e = new Engine(s, dir, bucketed = false)
+      val e = new Engine(s, dir)
       val (tSub, _) = timed(e.submitAll((0 until n).map(failFast)))
       val (tInc, _) = timed(e.submitAll((n until n + 1000).map(failFast)))
       val (tLook, st) = timed(e.status(f"q-${n / 2}%07d"))
@@ -106,7 +106,7 @@ object DriveQueueScale {
     println("== leg 2: processing floor (real requests, shared selection) ==")
     Seq(200, 2000).foreach { n =>
       val dir = java.nio.file.Files.createTempDirectory(s"graft_qr$n").toString
-      val e = new Engine(s, dir, bucketed = false)
+      val e = new Engine(s, dir)
       e.submitAll((0 until n).map(real))
       val (tTick, outcomes) = timed(e.tick(base, pixels, locations))
       require(outcomes.size == n && outcomes.values.forall(_ == 1),

@@ -18,6 +18,13 @@ class EngineSpec extends AnyFunSuite {
     raster_data = Seq(RasterSelection(name = "udel",
       extract_types = Seq("mean"), files = Seq(RasterFile("udel_1998")))))
 
+  /** Session-catalog tables that belong to the cache under `workDir`. */
+  def cacheTables(workDir: String): Seq[String] = {
+    val tag = graft.ops.HashKey.sha1Hex(s"$workDir/cache").take(8)
+    spark.catalog.listTables().collect().map(_.name).toSeq
+      .filter(_.startsWith(s"graft_cache_$tag"))
+  }
+
   def base = Seq((1, "A"), (2, "B")).toDF("asdf_id", "name")
   def pixels = Seq((1, 10.0, 1.0, "A", 1998), (2, 6.0, 2.0, "R", 1998))
     .toDF("asdf_id", "value", "weight", "cls", "temporal")
@@ -144,11 +151,11 @@ class EngineSpec extends AnyFunSuite {
     assert(e.results("req-x").isEmpty)
   }
 
-  test("full lifecycle on real sf0.001 parquet with the bucketed-default cache") {
+  test("full lifecycle on real sf0.001 parquet with the plain cache layout") {
     import org.apache.spark.sql.functions.{col, lit}
     import graft.ops.Tables
     val d = "/root/testdata/sf0.001"
-    val e = newEngine() // bucketed = true by default
+    val e = newEngine()
     e.submit(Request(id = "r-real", priority = 5, boundary = Boundary("nga"),
       raster_data = Seq(RasterSelection("udel_precip_v401", Seq("mean", "sum"),
         Seq(RasterFile("udel_precip_v401_1995")))),
@@ -162,6 +169,8 @@ class EngineSpec extends AnyFunSuite {
       .withColumn("donors", lit("AFDB"))
     val outcomes = e.tick(realBase, Tables.pixels(spark, d), realLocs)
     assert(outcomes == Map("r-real" -> 1))
+    assert(cacheTables(e.workRoot).isEmpty,
+      "the request path must not keep cache entries in the session catalog")
     val r = e.results("r-real").get
     assert(r.count() == 25) // one row per nation zone
     assert(r.columns.exists(_.startsWith("udel_precip_v401__1995__mean")))
@@ -172,6 +181,33 @@ class EngineSpec extends AnyFunSuite {
       Request(id = "other", boundary = Boundary("nga"),
         release_data = Seq(ReleaseSelection("nigeriaaims",
           filters = Map("donors" -> Seq("AFDB"))))))).isEmpty)
+  }
+
+  test("a later cron pass reuses an earlier pass's extracts from disk") {
+    // CronTick runs one engine pass per JVM: nothing but the work dir
+    // survives between passes, so the cache must be found on disk alone
+    val dir = Files.createTempDirectory("graft_engine").toString
+    def udel(id: String, methods: String*) = Request(id = id,
+      boundary = Boundary("nga_adm0_gadm28"),
+      raster_data = Seq(RasterSelection(name = "udel",
+        extract_types = methods, files = Seq(RasterFile("udel_1998")))))
+    val e1 = new Engine(spark, dir)
+    e1.submit(udel("req-x", "mean"))
+    assert(e1.tick(base, pixels, locations) == Map("req-x" -> 1))
+    val xKey = e1.pipeline.checkRequest(udel("req-x", "mean")).head.key
+    def xFiles(): Map[String, Long] =
+      new java.io.File(s"$dir/cache/v1").listFiles()
+        .filter(_.getName.endsWith(xKey)).flatMap(_.listFiles())
+        .map(f => f.getPath -> f.lastModified()).toMap
+    val before = xFiles()
+    assert(before.nonEmpty, "the first pass cached nothing for X")
+    // a fresh JVM starts with an empty session catalog
+    cacheTables(dir).foreach(t => spark.sql(s"DROP TABLE `$t`"))
+    val e2 = new Engine(spark, dir)
+    e2.submit(udel("req-xy", "mean", "max"))
+    assert(e2.tick(base, pixels, locations) == Map("req-xy" -> 1))
+    assert(e2.results("req-xy").get.count() == 2)
+    assert(xFiles() == before, "the second pass rewrote X's cached extract")
   }
 
   test("bundle zips the artifacts of a completed request") {
@@ -263,7 +299,7 @@ class EngineSpec extends AnyFunSuite {
     for (seed <- 0 until 15) {
       val rnd = new scala.util.Random(seed)
       val dir = Files.createTempDirectory(s"graft_efuzz$seed").toString
-      var e = new Engine(spark, dir, bucketed = false)
+      var e = new Engine(spark, dir)
       val submitted = scala.collection.mutable.Map[String, Boolean]() // id -> failing
       val doneMtime = scala.collection.mutable.Map[String, Long]()
       def noteCompletions(outcomes: Map[String, Int]): Unit =
@@ -294,7 +330,7 @@ class EngineSpec extends AnyFunSuite {
             }
             e.submitAll(reqs): Unit
           case 2 => noteCompletions(e.tick(base, pixels, locations))
-          case 3 => e = new Engine(spark, dir, bucketed = false) // crash+restart
+          case 3 => e = new Engine(spark, dir) // crash+restart
           case 4 => // submit-crash orphan: body durable, queue row lost
             val id = freshId(); val failing = rnd.nextInt(4) == 0
             submitted(id) = failing
@@ -305,7 +341,7 @@ class EngineSpec extends AnyFunSuite {
         }
       }
       // drain: a restarted engine heals orphans and finishes everything
-      e = new Engine(spark, dir, bucketed = false)
+      e = new Engine(spark, dir)
       noteCompletions(e.tick(base, pixels, locations))
       assert(e.tick(base, pixels, locations).isEmpty,
         s"seed=$seed: a drained queue must tick empty")

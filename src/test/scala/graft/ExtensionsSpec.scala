@@ -2,10 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
-import graft.plans.GraftExtensions
 
-/** The spark.sql.extensions entry point: native functions resolvable by
-  * name from plain SQL, optimizer rule injected. */
+/** `functions.native.registerAll`: native functions resolvable by name
+  * from plain SQL. */
 class ExtensionsSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = {

@@ -119,7 +119,7 @@ class PipelineSpec extends AnyFunSuite {
     // cache root — and the probe runs before per-item plan construction,
     // which is what collapses the duplicate-request floor.
     val root = Files.createTempDirectory("graft_pipe").toString
-    val p = new Pipeline(spark, new Cache(spark, root), bucketed = false)
+    val p = new Pipeline(spark, new Cache(spark, root))
     val r1 = p.buildOutput(request, base, pixels, locations)._1
       .orderBy("asdf_id").collect().toSeq
     def newest(f: java.io.File): Long = {
@@ -135,27 +135,6 @@ class PipelineSpec extends AnyFunSuite {
       "duplicate-work request wrote to the cache — merge was recomputed")
   }
 
-  test("bucketed pipeline: same results, merge without extract-side shuffles") {
-    val root = Files.createTempDirectory("graft_pipe").toString
-    val plain = pipeline().buildOutput(request, base, pixels, locations)._1
-      .orderBy("asdf_id").collect().toSeq
-    // memoizeMerge off: this test pins the merge JOIN plan shape, which
-    // with memoization on is only ever the (eagerly filled) cache's
-    // internal plan — the returned frame would be a plain scan
-    val bp = new Pipeline(spark, new Cache(spark, root), bucketed = true,
-      buckets = 4, memoizeMerge = false)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val (out, _) = bp.buildOutput(request, base, pixels, locations)
-      assert(out.orderBy("asdf_id").collect().toSeq == plain)
-      val merged = bp.buildOutput(request, base, pixels, locations)._1
-      val exchanges = "Exchange hashpartitioning".r
-        .findAllIn(merged.queryExecution.executedPlan.toString).length
-      // joining 4 extract frames: only the (non-bucketed) base may shuffle
-      assert(exchanges <= 1, s"expected bucketed merge, got $exchanges exchanges")
-    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-  }
-
   test("tick: priority order; invalid and failing requests end at -2") {
     val p = pipeline()
     val invalid = request.copy(id = "bad", raster_data = Seq.empty,
@@ -164,10 +143,18 @@ class PipelineSpec extends AnyFunSuite {
       name = "x", extract_types = Seq("no_such_method"),
       files = Seq(RasterFile("x_1998")))))
     val hi = request.copy(id = "hi", priority = 5)
-    val out = p.tick(Seq(request, invalid, hi, broken), base, pixels, locations)
+    val err = new java.io.ByteArrayOutputStream()
+    val prevErr = System.err
+    System.setErr(new java.io.PrintStream(err, true))
+    val out =
+      try p.tick(Seq(request, invalid, hi, broken), base, pixels, locations)
+      finally System.setErr(prevErr)
     assert(out.map(_._1) == Seq("hi", request.id, "bad", "boom"))
     assert(out.map(_._2) == Seq(1, 1, -2, -2))
     assert(out.head._3.count() == 2)
+    // a failing request names its cause on stderr
+    assert(err.toString.linesIterator.exists(_.startsWith("request boom failed: ")),
+      s"no failure cause logged for boom:\n$err")
   }
 
   test("release filters reshape the allocation (A12: filter THEN allocate)") {
