@@ -13,22 +13,27 @@ import org.apache.spark.sql.functions._
   * also available à la carte through the `ops` / `streaming` / `functions`
   * packages.
   *
-  * State: requests live in a versioned [[StateTable]] (the `asdf.det`
-  * stand-in); completed work lives in the content-addressed [[Cache]].
+  * State: requests live in ONE versioned [[StateTable]] (the `asdf.det`
+  * stand-in) whose body `status` column is the queue state; completed
+  * work lives in the content-addressed [[Cache]].
   */
 final class Engine(val spark: SparkSession, workDir: String) {
 
   /** The engine's working root (artifacts live under `<workRoot>/out/<id>`). */
   val workRoot: String = workDir
+  require(!java.nio.file.Files.exists(java.nio.file.Paths.get(workDir, "state")),
+    s"$workDir/state is a queue-state table from an older layout that kept " +
+      "request status apart from the request bodies; drain it with the " +
+      "previous build or use a new work dir")
   val cache = new Cache(spark, s"$workDir/cache")
   val pipeline = new Pipeline(spark, cache)
-  private val states = new StateTable(spark, s"$workDir/state", Seq("id"))
   /** Durable request documents (the `asdf.det` body store): full typed
     * [[Request]] rows in a versioned state table, so a restarted engine
-    * still holds every submitted body — the reference's requests survive
-    * driver restarts in Mongo, and losing them here would strand pending
-    * queue rows with no body to process. */
-  private val requestStore = new StateTable(spark, s"$workDir/requests", Seq("id"))
+    * still holds every submitted body. The row's own `status` is the
+    * queue state, updated in place like the reference's `$set`
+    * (`queue/request_tools.py:150-190`); one row per request means one
+    * atomic append per submit batch, with no second table to reconcile. */
+  private val requests = new StateTable(spark, s"$workDir/requests", Seq("id"))
   private val outDir = s"$workDir/out"
 
   import spark.implicits._
@@ -37,14 +42,14 @@ final class Engine(val spark: SparkSession, workDir: String) {
 
   /** Submit (status -1 "new", submit stage stamped —
     * `queue/request_tools.py:153-161`). Idempotent on id — the request
-    * store's MERGE keeps the first body, like the queue row. */
+    * store keeps the first body. */
   def submit(req: Request): String = { submitAll(Seq(req)); req.id }
 
-  /** Batch submit: ONE request-store delta append and ONE queue-row delta
-    * append for the whole batch — O(batch), not O(live): a snapshot
-    * MERGE per submit rewrites the live queue every time (measured ~1.2 s
-    * per +1k batch against a 10⁵-row live queue, DriveQueueScale r13 —
-    * the lifecycle's one super-linear-in-live write). The deltas merge
+  /** Batch submit: ONE request-store delta append for the whole batch —
+    * O(batch), not O(live): a snapshot MERGE per submit rewrites the live
+    * queue every time (measured ~1.2 s per +1k batch against a 10⁵-row
+    * live queue, DriveQueueScale r13 — the lifecycle's one
+    * super-linear-in-live write). The deltas merge
     * into every read immediately (snapshot wins on key overlap — the
     * same insert-only MERGE semantics) and fold into the snapshot at the
     * next tick's commit. */
@@ -55,13 +60,13 @@ final class Engine(val spark: SparkSession, workDir: String) {
       r.copy(status = -1, stage = Seq(StageTime("submit", ts))))
     // MERGE sources must be key-unique: keep the first body per id
     val unique = stamped.groupBy(_.id).map(_._2.head).toSeq
-    // idempotence must span the ARCHIVE too: the state MERGE's
+    // idempotence must span the ARCHIVE too: the store's MERGE
     // existing-wins rule only sees live rows, so without this anti-join a
     // re-submitted id whose row was compacted to the archive would
     // re-enter the queue as new and reprocess — the reference's
     // find-then-insert runs against the full collection, which never
     // forgets a completed id
-    val fresh = states.archive() match {
+    val fresh = requests.archive() match {
       case Some(arch) =>
         val archived = unique.map(_.id).toDF("id")
           .join(arch.select(col("id")), Seq("id"), "left_semi")
@@ -75,8 +80,7 @@ final class Engine(val spark: SparkSession, workDir: String) {
       // same first-body-kept semantics the snapshot MERGE gave. No
       // version commits here, so no per-submit vacuum: versions only
       // move at tick time, where the deltas fold and vacuum runs.
-      requestStore.appendDelta(fresh.toDS().toDF())
-      states.appendDelta(fresh.map(r => (r.id, -1, ts)).toDF("id", "status", "submit_time"))
+      requests.appendDelta(fresh.toDS().toDF())
     }
     reqs.map(_.id)
   }
@@ -84,7 +88,7 @@ final class Engine(val spark: SparkSession, workDir: String) {
   /** Status lookup spans live + archived rows: a compacted (terminal)
     * request still answers with its final status. */
   def status(id: String): Option[Int] =
-    states.readAll().flatMap(df =>
+    requests.readAll().flatMap(df =>
       df.filter(col("id") === id).select("status")
         .collect().headOption.map(_.getInt(0)))
 
@@ -229,48 +233,22 @@ final class Engine(val spark: SparkSession, workDir: String) {
   /** One cron pass: drain new/waiting requests in priority order, process
     * each end-to-end, persist results + status transitions (1 complete /
     * -2 error), write the CSV + JSON echo artifacts (batched per artifact
-    * kind — see [[writeGroup]]). One state read up front and ONE committed
-    * state version per tick; artifact writes are per-request
+    * kind — see [[writeGroup]]). One request-store read up front and ONE
+    * status commit per tick; artifact writes are per-request
     * fault-contained (the result DataFrame is lazy — a runtime failure
     * surfaces at write time, not in Pipeline.tick's plan-time catch, and
     * must demote that request to -2 without aborting the batch). */
   def tick(base: DataFrame, pixels: DataFrame, locations: DataFrame): Map[String, Int] = {
-    // heal submit-crash orphans first: a crash between the request-store
-    // commit and the queue-row commit leaves a durable body with no queue
-    // row — invisible to the pending filter forever. One queue-scale
-    // anti-join re-inserts the missing rows each tick. The state side is
-    // the FULL history view: a body whose state row was compacted to the
-    // archive is finished work, not an orphan.
-    (states.readAll(), requestStore.read()) match {
-      case (Some(st), Some(bodies)) =>
-        val orphans = bodies.select(col("id")).join(st.select(col("id")), Seq("id"), "left_anti")
-          .collect().map(_.getString(0))
-        if (orphans.nonEmpty)
-          states.upsert(orphans.toSeq.map(id => (id, -1, now()))
-            .toDF("id", "status", "submit_time"))
-      case (None, Some(bodies)) =>
-        // bootstrap crash window: bodies committed, state table never
-        // created at all — seed it whole
-        states.commit(bodies.select(col("id")).collect().map(_.getString(0)).toSeq
-          .map(id => (id, -1, now())).toDF("id", "status", "submit_time"))
-      case _ => ()
-    }
     // only pending work reaches the driver, and only per tick: the status
-    // predicate is pushed into the state scan and the request BODIES are
-    // loaded by a semi-join against those pending ids — the driver heap
+    // predicate is pushed into the request-store scan — the driver heap
     // holds the live queue head, never the full (ever-growing) request
     // history. Bodies are durable in the request store; holding them in a
     // process-lifetime map would pin a multi-million-request backlog on
     // the driver for no reason. Drain order (stage[0] stamp, then id)
     // matches what a restarted engine reloads.
-    val pending: Seq[Request] = (states.read(), requestStore.read()) match {
-      case (Some(st), Some(bodies)) =>
-        val ids = st.filter(col("status").isin(-1, 0)).select("id")
-        bodies.join(ids, Seq("id"), "left_semi").as[Request].collect()
-          .sortBy(r => (r.stage.headOption.map(_.time).getOrElse(0L), r.id))
-          .toSeq
-      case _ => Seq.empty
-    }
+    val pending: Seq[Request] = requests.read().toSeq.flatMap(
+      _.filter(col("status").isin(-1, 0)).as[Request].collect()
+        .sortBy(r => (r.stage.headOption.map(_.time).getOrElse(0L), r.id)))
     val ticked = pipeline.tick(pending, base, pixels, locations)
     val written = writeArtifacts(ticked.collect { case (id, 1, r) => (id, r) })
     val outcomes = ticked.map {
@@ -279,44 +257,24 @@ final class Engine(val spark: SparkSession, workDir: String) {
     }
     if (outcomes.nonEmpty) {
       val oDF = outcomes.toDF("id", "new_status")
-      // update commits a version when the table exists; the bootstrap
-      // branch above guarantees it does whenever anything was pending,
-      // so outcomes can never be silently dropped
-      states.update(df => df.join(oDF, Seq("id"), "left")
+      // anything pending was read from the table, so it exists and the
+      // update commits a version; the select keeps the body column order
+      requests.update(df => df.join(oDF, Seq("id"), "left")
         .withColumn("status", coalesce(col("new_status"), col("status")))
-        .drop("new_status"))
-      // the drain path commits versions too — keep them bounded like the
-      // submit path does, or a submit-then-drain workload grows one full
-      // snapshot per tick forever
-      states.vacuum(keep = 4)
+        .select(df.columns.map(col).toSeq: _*))
     }
     // terminal-state compaction: finished rows (1 complete / -2 error)
-    // leave the live queue table — and their bodies the live request
-    // store — for the append-only archive, so the per-tick pending scan
-    // and the orphan anti-join stay bounded by LIVE work even after
-    // millions of completed requests. vacuum bounds versions; this bounds
-    // rows. status()/history stay served via readAll().
-    states.compact(_.filter(col("status").isin(1, -2))).foreach { _ =>
-      states.vacuum(keep = 4)
-    }
-    // the BODY compaction keys off the archive unconditionally, not off
-    // whether THIS tick archived anything: a crash between the two
-    // compacts would otherwise strand terminal bodies in the live request
-    // store until some unrelated request completed (states.compact
-    // returns None on later ticks — nothing terminal is live anymore —
-    // and the foreach body would never run again). compact() itself
-    // no-ops when nothing matches, so the steady-state cost is one
-    // semi-join over live bodies.
-    states.archive().map(_.select("id")).foreach { terminalIds =>
-      requestStore.compact(_.join(terminalIds, Seq("id"), "left_semi"))
-        .foreach { _ => requestStore.vacuum(keep = 4) }
-    }
-    // bound the archive DIRECTORY count too (one batch lands per
-    // compacting tick): submit idempotence and the orphan heal scan the
-    // archive every tick, and a months-old engine would otherwise pay a
-    // thousands-of-tiny-dirs multi-path scan on the submit hot path
-    states.consolidateArchive()
-    requestStore.consolidateArchive()
+    // leave the live table for the append-only archive, so the per-tick
+    // pending scan stays bounded by LIVE work even after millions of
+    // completed requests. vacuum bounds versions (the drain commits them
+    // too); compact bounds rows; status()/history stay served via
+    // readAll(). consolidateArchive bounds the archive DIRECTORY count (one
+    // batch lands per compacting tick): submit idempotence scans the
+    // archive, and a months-old engine would otherwise pay a
+    // thousands-of-tiny-dirs multi-path scan on the submit path.
+    requests.compact(_.filter(col("status").isin(1, -2)))
+    requests.vacuum(keep = 4)
+    requests.consolidateArchive()
     // persist buffered done-set marks before the pass ends: a cron-driven
     // engine exits after each tick, and marks held only in memory would be
     // rediscovered one probe-hit at a time instead of surviving the exit

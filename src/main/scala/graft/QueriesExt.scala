@@ -2108,7 +2108,8 @@ object QueriesExt {
         // probe at tens of ns, sum in document order, round(avg, 6)
         // inline. This replaces the former explode → broadcast-hash
         // joinOnZone probe (~3.4-4 µs per trigram ROW, 15× the
-        // counts-build pass; ~190 s at the decade-3 tier, DriveLmProbe)
+        // counts-build pass; ~190 s at the decade-3 tier, DriveLmProbe
+        // (probe main since deleted))
         // → corpus-grain groupBy(doc_id) chain: no second explode, no
         // probe leg, no doc-grain shuffle. A doc with no scored trigrams
         // (NULL/short text) yields NULL and is filtered — the joined+

@@ -20,8 +20,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * composed plan — explode to a (doc_id, trigram) stream, broadcast-hash
   * probe the counts ([[graft.ops.Extracts.joinOnZone]]), re-aggregate by
   * doc_id — pays ~4 µs per trigram ROW through the join/agg machinery
-  * (~20× an aggregate-map lookup; DriveLmProbe stage metrics), and at
-  * decade-3 corpora (10¹⁰ trigram rows) that probe leg alone was ~190 s.
+  * (~20× an aggregate-map lookup; DriveLmProbe stage metrics (probe main
+  * since deleted)), and at decade-3 corpora (10¹⁰ trigram rows) that
+  * probe leg alone was ~190 s.
   * This expression walks each document's UTF-8 bytes ONCE (same offset
   * technique as [[CharNgrams]]), probes an open-hashed map per window at
   * tens of ns, and emits the finished per-document score — no second

@@ -75,8 +75,7 @@ final class StateTable(spark: SparkSession, dir: String, keys: Seq[String],
   // commit a v_{N+1}-style successor; one merge vanished). A lease left
   // by a CRASHED writer is stolen once it is older than `leaseMs`
   // (10 min default — an order of magnitude above any tick's
-  // commit time; CronTick's crash-orphan healing period has the same
-  // role queue-side). Residual windows, documented rather than hidden:
+  // commit time). Residual windows, documented rather than hidden:
   // two stealers of the same stale lock can interleave delete/create
   // (loser's create fails loudly — safe — but the loser may first delete
   // the winner's fresh lock in a sub-millisecond window), and a writer
@@ -378,8 +377,8 @@ final class StateTable(spark: SparkSession, dir: String, keys: Seq[String],
   }
 
   /** Bound the archive's DIRECTORY count: [[compact]] appends one batch
-    * dir per call, and an every-tick consumer (the submit-idempotence
-    * anti-join, the orphan heal) would otherwise pay a multi-path scan
+    * dir per call, and a frequent consumer (the engine's
+    * submit-idempotence anti-join) would otherwise pay a multi-path scan
     * over thousands of tiny dirs after months of ticks. Above
     * `maxBatches`, merge everything into ONE combined batch under the
     * same write-temp + atomic-move discipline.

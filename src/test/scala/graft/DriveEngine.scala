@@ -39,7 +39,7 @@ object DriveEngine {
     * cache fill → merge → artifacts on sf0.1 and on the 10× adversarial
     * corpus (hot-zone lineitem), bench-shaped session. Measures the tick
     * exponent, the cache-hit no-op tick, and the driver heap after each
-    * cycle — the round-5 claim that the semi-join body load keeps the
+    * cycle — the round-5 claim that the per-tick pending load keeps the
     * driver heap queue-head-sized (corpus-independent), finally
     * measured. Byte-golden artifact parity stays pinned at fixture scale
     * by EngineSpec; this tier asserts completion + non-empty results. */

@@ -16,15 +16,15 @@ import graft.model._
   *
   *  - **Machinery decades** (default 10³ → 10⁴ → 10⁵ requests): one-batch
   *    submit, a +1k incremental submit against the full live queue (the
-  *    steady-state ingest cost — O(live) by design, since every upsert
-  *    rewrites the live snapshot), one status() lookup, then ONE tick()
-  *    draining the whole backlog. The requests are fail-fast (unknown
-  *    extract type → plan-time -2), so the measurement isolates the queue
-  *    machinery itself — pending scan + body semi-join + driver collect +
-  *    outcome commit + terminal compaction + archive consolidation — from
-  *    the per-request compute floor, which leg 2 prices separately. An
-  *    empty follow-up tick gives the post-drain floor (orphan heal +
-  *    pending scan over an empty live table with a 10⁵-row archive).
+  *    steady-state ingest cost — one O(batch) delta append to the request
+  *    table), one status() lookup, then ONE tick() draining the whole
+  *    backlog. The requests are fail-fast (unknown extract type →
+  *    plan-time -2), so the measurement isolates the queue machinery
+  *    itself — status-filtered pending scan + driver collect + outcome
+  *    commit + terminal compaction + archive consolidation — from the
+  *    per-request compute floor, which leg 2 prices separately. An empty
+  *    follow-up tick gives the post-drain floor (pending scan over an
+  *    empty live table with a 10⁵-row archive).
   *    Driver heap is sampled (post-GC) after the drain: the pending
   *    collect is the one queue-proportional driver allocation, and it
   *    must track LIVE rows, never total history.

@@ -268,22 +268,30 @@ class EngineSpec extends AnyFunSuite {
     }
   }
 
-  test("tick heals a submit-crash orphan (body stored, queue row lost)") {
+  test("submit is one append to one request table; status reads the body") {
     val dir = Files.createTempDirectory("graft_engine").toString
-    val e1 = new Engine(spark, dir)
-    e1.submit(request)
-    // simulate the crash window: body persisted, queue row gone — reset
-    // the states table to an unrelated committed snapshot
-    val states = new graft.ops.StateTable(spark, s"$dir/state", Seq("id"))
-    states.commit(Seq(("someone-else", 1, 0L)).toDF("id", "status", "submit_time"))
-    val e2 = new Engine(spark, dir)
-    assert(e2.status("req-1").isEmpty, "queue row really is gone")
-    assert(e2.tick(base, pixels, locations) == Map("req-1" -> 1),
-      "orphan reconcile must re-insert the queue row and process it")
+    val e = new Engine(spark, dir)
+    val ids = Seq("req-a", "req-b", "req-c")
+    e.submitAll(ids.map(id => request.copy(id = id)))
+    assert(!new java.io.File(s"$dir/state").exists(),
+      "no separate queue-state table may be created")
+    val batches = new java.io.File(s"$dir/requests/_delta").listFiles()
+      .filter(f => f.isDirectory && f.getName.startsWith("d"))
+    assert(batches.length == 1, s"expected one delta batch, got ${batches.length}")
+    ids.foreach(id => assert(e.status(id).contains(-1), s"$id must be new (-1)"))
   }
 
-  test("fuzz: random submit/tick/crash/restart/orphan schedules — no lost " +
-    "request, no double-processing, live stores drain, archive partitions") {
+  test("an engine refuses a work dir holding the old queue-state table") {
+    val dir = Files.createTempDirectory("graft_engine").toString
+    Files.createDirectories(java.nio.file.Paths.get(dir, "state"))
+    val err = intercept[IllegalArgumentException](new Engine(spark, dir))
+    assert(err.getMessage.contains(s"$dir/state"), err.getMessage)
+    assert(err.getMessage.contains("new work dir"), err.getMessage)
+  }
+
+  test("fuzz: random submit/tick/crash/restart schedules with bodies upserted " +
+    "by another writer — no lost request, no double-processing, live table " +
+    "drains, archive partitions") {
     // Engine-level companion to the StateTableSpec model fuzz: the state
     // layer's 100 schedules check the table contract cheaply; these
     // schedules drive the FULL lifecycle (submit→pipeline→artifacts→
@@ -331,7 +339,7 @@ class EngineSpec extends AnyFunSuite {
             e.submitAll(reqs): Unit
           case 2 => noteCompletions(e.tick(base, pixels, locations))
           case 3 => e = new Engine(spark, dir) // crash+restart
-          case 4 => // submit-crash orphan: body durable, queue row lost
+          case 4 => // a body upserted by another writer, not through submit
             val id = freshId(); val failing = rnd.nextInt(4) == 0
             submitted(id) = failing
             val body = mkReq(id, failing)
@@ -340,7 +348,7 @@ class EngineSpec extends AnyFunSuite {
               .upsert(Seq(body).toDS().toDF()): Unit
         }
       }
-      // drain: a restarted engine heals orphans and finishes everything
+      // drain: a restarted engine finishes everything
       e = new Engine(spark, dir)
       noteCompletions(e.tick(base, pixels, locations))
       assert(e.tick(base, pixels, locations).isEmpty,
@@ -356,14 +364,11 @@ class EngineSpec extends AnyFunSuite {
           .lastModified() == mt,
           s"seed=$seed $id: completed artifacts were rewritten (reprocessed)")
       }
-      // live stores drain: terminal rows compact away, bodies follow
-      Seq("state", "requests").foreach { t =>
-        val live = new graft.ops.StateTable(spark, s"$dir/$t", Seq("id")).read()
-        assert(live.forall(_.isEmpty), s"seed=$seed live $t must drain")
-      }
+      // the live table drains: terminal rows compact away
+      val store = new graft.ops.StateTable(spark, s"$dir/requests", Seq("id"))
+      assert(store.read().forall(_.isEmpty), s"seed=$seed live requests must drain")
       // full history partitions: every id exactly once, all terminal
-      val all = new graft.ops.StateTable(spark, s"$dir/state", Seq("id"))
-        .readAll().get.select("id", "status").collect()
+      val all = store.readAll().get.select("id", "status").collect()
         .map(r => r.getString(0) -> r.getInt(1))
       assert(all.length == all.map(_._1).distinct.length,
         s"seed=$seed duplicate ids across live∪archive")
@@ -375,7 +380,7 @@ class EngineSpec extends AnyFunSuite {
   test("driver holds no process-lifetime request-body map (bounded heap)") {
     // structural: the engine must not declare a mutable collection field —
     // bodies are durable in the request store and loaded per tick by a
-    // pending-ids semi-join, so the driver heap is bounded by the live
+    // status-filtered scan, so the driver heap is bounded by the live
     // queue head, not the lifetime request history
     val fields = classOf[Engine].getDeclaredFields.map(_.getType.getName)
     assert(!fields.exists(_.contains("mutable")),
@@ -396,12 +401,10 @@ class EngineSpec extends AnyFunSuite {
     val e = new Engine(spark, dir)
     e.submit(request)
     assert(e.tick(base, pixels, locations) == Map("req-1" -> 1))
-    val st = new graft.ops.StateTable(spark, s"$dir/state", Seq("id"))
+    val st = new graft.ops.StateTable(spark, s"$dir/requests", Seq("id"))
     assert(st.read().get.count() == 0, "live queue drained of terminal rows")
     assert(st.archive().get.count() == 1, "terminal row archived")
     assert(e.status("req-1").contains(1), "status served from the archive")
-    val bodies = new graft.ops.StateTable(spark, s"$dir/requests", Seq("id"))
-    assert(bodies.read().get.count() == 0, "terminal bodies archived too")
     assert(e.results("req-1").get.count() == 2, "results unaffected")
     assert(e.tick(base, pixels, locations).isEmpty, "archive is not re-queued")
   }
