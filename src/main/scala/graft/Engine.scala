@@ -275,10 +275,6 @@ final class Engine(val spark: SparkSession, workDir: String) {
     requests.compact(_.filter(col("status").isin(1, -2)))
     requests.vacuum(keep = 4)
     requests.consolidateArchive()
-    // persist buffered done-set marks before the pass ends: a cron-driven
-    // engine exits after each tick, and marks held only in memory would be
-    // rediscovered one probe-hit at a time instead of surviving the exit
-    cache.flushDone()
     outcomes.toMap
   }
 

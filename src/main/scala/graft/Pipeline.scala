@@ -100,10 +100,10 @@ final class Pipeline(
   }
 
   /** Which items still need computing (probe-only when `dryRun` — the
-    * reference's shadow-execution mode, `queue/processing.py:85,213-215`).
-    * Per-request item counts are bounded (selections × methods), so a
-    * per-item probe is fine HERE; set-scale miss detection over a
-    * descriptor stream belongs to [[Cache.misses]]' anti-join. */
+    * reference's shadow-execution mode, `queue/processing.py:85,213-215`):
+    * one artifact probe per item, as the reference's J4 checks each item
+    * (`queue/extract_check.py:104`). Per-request item counts are bounded
+    * (selections × methods). */
   def misses(items: Seq[WorkItem]): Seq[WorkItem] =
     items.filterNot(i => cache.probe(i.key))
 

@@ -4005,7 +4005,6 @@ object QueriesExt {
       // (calendar-bounded, metadata scale); per-day partials are
       // count/cents pairs — algebraic, so the combine is a sum.
       (s, d) => {
-        import s.implicits._
         // the cache root mixes a CONTENT fingerprint of the events table
         // (file names+sizes+mtimes) into the key: a fixture regenerated at
         // the same path must version the cache, not probe-hit stale
@@ -4021,14 +4020,13 @@ object QueriesExt {
         def keyOf(day: String) = s"daily_${day.replace("-", "")}"
         val days = e.select(col("day")).distinct()
           .orderBy("day").collect().map(_.getDate(0).toString)
-        // set-level miss detection (ONE anti-join over the done set), then
-        // ONE grouped job fills every missing day via a partitioned write —
-        // never a per-day sequential compute loop, which serializes on the
-        // driver at 10⁵ partition-days. The collected frames are calendar-
-        // bounded (|days|), metadata scale.
-        val missingDays = cache.misses(
-            days.map(dd => (keyOf(dd), dd)).toSeq.toDF("key", "day_str"))
-          .select("day_str").as[String].collect().sorted
+        // per-day miss detection (one artifact probe per day, the same
+        // probe the request path uses), then ONE grouped job fills every
+        // missing day via a partitioned write — never a per-day sequential
+        // compute loop, which serializes on the driver at 10⁵
+        // partition-days. The collected day list is calendar-bounded
+        // (|days|), metadata scale.
+        val missingDays = days.filterNot(dd => cache.probe(keyOf(dd)))
         if (missingDays.nonEmpty) {
           val partials = e.filter(col("day")
               .isin(missingDays.map(java.sql.Date.valueOf).toSeq: _*))
@@ -4037,7 +4035,6 @@ object QueriesExt {
             .withColumn("day_part", date_format(col("day"), "yyyyMMdd"))
           cache.fillManyPartitioned(partials, "day_part", v => s"daily_$v")
         }
-        cache.flushDone()
         // ONE multi-path scan over all day partials, not an N-way union
         cache.readMany(days.map(keyOf).toSeq)
           .groupBy(col("day"), col("event_type"))

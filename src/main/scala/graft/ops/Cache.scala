@@ -1,8 +1,7 @@
 package graft.ops
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Content-addressed result memoization — the reference's signature
   * workload-level optimization (SURVEY.md §4): every unit of work is keyed by
@@ -15,75 +14,13 @@ import org.apache.spark.sql.functions._
   * `queue/extract_check.py:92-98`): one Parquet dir per key under `root`.
   * Probe = dir exists AND `_SUCCESS` marker present AND non-empty — the
   * reference's belt-and-suspenders artifact check
-  * (`queue/extract_check.py:104`, `queue/msr_check.py:47-51`).
+  * (`queue/extract_check.py:104`, `queue/msr_check.py:47-51`). The
+  * artifact tree is the cache's only record: there is no separate index
+  * of done keys to keep in step with it, so miss detection is a per-key
+  * probe (the reference's J4 likewise checks each item's artifact).
   */
 final class Cache(spark: SparkSession, root: String, version: String = "v1") {
   private def dir(key: String) = s"$root/$version/$key"
-
-  /** Done-set state table (`_done/` under the version root): the set of
-    * materialized keys, maintained at write/invalidate time so set-level
-    * miss detection is one distributed anti-join instead of a per-key
-    * filesystem probe loop — the reference's J4 likewise asks the *db*
-    * for listings and touches the FS only per item
-    * (`queue/extract_check.py:92-104`).
-    *
-    * Marks are BUFFERED and flushed in batches (on [[misses]], at 1024
-    * pending, or via [[flushDone]]): a snapshot rewrite per materialized
-    * key would make N fills O(N²) in done-set IO. Crash-safety comes from
-    * the artifact tree staying authoritative: an artifact whose mark died
-    * with the buffer is re-queued the next time [[getOrCompute]] probe-hits
-    * it, so the set self-heals instead of diverging. At true 10⁶+ work
-    * items the same layout maps onto a transactional table (Delta/Iceberg
-    * MERGE) — this is the offline stand-in. */
-  private lazy val doneSet = new StateTable(spark, dir("_done"), Seq("key"))
-  private val pendingMarks = scala.collection.mutable.LinkedHashSet.empty[String]
-  private val flushedMarks = scala.collection.mutable.HashSet.empty[String]
-
-  private def queueMark(key: String): Unit = pendingMarks.synchronized {
-    if (!flushedMarks.contains(key)) {
-      pendingMarks += key
-      if (pendingMarks.size >= 1024) flushLocked()
-    }
-  }
-
-  private def flushLocked(): Unit =
-    if (pendingMarks.nonEmpty) {
-      import spark.implicits._
-      doneSet.upsert(pendingMarks.toSeq.toDF("key"))
-      doneSet.vacuum(keep = 16)
-      flushedMarks ++= pendingMarks
-      pendingMarks.clear()
-    }
-
-  /** Flush buffered marks to the done-set table now. */
-  def flushDone(): Unit = pendingMarks.synchronized(flushLocked())
-
-  /** Record keys as materialized (bulk; also callable by external writers
-    * that populate the artifact tree out-of-band). One MERGE for the whole
-    * frame; old done-set versions vacuum so a long-lived cache keeps O(1)
-    * snapshot dirs. */
-  def markDone(keys: DataFrame): Unit = {
-    doneSet.upsert(keys.toDF("key"))
-    doneSet.vacuum(keep = 16)
-  }
-
-  /** Rebuild the done set from ONE listing of the artifact tree (seeds
-    * caches populated before the done set existed, or by writers that
-    * bypassed [[markDone]]). Cost: one directory listing plus a `_SUCCESS`
-    * check per *materialized* artifact — bounded by what exists, not by
-    * the descriptor stream. */
-  def reconcile(): Long = {
-    import spark.implicits._
-    val plain = Option(Paths.get(s"$root/$version").toFile.listFiles())
-      .getOrElse(Array.empty)
-      .filter(_.isDirectory).map(_.getName)
-      .filterNot(n => n.startsWith("_") || n.startsWith("bucketed_"))
-      .filter(probePlain).toSeq
-    val prefix = s"graft_cache_${rootTag}_${version}_"
-    val bucketed = spark.catalog.listTables().collect()
-      .map(_.name).filter(_.startsWith(prefix)).map(_.drop(prefix.length)).toSeq
-    doneSet.commit((plain ++ bucketed).distinct.toDF("key"))
-  }
 
   /** Catalog table names must be scoped to THIS cache instance (root +
     * version) — the session catalog is global, and an unscoped name would
@@ -112,44 +49,13 @@ final class Cache(spark: SparkSession, root: String, version: String = "v1") {
     * directly) means downstream plans see a plain Parquet scan — prunable
     * and reusable. */
   def getOrCompute(key: String, dryRun: Boolean = false)(compute: => DataFrame): DataFrame = {
-    if (probePlain(key)) {
-      // probe-hits re-queue the mark: an artifact whose original mark was
-      // lost (crash between write and flush) heals here instead of being
-      // recomputed forever
-      queueMark(key)
-      spark.read.parquet(dir(key))
-    } else if (dryRun) Ckpt.planOnly(compute) // probe-only: no checkpoint
+    if (probePlain(key)) spark.read.parquet(dir(key))
+    else if (dryRun) Ckpt.planOnly(compute) // probe-only: no checkpoint
     // materialization — under AQE even a lazy localCheckpoint would run
     // every upstream stage during frame CONSTRUCTION (see Ckpt.planOnly)
     else {
       compute.write.mode("overwrite").parquet(dir(key))
-      queueMark(key)
       spark.read.parquet(dir(key))
-    }
-  }
-
-  /** Anti-join miss detection over a descriptor frame carrying a `key`
-    * column: which work units are not yet materialized (J4 / A13).
-    *
-    * Fully distributed: the done set lives in a [[StateTable]] maintained
-    * at write time, so this is one `LEFT ANTI` join — no driver-side
-    * collect of descriptor keys and no per-key filesystem probe loop,
-    * which was a driver bottleneck at 10⁵+ work items. A cache populated
-    * before the done set existed is seeded lazily via one [[reconcile]]
-    * listing. AQE picks the join strategy (broadcast while the done set
-    * is small, shuffle once it is not). The per-key FS probe survives
-    * only on the single-item path ([[probe]]). */
-  def misses(descriptors: DataFrame, keyCol: String = "key"): DataFrame = {
-    flushDone()
-    // NOTE: the returned frame is lazy and reads the done-set version
-    // current NOW; execute it before many further cache mutations — each
-    // flush commits a new version and vacuums old ones (keep=16), so a
-    // frame held across 16+ later commits reads a deleted snapshot dir.
-    val done = doneSet.read().orElse { reconcile(); doneSet.read() }
-    done match {
-      case Some(d) =>
-        descriptors.join(d.withColumnRenamed("key", keyCol), Seq(keyCol), "left_anti")
-      case None => descriptors
     }
   }
 
@@ -157,10 +63,10 @@ final class Cache(spark: SparkSession, root: String, version: String = "v1") {
     * incremental view maintenance): write `df` partitioned by `partCol`
     * (whose values name the keys via `keyFor`), then promote each
     * partition directory to a plain cache key dir, stamping the
-    * `_SUCCESS` marker the probe contract requires, and batch-mark the
-    * done set. A per-key `getOrCompute` loop runs N sequential jobs where
-    * this runs one — at 10⁵ partition-days the loop serializes on the
-    * driver while this stays one distributed write.
+    * `_SUCCESS` marker the probe contract requires. A per-key
+    * `getOrCompute` loop runs N sequential jobs where this runs one — at
+    * 10⁵ partition-days the loop serializes on the driver while this
+    * stays one distributed write.
     *
     * `partCol` is dropped from the data files by `partitionBy` (standard
     * Hive layout), so callers keep any needed copy of the value as a
@@ -199,30 +105,11 @@ final class Cache(spark: SparkSession, root: String, version: String = "v1") {
       .filter(f => f.isDirectory && f.getName.startsWith(s"$partCol="))
       .sortBy(_.getName)
     val partKeys = parts.map(p => p -> keyFor(p.getName.drop(partCol.length + 1)))
-    // overwrite discipline (same ordering contract as [[invalidate]]):
-    // delete-then-move is not atomic, so any key about to be overwritten
-    // is UN-marked first — a crash mid-swap must leave "not done +
-    // artifact torn" (misses() re-queues, refill overwrites — safe),
-    // never "done + artifact gone" (readMany fails forever, because the
-    // batch path's miss detection trusts the done set, not an FS probe)
-    val overwrites = partKeys.collect {
-      case (_, k) if Files.exists(Paths.get(dir(k))) => k
-    }
-    if (overwrites.nonEmpty) {
-      pendingMarks.synchronized {
-        pendingMarks --= overwrites; flushedMarks --= overwrites
-      }
-      doneSet.update(_.filter(!col("key").isin(overwrites.toIndexedSeq: _*)))
-    }
     val keys = partKeys.map { case (p, key) =>
       val target = Paths.get(dir(key))
-      if (Files.exists(target)) {
-        target.toFile.listFiles().foreach(_.delete())
-        Files.delete(target)
-      }
+      deleteKeyDir(target)
       Files.move(p.toPath, target)
       Files.createFile(target.resolve("_SUCCESS"))
-      queueMark(key)
       key
     }.toSeq
     // clear the staging root (only the top-level _SUCCESS remains)
@@ -236,7 +123,8 @@ final class Cache(spark: SparkSession, root: String, version: String = "v1") {
     * partial; N separate scans unioned cost N plan nodes + N directory
     * listings where one scan with N root paths costs one. Caller
     * guarantees the keys are materialized (e.g. via [[getOrCompute]],
-    * whose write is eager) and share a schema. */
+    * whose write is eager, or [[fillManyPartitioned]]) and share a
+    * schema. */
   def readMany(keys: Seq[String]): DataFrame = {
     require(keys.nonEmpty, "readMany needs at least one key")
     spark.read.parquet(keys.map(dir): _*)
@@ -259,25 +147,19 @@ final class Cache(spark: SparkSession, root: String, version: String = "v1") {
         .option("path", dir(s"bucketed_$key"))
         .saveAsTable(table)
     }
-    // hit AND fill paths both queue the mark — the self-heal contract
-    // (a mark lost before flush re-queues on next touch) must hold for
-    // the bucketed layout too, not just plain dirs
-    queueMark(key)
     spark.table(table)
   }
 
-  def invalidate(key: String): Unit = {
-    // un-mark FIRST: a crash mid-invalidate must leave "not done + artifact
-    // still present" (recompute overwrites — safe), never "done + artifact
-    // gone" (missed forever, downstream reads fail)
-    pendingMarks.synchronized { pendingMarks -= key; flushedMarks -= key }
-    doneSet.update(_.filter(col("key") =!= key))
-    Seq(Paths.get(dir(key)), Paths.get(dir(s"bucketed_$key"))).foreach { d =>
-      if (Files.exists(d)) {
-        d.toFile.listFiles().foreach(_.delete())
-        Files.delete(d)
-      }
+  // _SUCCESS first: a crash part-way must never leave the marker over torn files
+  private def deleteKeyDir(d: Path): Unit =
+    if (Files.exists(d)) {
+      Files.deleteIfExists(d.resolve("_SUCCESS"))
+      d.toFile.listFiles().foreach(_.delete())
+      Files.delete(d)
     }
+
+  def invalidate(key: String): Unit = {
+    Seq(Paths.get(dir(key)), Paths.get(dir(s"bucketed_$key"))).foreach(deleteKeyDir)
     if (spark.catalog.tableExists(bucketTable(key)))
       spark.sql(s"DROP TABLE `${bucketTable(key)}`")
   }

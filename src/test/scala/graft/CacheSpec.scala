@@ -32,54 +32,6 @@ class CacheSpec extends AnyFunSuite {
     assert(!c.probe("k"))
   }
 
-  test("misses anti-join: only unmaterialized keys remain (J4/A13)") {
-    val c = newCache()
-    c.getOrCompute("done")(Seq((1, "a")).toDF("id", "v"))
-    val desc = Seq("done", "todo1", "todo2").toDF("key")
-    val missing = c.misses(desc).as[String].collect().toSet
-    assert(missing == Set("todo1", "todo2"))
-  }
-
-  test("misses scales: 10^4 descriptors, one anti-join, no probe loop") {
-    val c = newCache()
-    c.getOrCompute("done_a")(Seq((1, "a")).toDF("id", "v"))
-    // bulk-mark a large done set without touching the filesystem per key —
-    // this is the 10^5-work-items shape the probe loop used to choke on
-    c.markDone((0 until 5000).map(i => s"bulk_$i").toDF("key"))
-    val desc = ((0 until 5000).map(i => s"bulk_$i") ++
-      (0 until 5000).map(i => s"todo_$i") :+ "done_a").toDF("key")
-    val missing = c.misses(desc)
-    assert(missing.count() == 5000)
-    assert(missing.as[String].collect().forall(_.startsWith("todo_")))
-  }
-
-  test("misses reconciles a cache populated before the done set existed") {
-    val root = Files.createTempDirectory("graft_cache").toString
-    val c1 = new Cache(spark, root)
-    c1.getOrCompute("k1")(Seq((1, "a")).toDF("id", "v"))
-    c1.flushDone()
-    // wipe the done set to simulate a pre-done-set artifact tree
-    val done = java.nio.file.Paths.get(root, "v1", "_done")
-    Files.walk(done).sorted(java.util.Comparator.reverseOrder())
-      .forEach(f => Files.delete(f))
-    val c2 = new Cache(spark, root)
-    val missing = c2.misses(Seq("k1", "k2").toDF("key")).as[String].collect().toSet
-    assert(missing == Set("k2"))
-  }
-
-  test("a mark lost before flush heals on the next probe-hit (crash recovery)") {
-    val root = Files.createTempDirectory("graft_cache").toString
-    val c1 = new Cache(spark, root)
-    c1.getOrCompute("k1")(Seq((1, "a")).toDF("id", "v"))
-    // crash before flush: artifact on disk, mark never reached the table.
-    // a FRESH instance (fresh buffers) must not report k1 missing forever:
-    val c2 = new Cache(spark, root)
-    c2.markDone(Seq("other").toDF("key")) // done set exists but lacks k1
-    assert(c2.misses(Seq("k1").toDF("key")).count() == 1, "k1 unmarked so far")
-    c2.getOrCompute("k1")(sys.error("must not recompute")) // probe-hit re-queues
-    assert(c2.misses(Seq("k1").toDF("key")).count() == 0, "probe-hit healed the mark")
-  }
-
   test("fillManyPartitioned fills N keys with ONE Spark job (IVM batch fill)") {
     val c = newCache()
     val df = Seq((1, "a", "d1"), (2, "b", "d1"), (3, "c", "d2"), (4, "d", "d3"))
@@ -94,16 +46,14 @@ class CacheSpec extends AnyFunSuite {
     assert(jobs.length == 1, s"expected ONE job for the batch fill, saw ${jobs.length}")
     assert(keys.toSet == Set("daily_d1", "daily_d2", "daily_d3"))
     assert(Seq("daily_d1", "daily_d2", "daily_d3").forall(c.probe))
-    assert(c.misses(keys.toDF("key")).count() == 0, "all filled keys marked done")
     val back = c.readMany(keys)
     assert(back.columns.toSet == Set("id", "v"), "partition col dropped by layout")
     assert(back.count() == 4)
-    // refill overwrites (getOrCompute overwrite semantics); the done set
-    // is UN-marked before the swap then re-marked, so it ends consistent
+    // refill overwrites (getOrCompute overwrite semantics)
     val keys2 = c.fillManyPartitioned(
       Seq((9, "z", "d1")).toDF("id", "v", "pday"), "pday", v => s"daily_$v")
     assert(c.readMany(keys2).as[(Int, String)].collect().toSeq == Seq((9, "z")))
-    assert(c.misses(keys2.toDF("key")).count() == 0, "overwritten key re-marked done")
+    assert(keys2.forall(c.probe), "overwritten key probe-hits")
   }
 
   test("stale orphaned staging dirs are reaped; fresh ones survive") {
@@ -137,12 +87,12 @@ class CacheSpec extends AnyFunSuite {
     assert(c.probe("k_d1"))
   }
 
-  test("invalidate removes the key from the done set") {
+  test("invalidate makes the key miss") {
     val c = newCache()
     c.getOrCompute("k")(Seq((1, "a")).toDF("id", "v"))
-    assert(c.misses(Seq("k").toDF("key")).count() == 0)
+    assert(c.probe("k"))
     c.invalidate("k")
-    assert(c.misses(Seq("k").toDF("key")).count() == 1)
+    assert(!c.probe("k"))
   }
 
   test("version bump invalidates (version-based invalidation §4)") {

@@ -210,6 +210,19 @@ class EngineSpec extends AnyFunSuite {
     assert(xFiles() == before, "the second pass rewrote X's cached extract")
   }
 
+  test("the cache's key dirs are its only record: a tick writes no done set") {
+    val dir = Files.createTempDirectory("graft_engine").toString
+    val e = new Engine(spark, dir)
+    e.submit(request)
+    assert(e.tick(base, pixels, locations) == Map("req-1" -> 1))
+    val keys = e.pipeline.checkRequest(request).map(_.key)
+    assert(keys.nonEmpty)
+    assert(!new java.io.File(s"$dir/cache/v1/_done").exists(),
+      "a tick must not write a done-set table beside the key dirs")
+    val fresh = new graft.ops.Cache(spark, s"$dir/cache")
+    keys.foreach(k => assert(fresh.probe(k), s"$k must probe-hit from disk alone"))
+  }
+
   test("bundle zips the artifacts of a completed request") {
     val e = newEngine()
     e.submit(request)

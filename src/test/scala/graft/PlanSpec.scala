@@ -106,20 +106,6 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
-  test("cache miss detection is one anti-join (no driver-side key probing)") {
-    import java.nio.file.Files
-    import org.apache.spark.sql.execution.joins.BaseJoinExec
-    import spark.implicits._
-    val c = new graft.ops.Cache(spark, Files.createTempDirectory("graft_plan").toString)
-    c.getOrCompute("seed")(Seq((1, "a")).toDF("id", "v"))
-    val nodes = flatten(c.misses(Seq("seed", "todo").toDF("key"))
-      .queryExecution.executedPlan)
-    assert(nodes.exists {
-      case j: BaseJoinExec => j.joinType.toString == "LeftAnti"
-      case _ => false
-    }, "misses must plan as a LEFT ANTI join")
-  }
-
   test("line dedup: first-owner window partitions by line content, never global") {
     import org.apache.spark.sql.execution.window.WindowExec
     val nodes = flatten(SparkEntry.queries("dedup_lines")(spark, d)
