@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.model._
-import graft.ops.{Artifacts, Cache, StateTable}
+import graft.ops.{Artifacts, Cache, Fs, StateTable}
 import org.apache.spark.sql.functions._
 
 /** The engine facade — the reference's cron driver
@@ -112,11 +112,6 @@ final class Engine(val spark: SparkSession, workDir: String) {
       -2
     }
 
-  private def deleteTree(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p))
-      java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => java.nio.file.Files.delete(f))
-
   /** Batched artifact writer (round-13 verdict #3): ONE partitioned write
     * per artifact KIND for a whole same-schema group of completed
     * requests — 2 Spark jobs per group instead of 2 per request. The
@@ -196,7 +191,7 @@ final class Engine(val spark: SparkSession, workDir: String) {
           val pDst = java.nio.file.Paths.get(s"$outDir/$id/results")
           val cDst = java.nio.file.Paths.get(s"$outDir/$id/results_csv")
           java.nio.file.Files.createDirectories(pDst.getParent)
-          deleteTree(pDst); deleteTree(cDst)
+          Fs.deleteTree(pDst); Fs.deleteTree(cDst)
           java.nio.file.Files.move(pSrc, pDst)
           java.nio.file.Files.createFile(pDst.resolve("_SUCCESS"))
           java.nio.file.Files.move(cSrc, cDst)
@@ -210,7 +205,7 @@ final class Engine(val spark: SparkSession, workDir: String) {
           id -> -2
         }
       }
-      deleteTree(stagingP); deleteTree(stagingC)
+      Fs.deleteTree(stagingP); Fs.deleteTree(stagingC)
       res
     } catch { case scala.util.control.NonFatal(_) =>
       // plan/analysis/write failure anywhere in the batch: retry each

@@ -99,9 +99,10 @@ final class Pipeline(
     msrItems ++ rasterItems
   }
 
-  /** Which items still need computing (probe-only when `dryRun` — the
-    * reference's shadow-execution mode, `queue/processing.py:85,213-215`):
-    * one artifact probe per item, as the reference's J4 checks each item
+  /** Which items still need computing — this is the dry run: it counts
+    * the missing items and computes nothing, as the reference's dry-run
+    * mode does (`queue/processing.py:85,213-215`). One artifact probe per
+    * item, as the reference's J4 checks each item
     * (`queue/extract_check.py:104`). Per-request item counts are bounded
     * (selections × methods). */
   def misses(items: Seq[WorkItem]): Seq[WorkItem] =
@@ -109,9 +110,8 @@ final class Pipeline(
 
   /** Materialize one work item from the pixels/locations relations —
     * the in-engine replacement for the external worker fleets. */
-  def compute(item: WorkItem, pixels: DataFrame, locations: DataFrame,
-      dryRun: Boolean = false): DataFrame =
-    cache.getOrCompute(item.key, dryRun) {
+  def compute(item: WorkItem, pixels: DataFrame, locations: DataFrame): DataFrame =
+    cache.getOrCompute(item.key) {
       item.kind match {
         case "release" =>
           // A12 order (`queue/request_tools.py:362-383`): the selection's

@@ -1916,7 +1916,7 @@ object QueriesExt {
     // Spark-side false (or a short/dup qid list) hash-mismatches.
     // Ranking QUALITY stays covered by the IvfSpec recall gates
     // (recall@5 ≥ 0.6 at THIS 4-of-8-probe setting at sf0.001 AND
-    // sf0.01; DriveIvfProbe's curve shows probe fraction, not corpus
+    // sf0.01; DriveIvfProbe's curve (probe main since deleted) shows probe fraction, not corpus
     // size, governs recall). Same sketch-family pattern as
     // extract_percentile_sketch's bound gate (ops/Extracts.scala).
     //
@@ -6276,7 +6276,7 @@ object QueriesExt {
         // smallCheckpointLazy, not a raw localCheckpoint: the Ckpt helper
         // REGISTERS the |bands|-row frame as a small checkpoint (the
         // tightened broadcast audit exempts by registered RDD id, not by
-        // marker column) and stays job-free under planOnly dry runs
+        // marker column) and stays job-free under Ckpt.planOnly
         val bagg = banded.groupBy("band")
           .agg(count(lit(1)).as("bn"), sum(col("pass")).cast("long").as("bg"))
           .smallCheckpointLazy()

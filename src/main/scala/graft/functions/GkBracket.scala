@@ -421,8 +421,14 @@ final class GkSketch(val relativeError: Double) {
       i += 1
     }
     // each bound is individually valid (bestLo ≤ d_(kLo) ≤ d_(kHi) ≤
-    // bestHi), so ordering holds by construction
-    (bestLo, bestHi)
+    // bestHi), so ordering holds by construction — over EXACT deviations.
+    // The rank bounds were taken at fl(med ± t), up to half an ulp of
+    // |med|+t away from med ± t, while the guided pass tests the COMPUTED
+    // fl(|v − med|). Widening each side by one ulp of |med|+t covers that
+    // (rounding is monotone: v ≤ fl(med+t) ⇒ fl(v − med) ≤ fl(t + ulp)).
+    // One ulp of t alone falls short when t < |med|.
+    (math.max(0.0, bestLo - Math.ulp(math.abs(med) + bestLo)),
+      bestHi + Math.ulp(math.abs(med) + bestHi))
   }
 
   /** Max per-tuple uncertainty g+Δ over the compressed summary (flushes

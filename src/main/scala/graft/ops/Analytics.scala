@@ -99,7 +99,7 @@ object Analytics {
     * carries the edges, so the band count is derived from the data's own
     * count at runtime (rows-per-band budget), never a hard-coded
     * band-count constant, and construction stays job-free (no driver
-    * count — the dry-run contract). */
+    * count). */
   private def kBands(nCol: String, target: Long, maxBands: Int): Column =
     expr(s"least(CAST($maxBands AS BIGINT), " +
       s"greatest(1L, ($nCol + ${target - 1}L) div ${target}L))")

@@ -22,14 +22,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 final class Cache(spark: SparkSession, root: String, version: String = "v1") {
   private def dir(key: String) = s"$root/$version/$key"
 
-  /** Catalog table names must be scoped to THIS cache instance (root +
-    * version) — the session catalog is global, and an unscoped name would
-    * let one cache's bucketed tables satisfy another cache's probe. */
-  private val rootTag =
-    HashKey.sha1Hex(root).take(8)
-  private def bucketTable(key: String) = s"graft_cache_${rootTag}_${version}_$key"
-
-  private def probePlain(key: String): Boolean = {
+  /** Q3 completion probe, the cache's one done predicate: key dir
+    * present with `_SUCCESS` and a non-empty parquet file. */
+  def probe(key: String): Boolean = {
     val p = Paths.get(dir(key))
     Files.exists(p.resolve("_SUCCESS")) && {
       val files = p.toFile.listFiles()
@@ -37,26 +32,14 @@ final class Cache(spark: SparkSession, root: String, version: String = "v1") {
     }
   }
 
-  /** Q3 completion probe: present and non-empty — either layout (plain
-    * key dir or bucketed catalog table). */
-  def probe(key: String): Boolean =
-    probePlain(key) || spark.catalog.tableExists(bucketTable(key))
-
-  /** Memoized compute in the plain layout (key dir + `_SUCCESS`, which
-    * lives on the filesystem and so survives a process restart): return
-    * the cached frame if the key dir passes the probe, else compute,
-    * persist, and read back. Reading back (rather than returning `compute`
-    * directly) means downstream plans see a plain Parquet scan — prunable
-    * and reusable. */
-  def getOrCompute(key: String, dryRun: Boolean = false)(compute: => DataFrame): DataFrame = {
-    if (probePlain(key)) spark.read.parquet(dir(key))
-    else if (dryRun) Ckpt.planOnly(compute) // probe-only: no checkpoint
-    // materialization — under AQE even a lazy localCheckpoint would run
-    // every upstream stage during frame CONSTRUCTION (see Ckpt.planOnly)
-    else {
-      compute.write.mode("overwrite").parquet(dir(key))
-      spark.read.parquet(dir(key))
-    }
+  /** Memoized compute (the key dir and its `_SUCCESS` live on the
+    * filesystem and so survive a process restart): return the cached
+    * frame if the key passes [[probe]], else compute, persist, and read
+    * back. Reading back (rather than returning `compute` directly) means
+    * downstream plans see a plain Parquet scan — prunable and reusable. */
+  def getOrCompute(key: String)(compute: => DataFrame): DataFrame = {
+    if (!probe(key)) compute.write.mode("overwrite").parquet(dir(key))
+    spark.read.parquet(dir(key))
   }
 
   /** Fill MANY missing keys with ONE Spark job (the batch side of
@@ -73,28 +56,9 @@ final class Cache(spark: SparkSession, root: String, version: String = "v1") {
     * separate data column. Returns the filled keys. */
   def fillManyPartitioned(df: DataFrame, partCol: String,
       keyFor: String => String): Seq[String] = {
-    // reap staging dirs orphaned by crashed fills (UUID-named, so a retry
-    // never reuses them) — but only stale ones, never a concurrent call's
-    // active staging. Staleness checks the NEWEST mtime in the whole
-    // subtree, not the root's: a long distributed write touches files
-    // deep under _temporary/ without refreshing the staging root, so a
-    // root-mtime check would reap an ACTIVE >1h write mid-job (the walk
-    // only runs for dirs whose root already looks stale).
-    val cutoff = System.currentTimeMillis() - 60 * 60 * 1000L
-    // never FOLLOW symlinks (cycle → StackOverflowError); the link's own
-    // mtime still counts via `f.lastModified` at the parent level
-    def newestMtime(f: java.io.File): Long = {
-      val kids = Option(f.listFiles()).getOrElse(Array.empty)
-        .filterNot(k => Files.isSymbolicLink(k.toPath))
-      (f.lastModified +: kids.map(newestMtime).toSeq).max
-    }
-    Option(Paths.get(dir("")).toFile.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("_staging_")
-        && f.lastModified < cutoff && newestMtime(f) < cutoff)
-      .foreach { d =>
-        Files.walk(d.toPath).sorted(java.util.Comparator.reverseOrder())
-          .forEach(f => Files.delete(f))
-      }
+    // reap staging dirs orphaned by crashed fills — only stale ones,
+    // never a concurrent call's active staging
+    Fs.reapStale(Paths.get(dir("")), "_staging_")
     // per-call staging dir: two concurrent fills against one cache must
     // not interleave partition dirs in a shared staging root (the promote
     // loop would move a sibling's half-written output)
@@ -113,8 +77,7 @@ final class Cache(spark: SparkSession, root: String, version: String = "v1") {
       key
     }.toSeq
     // clear the staging root (only the top-level _SUCCESS remains)
-    Option(staging.toFile.listFiles()).getOrElse(Array.empty).foreach(_.delete())
-    Files.deleteIfExists(staging)
+    Fs.deleteTree(staging)
     keys
   }
 
@@ -130,26 +93,6 @@ final class Cache(spark: SparkSession, root: String, version: String = "v1") {
     spark.read.parquet(keys.map(dir): _*)
   }
 
-  /** Bucketed materialization (SURVEY.md §4 physical notes): persist a
-    * frame bucketed by `bucketCol`, so joins between tables bucketed the
-    * same way need no exchange (the fine-grid [[Tables.pixelsBucketed]] /
-    * [[Tables.zoneMapBucketed]] pair). Requires a session catalog; with
-    * the default in-memory catalog the entry is forgotten when the process
-    * exits, so the request path uses the plain layout of [[getOrCompute]].
-    */
-  def getOrComputeBucketed(key: String, buckets: Int = 32,
-      bucketCol: String = "asdf_id")(compute: => DataFrame): DataFrame = {
-    val table = bucketTable(key)
-    if (!spark.catalog.tableExists(table)) {
-      compute.write
-        .bucketBy(buckets, bucketCol)
-        .sortBy(bucketCol)
-        .option("path", dir(s"bucketed_$key"))
-        .saveAsTable(table)
-    }
-    spark.table(table)
-  }
-
   // _SUCCESS first: a crash part-way must never leave the marker over torn files
   private def deleteKeyDir(d: Path): Unit =
     if (Files.exists(d)) {
@@ -158,11 +101,7 @@ final class Cache(spark: SparkSession, root: String, version: String = "v1") {
       Files.delete(d)
     }
 
-  def invalidate(key: String): Unit = {
-    Seq(Paths.get(dir(key)), Paths.get(dir(s"bucketed_$key"))).foreach(deleteKeyDir)
-    if (spark.catalog.tableExists(bucketTable(key)))
-      spark.sql(s"DROP TABLE `${bucketTable(key)}`")
-  }
+  def invalidate(key: String): Unit = deleteKeyDir(Paths.get(dir(key)))
 }
 
 object Cache {

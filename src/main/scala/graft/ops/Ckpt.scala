@@ -32,21 +32,22 @@ import org.apache.spark.storage.StorageLevel
   */
 object Ckpt {
 
-  /** Plan-only (dry-run) suppression. Even a LAZY `localCheckpoint` is not
+  /** Plan-only suppression. Even a LAZY `localCheckpoint` is not
     * job-free under AQE: constructing the LogicalRDD calls
     * `physicalPlan.execute()`, and an AdaptiveSparkPlanExec materializes
     * every upstream shuffle stage right there — measured 18 jobs just
     * BUILDING the guided mad frame. A checkpoint is purely a
     * materialization-reuse optimization (semantics identical without it),
-    * so probe-only constructions (Cache.getOrCompute(dryRun = true)) run
-    * inside [[planOnly]], under which every checkpoint helper is the
-    * identity and frame construction launches zero jobs. */
+    * so code that only inspects plans (PlanSpec, ExtractsSpec, a
+    * per-query job budget) builds frames inside [[planOnly]], under which
+    * every checkpoint helper is the identity and frame construction
+    * launches zero jobs. */
   private val suppress: ThreadLocal[java.lang.Boolean] =
     ThreadLocal.withInitial(() => java.lang.Boolean.FALSE)
 
   /** Run `body` with all checkpoint helpers suppressed (plan building
     * only — the returned frames recompute shared subtrees if executed,
-    * which a dry-run never does). */
+    * which a plan inspection never does). */
   def planOnly[A](body: => A): A = {
     val prev = suppress.get()
     suppress.set(java.lang.Boolean.TRUE)

@@ -164,10 +164,10 @@ object Extracts {
         // MEMORY_AND_DISK — a corpus-sized block set in the unified pool
         // strangles downstream execution under memory pressure (see
         // [[Ckpt]]); the ContextCleaner frees the blocks once the frame
-        // is unreachable. LAZY, not eager: this constructor is reachable
-        // from Cache.getOrCompute(dryRun = true), whose contract is
-        // probe-only — an eager checkpoint here would scan the corpus
-        // during a shadow probe.
+        // is unreachable. LAZY, not eager: an eager checkpoint here would
+        // scan the corpus while the frame is only being BUILT (by a
+        // caller that inspects the plan or never executes it); lazy
+        // defers the scan to the first consumer.
         val medC = "__graft_mad_med"
         val pv = pixels.select(z, v)
           .diskCheckpointLazy()
@@ -312,8 +312,8 @@ object Extracts {
       }: _*)
       // |zones|-row frame referenced three times (window join, n attach,
       // zone-retention join): LAZY checkpoint so one sketch pass serves
-      // all of them — via the Ckpt helper so a dry-run (planOnly)
-      // construction stays job-free even under AQE
+      // all of them — via the Ckpt helper so a plan-only
+      // (Ckpt.planOnly) construction stays job-free even under AQE
       .smallCheckpointLazy()
     guidedSelect(pixels, bounds, zone, v, ps)
   }

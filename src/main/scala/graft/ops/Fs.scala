@@ -1,0 +1,39 @@
+package graft.ops
+
+import java.nio.file.{Files, Path}
+
+/** Filesystem helpers shared by the cache, the state table and the
+  * engine's artifact writer. */
+private[graft] object Fs {
+  /** Recursive delete, children first; a no-op on a missing path.
+    * `Files.walk` does not follow symlinks, so a link is removed, never
+    * its target. */
+  def deleteTree(p: Path): Unit =
+    if (Files.exists(p))
+      Files.walk(p).sorted(java.util.Comparator.reverseOrder())
+        .forEach(f => Files.delete(f))
+
+  /** Reap the staging dirs under `under` whose names start with `prefix`
+    * and that a crashed write abandoned: per-attempt-unique names mean no
+    * retry ever reuses them. Only stale dirs go, never an in-flight
+    * write's. Staleness checks the NEWEST mtime in the whole subtree, not
+    * the root's: a long distributed write touches files deep under
+    * _temporary/ without refreshing the staging root, so a root-mtime
+    * check would reap an ACTIVE >1h write mid-job (the walk only runs for
+    * dirs whose root already looks stale). */
+  def reapStale(under: Path, prefix: String): Unit = {
+    val cutoff = System.currentTimeMillis() - 60 * 60 * 1000L
+    // never FOLLOW symlinks: a cycle (dir symlink pointing at an
+    // ancestor) would recurse to StackOverflowError; the link's own
+    // mtime still counts via `f.lastModified` at the parent level
+    def newest(f: java.io.File): Long = {
+      val kids = Option(f.listFiles()).getOrElse(Array.empty)
+        .filterNot(k => Files.isSymbolicLink(k.toPath))
+      (f.lastModified +: kids.map(newest).toSeq).max
+    }
+    Option(under.toFile.listFiles()).getOrElse(Array.empty)
+      .filter(f => f.isDirectory && f.getName.startsWith(prefix)
+        && f.lastModified < cutoff && newest(f) < cutoff)
+      .foreach(f => deleteTree(f.toPath))
+  }
+}

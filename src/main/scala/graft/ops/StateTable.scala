@@ -178,8 +178,8 @@ final class StateTable(spark: SparkSession, dir: String, keys: Seq[String],
     // folded, then consume every batch still on disk (a late appendDelta
     // from a lease stealer lands AFTER this listing and simply stays
     // live — "not listed" = "not folded" is the safe direction)
-    reapStaleTmpIn(deltaRoot)
-    foldedNames.foreach(n => deleteTree(deltaRoot.resolve(n)))
+    Fs.reapStale(deltaRoot, ".tmp")
+    foldedNames.foreach(n => Fs.deleteTree(deltaRoot.resolve(n)))
     val consumed = Option(deltaRoot.toFile.listFiles()).getOrElse(Array.empty)
       .filter(f => f.isDirectory && f.getName.startsWith("d"))
       .map(_.getName).sorted
@@ -209,13 +209,13 @@ final class StateTable(spark: SparkSession, dir: String, keys: Seq[String],
       // final narrowing before the swap (the residue is the swap itself)
       if (currentVersion.exists(_ >= next)) {
         Files.deleteIfExists(tmp)
-        deleteTree(root.resolve(dirName)) // our own unreferenced garbage
+        Fs.deleteTree(root.resolve(dirName)) // our own unreferenced garbage
         contention(s"pointer advanced to v$next during commit — aborting pointer swap")
       }
       Files.move(tmp, pointer, StandardCopyOption.ATOMIC_MOVE,
         StandardCopyOption.REPLACE_EXISTING)
       next
-    } finally deleteTree(stage) // no-op on success (already renamed away)
+    } finally Fs.deleteTree(stage) // no-op on success (already renamed away)
   }
 
   // ---- O(batch) incremental ingest (delta batches) -----------------------
@@ -304,11 +304,6 @@ final class StateTable(spark: SparkSession, dir: String, keys: Seq[String],
   // their deferred sweep (see [[consolidateArchive]])
   private val doomedMarker = archiveRoot.resolve("_doomed.txt")
 
-  private def deleteTree(p: java.nio.file.Path): Unit =
-    if (Files.exists(p))
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => Files.delete(f))
-
   private def doomedNames: Set[String] =
     if (Files.exists(doomedMarker))
       Files.readString(doomedMarker).split("\n").filter(_.nonEmpty).toSet
@@ -317,26 +312,9 @@ final class StateTable(spark: SparkSession, dir: String, keys: Seq[String],
   /** Reap `.tmp_*` write-staging dirs abandoned by crashed
     * compact/consolidate/append attempts: per-attempt-unique names mean
     * no retry ever overwrites them, so without this they accumulate
-    * forever (a consolidation tmp alone is a full archive copy). Same
-    * discipline as the Cache staging reaper — only subtrees whose NEWEST
-    * mtime is stale, never an in-flight write. */
-  private def reapStaleTmp(): Unit = reapStaleTmpIn(archiveRoot)
-
-  private def reapStaleTmpIn(under: java.nio.file.Path): Unit = {
-    val cutoff = System.currentTimeMillis() - 3600 * 1000L
-    // never FOLLOW symlinks: a cycle (dir symlink pointing at an
-    // ancestor) would recurse to StackOverflowError; the link's own
-    // mtime still counts via `f.lastModified` at the parent level
-    def newest(f: java.io.File): Long = {
-      val kids = Option(f.listFiles()).getOrElse(Array.empty)
-        .filterNot(k => Files.isSymbolicLink(k.toPath))
-      (f.lastModified +: kids.map(newest).toSeq).max
-    }
-    Option(under.toFile.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith(".tmp")
-        && f.lastModified < cutoff && newest(f) < cutoff)
-      .foreach(f => deleteTree(f.toPath))
-  }
+    * forever (a consolidation tmp alone is a full archive copy). Only
+    * stale subtrees go, never an in-flight write ([[Fs.reapStale]]). */
+  private def reapStaleTmp(): Unit = Fs.reapStale(archiveRoot, ".tmp")
 
   /** Archived (terminal-history) rows, if any — one append-only batch per
     * [[compact]] call, read back as ONE multi-path scan, deduped by key:
@@ -397,7 +375,7 @@ final class StateTable(spark: SparkSession, dir: String, keys: Seq[String],
   def consolidateArchive(maxBatches: Int = 16): Unit = withWriterLease {
     reapStaleTmp()
     // phase 2 of the PREVIOUS consolidation: sweep what it doomed
-    doomedNames.foreach(n => deleteTree(archiveRoot.resolve(n)))
+    doomedNames.foreach(n => Fs.deleteTree(archiveRoot.resolve(n)))
     if (Files.exists(doomedMarker)) Files.delete(doomedMarker)
     val batches = Option(archiveRoot.toFile.listFiles()).getOrElse(Array.empty)
       .filter(f => f.isDirectory && f.getName.startsWith("b")).sortBy(_.getName)
@@ -512,7 +490,7 @@ final class StateTable(spark: SparkSession, dir: String, keys: Seq[String],
     versionDirs.foreach { f =>
       val n = versionOf(f.getName)
       if ((n <= cur && !keepNums(n)) || (n == cur && f.getName != curName))
-        deleteTree(f.toPath)
+        Fs.deleteTree(f.toPath)
     }
   }
 }

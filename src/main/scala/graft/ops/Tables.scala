@@ -151,50 +151,4 @@ object Tables {
       | o_totalprice AS amount, o_orderpriority AS donor,
       | o_orderstatus AS status, l_linenumber
       | FROM lineitem JOIN orders ON l_orderkey = o_orderkey""".stripMargin.replace("\n", "")
-
-  /** Fine-grid regime (SCALE.md "Zonal extracts"): when the zone map
-    * outgrows broadcast (the global 0.05° grid is 25.9 M cells,
-    * `queue/request_tools.py:65`, × boundary count), the scale path is a
-    * BUCKETED zone map co-partitioned with a bucketed pixel table on the
-    * CELL key: both sides land in the extract cache's bucketed layout
-    * ([[Cache.getOrComputeBucketed]]), so the cell-grain join needs no
-    * exchange on either side — in particular the FACT side never shuffles
-    * — and the only exchange in a zonal extract is the final |zones|-row
-    * aggregation. Cell key ⇐ `l_partkey` (the locations grid key); the
-    * zone map derives zone + coverage per cell from `part`.
-    *
-    * Paid once per (corpus version, grid): the bucketed write is a full
-    * shuffle-and-sort of the raster, amortized over every boundary ×
-    * method extract that reads it afterwards. The bucketed tables live in
-    * the session catalog, so they do not survive a process restart.
-    * ScaleSpec pins the no-fact-side-exchange plan with broadcast
-    * disabled. */
-  def pixelsBucketed(s: SparkSession, d: String, cache: Cache,
-      buckets: Int = 32): DataFrame =
-    // bucket count is part of the cache key: getOrComputeBucketed returns
-    // whatever layout exists under the key, so a different-bucket request
-    // must resolve to a DIFFERENT table or the co-partitioning contract
-    // with the sibling zone map silently breaks
-    cache.getOrComputeBucketed(s"pixels_by_cell_b$buckets", buckets, "cell_id")(
-      lineitem(s, d).select(
-        col("l_partkey").as("cell_id"),
-        col("l_extendedprice").as("value"),
-        col("l_quantity").as("weight")))
-
-  /** The fine-grid zone map `(cell_id, asdf_id, coverage)` bucketed on the
-    * same cell key/bucket count as [[pixelsBucketed]] — co-partitioned by
-    * construction. Coverage models the reference's pixel-in-polygon
-    * fraction (1.0 for interior cells; the split-cell fractions come from
-    * the rasterization step out of scope here). */
-  def zoneMapBucketed(s: SparkSession, d: String, cache: Cache,
-      zones: Int = 25, buckets: Int = 32): DataFrame =
-    // zones and buckets both determine content/layout, so both are in the
-    // key — a 50-zone request after a 25-zone fill must not read back the
-    // 25-zone map
-    cache.getOrComputeBucketed(s"zonemap_by_cell_z${zones}_b$buckets",
-        buckets, "cell_id")(
-      part(s, d).select(
-        col("p_partkey").as("cell_id"),
-        (col("p_partkey") % zones).as("asdf_id"),
-        lit(1.0).as("coverage")))
 }

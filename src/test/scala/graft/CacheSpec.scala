@@ -26,12 +26,6 @@ class CacheSpec extends AnyFunSuite {
     assert(computes == 1)
   }
 
-  test("dry run probes without materializing (queue/processing.py:85)") {
-    val c = newCache()
-    c.getOrCompute("k", dryRun = true)(Seq((1, "a")).toDF("id", "v")).count()
-    assert(!c.probe("k"))
-  }
-
   test("fillManyPartitioned fills N keys with ONE Spark job (IVM batch fill)") {
     val c = newCache()
     val df = Seq((1, "a", "d1"), (2, "b", "d1"), (3, "c", "d2"), (4, "d", "d3"))

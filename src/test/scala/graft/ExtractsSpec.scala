@@ -240,12 +240,11 @@ class ExtractsSpec extends AnyFunSuite {
     }
   }
 
-  test("constructing the mad extract launches no job (dry-run contract)") {
-    // Cache.getOrCompute(dryRun = true) forces the compute block to BUILD
-    // the frame but must stay probe-only — it runs constructions inside
-    // Ckpt.planOnly, because under AQE even a LAZY localCheckpoint
-    // materializes every upstream stage at construction time (measured:
-    // 18 jobs just building the guided mad frame without the guard).
+  test("constructing the mad extract launches no job under Ckpt.planOnly") {
+    // Plan inspection builds frames inside Ckpt.planOnly and must launch
+    // no job: under AQE even a LAZY localCheckpoint materializes every
+    // upstream stage at construction time (measured: 18 jobs just
+    // building the guided mad frame without the guard).
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val l = new SparkListener {

@@ -249,6 +249,33 @@ class GkBracketSpec extends AnyFunSuite {
     }
   }
 
+  test("devBracket's window holds the COMPUTED deviations at their ranks " +
+      "on ulp-boundary data") {
+    // the guided pass compares fl(|v − med|) against the window, but the
+    // rank bounds are taken at fl(med ± t). Found by a seeded search over
+    // ulp-adjacent clusters at med − t, med and med + t (t < med): the
+    // unwidened window misses the kHi deviation by one ulp, and widening
+    // it by one ulp of the bound still misses.
+    val data = Array(
+      1.33738224622496E7, 1.33738224622496E7, 1.33738224622496E7,
+      1.33738224622496E7, 1.3373822462249601E7, 1.3373822462249601E7,
+      1.3373822462249603E7, 1.3373822462249603E7, 1.3373822462249605E7,
+      1.3373822462249605E7, 2.6629333945412945E7, 3.9884845428576276E7,
+      3.9884845428576276E7, 3.988484542857628E7, 3.988484542857629E7,
+      3.988484542857629E7, 3.988484542857629E7, 3.988484542857629E7,
+      3.98848454285763E7, 3.98848454285763E7, 3.98848454285763E7)
+    val sk = new GkSketch(0.1) // n = 21 > 2·accuracy: the narrow path
+    data.foreach(sk.insert)
+    val med = data.sorted.apply(data.length / 2) // odd n: exact median
+    val (lo, hi) = sk.devBracket(med)
+    val devs = data.map(x => math.abs(x - med)).sorted
+    val kLo = (data.length + 1) / 2
+    val kHi = (data.length + 2) / 2
+    assert(lo <= devs(kLo - 1) && hi >= devs(kHi - 1),
+      f"window [$lo%.17g, $hi%.17g] misses computed deviation ranks " +
+        f"$kLo/$kHi = ${devs(kLo - 1)}%.17g/${devs(kHi - 1)}%.17g")
+  }
+
   test("guidedMedianMad equals buffering median/mad exactly on fixture data") {
     val d = "/root/testdata/sf0.001"
     val px = graft.ops.Tables.pixels(spark, d)

@@ -72,7 +72,7 @@ class IvfSpec extends AnyFunSuite {
     // only at larger corpus sizes would pass sf0.001 and ship.
     // Set SPARK_GRAFT_IVF_SF=/root/testdata/sf0.1 to run the same gate at
     // bench scale (float-sensitive-op rule from the verify recipe).
-    // Measured curve (DriveIvfProbe, sf0.01 + sf0.1): 2/8 probes sits at
+    // Measured curve (DriveIvfProbe, probe main since deleted; sf0.01 + sf0.1): 2/8 probes sits at
     // 0.40-0.57 recall while 4/8 holds 0.70-0.86 — probe FRACTION is the
     // dial, so the registered query and this gate both run nprobe=4/k=8.
     val dBig = sys.env.getOrElse("SPARK_GRAFT_IVF_SF", "/root/testdata/sf0.01")

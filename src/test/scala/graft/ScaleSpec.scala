@@ -3,10 +3,9 @@ package graft
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.ops.{Cache, Extracts, Skew}
+import graft.ops.{Extracts, Skew}
 
-/** Scale-path operators: salted aggregation for hot zones and bucketed
-  * cache layout for shuffle-free merges. */
+/** Scale-path operators: salted aggregation for hot zones. */
 class ScaleSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -108,94 +107,6 @@ class ScaleSpec extends AnyFunSuite {
       s"expected one key exchange:\n$plan")
     val aggs = "(?i)aggregate".r.findAllIn(plan).size
     assert(aggs >= 2, s"expected partial+final aggregate pair:\n$plan")
-  }
-
-  test("fine-grid zone map: bucketed pixels ⋈ zone map joins with no " +
-    "fact-side exchange; only the zonal aggregation shuffles") {
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // fine-grid: map too big to broadcast
-    try {
-      val d = "/root/testdata/sf0.001"
-      val c = new Cache(spark, Files.createTempDirectory("graft_zmb").toString)
-      val pxb = graft.ops.Tables.pixelsBucketed(spark, d, c, buckets = 4)
-      val zm = graft.ops.Tables.zoneMapBucketed(spark, d, c, buckets = 4)
-      val ext = pxb.join(zm, Seq("cell_id"))
-        .groupBy("asdf_id")
-        .agg(sum(col("value") * col("coverage")).as("sum_v"),
-          count(lit(1)).as("n"))
-      val plan = ext.queryExecution.executedPlan.toString
-      // exactly ONE hash exchange: the |zones|-row aggregation. The
-      // cell-grain join must ride the bucketed layout — zero exchanges
-      // under it, i.e. the fact table never shuffles for the zone join.
-      val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).length
-      assert(exchanges == 1,
-        s"expected only the zonal agg exchange, got $exchanges:\n$plan")
-      // values must equal the plain (unbucketed) plan's
-      val plainPx = graft.ops.Tables.lineitem(spark, d).select(
-        col("l_partkey").as("cell_id"),
-        col("l_extendedprice").as("value"))
-      val plainZm = graft.ops.Tables.part(spark, d).select(
-        col("p_partkey").as("cell_id"), (col("p_partkey") % 25).as("asdf_id"))
-      val expect = plainPx.join(plainZm, Seq("cell_id"))
-        .groupBy("asdf_id").agg(sum(col("value")).as("sum_v"), count(lit(1)).as("n"))
-        .orderBy("asdf_id")
-        .collect().map(r => (r.getLong(0), math.round(r.getDouble(1) * 100), r.getLong(2)))
-      val got = ext.orderBy("asdf_id")
-        .collect().map(r => (r.getLong(0), math.round(r.getDouble(1) * 100), r.getLong(2)))
-      assert(got.sameElements(expect), "bucketed zonal extract values diverge")
-
-      // a DIFFERENT zones parameter must not read back the 25-zone fill:
-      // the cache key carries (zones, buckets), so this materializes its
-      // own table with 50 distinct zone ids
-      val zm50 = graft.ops.Tables.zoneMapBucketed(spark, d, c, zones = 50,
-        buckets = 4)
-      assert(zm50.select("asdf_id").distinct().count() == 50,
-        "zones=50 request served the cached 25-zone map")
-    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-  }
-
-  test("K=8 bucketed extract merge: the whole wide fold has ZERO exchanges") {
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force the issue
-    try {
-      val c = new Cache(spark, Files.createTempDirectory("graft_mcache").toString)
-      val methods = Seq("sum", "mean", "count", "min", "max",
-        "weighted_mean", "weighted_sum", "weighted_count")
-      val extracts = methods.map { m =>
-        c.getOrComputeBucketed(s"m_$m", buckets = 4)(
-          Extracts.extract(px, m)
-            .withColumnRenamed(m, s"udel_precip_none_$m"))
-      }
-      // the base (boundary attribute) frame rides the same bucketed cache:
-      // a request's merge then needs NO exchange at all, however many
-      // selections it carries (SURVEY §4; reference merges N extracts per
-      // request, queue/request_tools.py:617-708)
-      val base = c.getOrComputeBucketed("base_attrs", buckets = 4)(
-        px.select("asdf_id").distinct()
-          .withColumn("zone_name", concat(lit("z"), col("asdf_id"))))
-      val wide = graft.ops.Merge.wide(base, extracts)
-      val plan = wide.queryExecution.executedPlan.toString
-      val exchanges = "Exchange".r.findAllIn(plan).length
-      assert(exchanges == 0, s"expected exchange-free K=8 fold, got $exchanges:\n$plan")
-      val rows = wide.collect()
-      assert(rows.length == 2 && wide.columns.length == 10)
-      // every extract column landed non-null for both zones
-      assert(rows.forall(r => (0 until r.length).forall(!r.isNullAt(_))))
-    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-  }
-
-  test("bucketed cache: joining two cached extracts needs no shuffle") {
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force the issue
-    try {
-      val c = new Cache(spark, Files.createTempDirectory("graft_bcache").toString)
-      val e1 = c.getOrComputeBucketed("k1", buckets = 4)(
-        Extracts.extract(px, "sum"))
-      val e2 = c.getOrComputeBucketed("k2", buckets = 4)(
-        Extracts.extract(px, "mean"))
-      val joined = e1.join(e2, "asdf_id")
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange hashpartitioning"),
-        s"bucketed join must not shuffle:\n$plan")
-      assert(joined.count() == 2)
-    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 
   test("containment: a corpus-wide hot prefix fabricates no pairs; constructed " +
