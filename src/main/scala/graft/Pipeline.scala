@@ -8,7 +8,7 @@ import graft.ops.HashKey._
 
 /** The request lifecycle (SURVEY.md §3.1), rebuilt as one Spark job DAG:
   * request → check (normalize filters → descriptor hash → cache probe) →
-  * compute missing extracts (memoized) → wide merge → artifact frames.
+  * compute missing extracts (memoized) → wide merge into a cache entry.
   *
   * The reference splits this across cron passes and external worker fleets
   * (`queue/processing.py:137-216`); here the "workers" are the extract/msr
@@ -147,8 +147,9 @@ final class Pipeline(
 
   /** build_output (`queue/request_tools.py:516-613`): compute/reuse every
     * extract, rename through the [[Naming]] grammar, wide-merge onto the
-    * boundary attribute frame, reorder. Returns the merged result plus the
-    * request echo (S6 analog).
+    * boundary attribute frame, reorder. Returns the location of the
+    * merged result's cache entry (filled, so the result is on disk) plus
+    * the request echo (S6 analog).
     *
     * The MERGED result is itself content-addressed (round-14): the key is
     * the ordered item-key list (each already content-addresses boundary ×
@@ -163,7 +164,7 @@ final class Pipeline(
     * a version bump, exactly like the reference
     * (`queue/extract_check.py:92-98`). */
   def buildOutput(req: Request, base: DataFrame, pixels: DataFrame,
-      locations: DataFrame): (DataFrame, String) = {
+      locations: DataFrame): (String, String) = {
     val items = checkRequest(req)
     // item order is part of the key — it determines output column order
     val mergeKey = keyOf(JObj(Seq(
@@ -202,39 +203,37 @@ final class Pipeline(
     // byte-golden contract rides on it (multi-part parquet read-back
     // returns partitions in file order, not write order). Same
     // single-file assumption Artifacts.writeCsv already makes.
-    val merged = cache.getOrCompute(s"merge_$mergeKey")(mergedFresh.coalesce(1))
+    val entry = cache.fill(s"merge_$mergeKey")(mergedFresh.coalesce(1))
     val echo = render(toJVal(Map(
       "id" -> req.id,
       "boundary" -> req.boundary.name,
       "datasets" -> (req.release_data.map(_.dataset) ++ req.raster_data.map(_.name)))))
-    (merged, echo)
+    (entry, echo)
   }
 
   /** One cron tick (§3.1): drain the queue head in priority order and
     * process each request end-to-end. `queue` is the request state table;
     * only the (small) queue head is collected. Returns (request id, final
-    * status, result): 1 complete, -2 error — the reference's error branch
-    * marks failed requests -2 rather than aborting the batch
-    * (`queue/processing.py:164-167,188-194`).
-    *
-    * Status 1 means PLANNING succeeded; the returned frame is lazy, so the
-    * caller must execute/persist it and demote to -2 on runtime failure —
-    * [[Engine.tick]]'s artifact write does exactly that. */
+    * status, merged result's cache entry): 1 complete, -2 error — the
+    * reference's error branch marks failed requests -2 rather than
+    * aborting the batch (`queue/processing.py:164-167,188-194`). The merge
+    * fill is eager, so status 1 means the merged result is on disk at the
+    * returned location; a -2 row's location is empty. */
   def tick(queue: Seq[Request], base: DataFrame, pixels: DataFrame,
-      locations: DataFrame): Seq[(String, Int, DataFrame)] = {
+      locations: DataFrame): Seq[(String, Int, String)] = {
     val ordered = queue
       .filter(r => r.status == -1 || r.status == 0)
       .sortBy(r => (-r.priority, r.stage.find(_.name == "submit").map(_.time).getOrElse(0L)))
     ordered.map { req =>
       val valid = req.boundary != null && req.boundary.name.nonEmpty &&
         (req.release_data.nonEmpty || req.raster_data.nonEmpty)
-      if (!valid) (req.id, -2, spark.emptyDataFrame)
+      if (!valid) (req.id, -2, "")
       else try {
         (req.id, 1, buildOutput(req, base, pixels, locations)._1)
       } catch {
         case scala.util.control.NonFatal(e) =>
           Pipeline.logFailure(req.id, e)
-          (req.id, -2, spark.emptyDataFrame)
+          (req.id, -2, "")
       }
     }
   }

@@ -18,6 +18,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * artifact tree is the cache's only record: there is no separate index
   * of done keys to keep in step with it, so miss detection is a per-key
   * probe (the reference's J4 likewise checks each item's artifact).
+  * `_`-prefixed entries inside a key dir belong to that entry (the merged
+  * result's CSV rendering, `_csv/`): Spark's parquet reads and [[probe]]
+  * skip them, and refilling or invalidating the key removes them with it.
   */
 final class Cache(spark: SparkSession, root: String, version: String = "v1") {
   private def dir(key: String) = s"$root/$version/$key"
@@ -32,15 +35,19 @@ final class Cache(spark: SparkSession, root: String, version: String = "v1") {
     }
   }
 
-  /** Memoized compute (the key dir and its `_SUCCESS` live on the
-    * filesystem and so survive a process restart): return the cached
-    * frame if the key passes [[probe]], else compute, persist, and read
-    * back. Reading back (rather than returning `compute` directly) means
-    * downstream plans see a plain Parquet scan — prunable and reusable. */
-  def getOrCompute(key: String)(compute: => DataFrame): DataFrame = {
+  /** Fill `key` from `compute` unless it passes [[probe]] (the key dir
+    * and its `_SUCCESS` live on the filesystem and so survive a process
+    * restart). Returns the key's dir, which then holds the result. */
+  def fill(key: String)(compute: => DataFrame): String = {
     if (!probe(key)) compute.write.mode("overwrite").parquet(dir(key))
-    spark.read.parquet(dir(key))
+    dir(key)
   }
+
+  /** Memoized compute: [[fill]], then read back. Reading back (rather
+    * than returning `compute` directly) means downstream plans see a
+    * plain Parquet scan — prunable and reusable. */
+  def getOrCompute(key: String)(compute: => DataFrame): DataFrame =
+    spark.read.parquet(fill(key)(compute))
 
   /** Fill MANY missing keys with ONE Spark job (the batch side of
     * incremental view maintenance): write `df` partitioned by `partCol`
@@ -97,8 +104,7 @@ final class Cache(spark: SparkSession, root: String, version: String = "v1") {
   private def deleteKeyDir(d: Path): Unit =
     if (Files.exists(d)) {
       Files.deleteIfExists(d.resolve("_SUCCESS"))
-      d.toFile.listFiles().foreach(_.delete())
-      Files.delete(d)
+      Fs.deleteTree(d)
     }
 
   def invalidate(key: String): Unit = deleteKeyDir(Paths.get(dir(key)))

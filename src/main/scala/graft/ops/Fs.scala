@@ -3,7 +3,7 @@ package graft.ops
 import java.nio.file.{Files, Path}
 
 /** Filesystem helpers shared by the cache, the state table and the
-  * engine's artifact writer. */
+  * artifact copies. */
 private[graft] object Fs {
   /** Recursive delete, children first; a no-op on a missing path.
     * `Files.walk` does not follow symlinks, so a link is removed, never

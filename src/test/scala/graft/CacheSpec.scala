@@ -89,6 +89,18 @@ class CacheSpec extends AnyFunSuite {
     assert(!c.probe("k"))
   }
 
+  test("invalidate removes a key dir holding a non-empty subdirectory") {
+    val root = Files.createTempDirectory("graft_cache").toString
+    val c = new Cache(spark, root)
+    c.getOrCompute("k")(Seq((1, "a")).toDF("id", "v"))
+    val sub = java.nio.file.Paths.get(root, "v1", "k", "_csv")
+    Files.createDirectories(sub)
+    Files.writeString(sub.resolve("part-00000.csv"), "id,v\n1,a\n")
+    c.invalidate("k")
+    assert(!c.probe("k"))
+    assert(!Files.exists(sub.getParent), "the key dir must be gone")
+  }
+
   test("version bump invalidates (version-based invalidation §4)") {
     val root = Files.createTempDirectory("graft_cache").toString
     val v1 = new Cache(spark, root, "v1")

@@ -31,9 +31,11 @@ import graft.model._
   *
   *  - **Processing floor** (default 200 → 2000 real requests, one shared
   *    selection): the full end-to-end path — extract (cache-hit after
-  *    the first), wide merge, results parquet + CSV + echo JSON per
-  *    request. Per-request cost across the decade must be flat: it is
-  *    3 artifact writes + a cache-hit merge, independent of backlog size.
+  *    the first), wide merge, and per request the artifacts: file copies
+  *    of the shared merge entry's parquet and of its CSV rendering
+  *    (written once), plus the echo JSON. Per-request cost across the
+  *    decade must be flat: it is a cache-hit merge + file copies,
+  *    independent of backlog size.
   *
   * Usage:
   *   Test/runMain graft.DriveQueueScale            # both legs, defaults

@@ -11,7 +11,7 @@ import graft.ops.Ckpt._
   * repeated_ngrams / bm25_top inline WITH and WITHOUT the shared-frame
   * sever and times both in ONE session, interleaved (severed,
   * unsevered, severed, …) so host noise lands on both variants — the
-  * same protocol as DriveGuidedLegs and DriveContainLegs (probe main
+  * same protocol as DriveGuidedLegs and DriveContainLegs (probe mains
   * since deleted).
   *
   * Usage: Test/runMain graft.DriveTfLegs [sfDir] [rounds]

@@ -43,48 +43,61 @@ class EngineSpec extends AnyFunSuite {
     assert(r.columns.exists(_.startsWith("udel__1998__mean")))
   }
 
-  test("batched artifact path: many same-schema completions in one tick " +
-    "produce artifacts identical to the per-request path") {
-    // round-13 verdict #3: a group of same-schema results goes through
-    // ONE partitioned write per artifact kind (writeGroup); a singleton
-    // goes through writeSingle. Run the same request body through both
-    // shapes and require identical parquet rows and identical CSV BYTES
-    // (the byte-golden contract the batch path must preserve, including
-    // row order via the pre-shuffle ordinal).
-    val eBatch = newEngine()
+  /** The bytes of the one CSV file in `dir`. */
+  def oneCsv(dir: java.io.File): String = {
+    assert(dir.isDirectory, s"$dir is missing")
+    val f = dir.listFiles().filter(_.getName.endsWith(".csv"))
+    assert(f.length == 1, s"expected ONE csv file in $dir, got ${f.length}")
+    new String(Files.readAllBytes(f.head.toPath))
+  }
+
+  /** Name -> bytes of the parquet part files in `dir`. */
+  def parquetParts(dir: java.io.File): Map[String, Seq[Byte]] =
+    dir.listFiles().filter(f => f.getName.startsWith("part-") &&
+      f.getName.endsWith(".parquet"))
+      .map(f => f.getName -> Files.readAllBytes(f.toPath).toSeq).toMap
+
+  test("requests sharing one merged result get byte-identical artifacts " +
+    "from one CSV write") {
+    // the merged result is one cache entry; its CSV rendering is written
+    // once, into the entry's `_csv/`, and every request's artifacts are
+    // copies of the entry's files, not rewrites of its rows
+    val e = newEngine()
     val ids = (0 until 5).map(i => f"req-b$i")
-    ids.foreach(i => eBatch.submit(request.copy(id = i)))
-    val outB = eBatch.tick(base, pixels, locations)
-    assert(outB == ids.map(_ -> 1).toMap)
-    val eSingle = newEngine()
-    eSingle.submit(request.copy(id = "req-s"))
-    assert(eSingle.tick(base, pixels, locations) == Map("req-s" -> 1))
-    def csvBytes(e: Engine, id: String): String = {
-      val dir = new java.io.File(e.workRoot + s"/out/$id/results_csv")
-      val f = dir.listFiles().filter(_.getName.endsWith(".csv"))
-      assert(f.length == 1, s"expected one csv file in $dir")
-      new String(java.nio.file.Files.readAllBytes(f.head.toPath))
+    ids.foreach(i => e.submit(request.copy(id = i)))
+    spark.sparkContext.setJobGroup("shared_merge", "tick", false)
+    val out =
+      try e.tick(base, pixels, locations)
+      finally spark.sparkContext.clearJobGroup()
+    assert(out == ids.map(_ -> 1).toMap)
+    val tracker = spark.sparkContext.statusTracker
+    val csvJobs = tracker.getJobIdsForGroup("shared_merge").count { j =>
+      tracker.getJobInfo(j).exists(_.stageIds().exists(st =>
+        tracker.getStageInfo(st).exists(_.name().startsWith("csv at "))))
     }
-    val golden = csvBytes(eSingle, "req-s")
+    assert(csvJobs == 1, s"expected one CSV write for the tick, saw $csvJobs")
+    val merges = new java.io.File(e.workRoot + "/cache/v1").listFiles()
+      .filter(_.getName.startsWith("merge_"))
+    assert(merges.length == 1, "the five requests must share one merge entry")
+    val entry = merges.head
+    val csv = oneCsv(new java.io.File(entry, "_csv"))
+    val parts = parquetParts(entry)
+    assert(parts.nonEmpty)
     ids.foreach { id =>
-      val r = eBatch.results(id).get
-      assert(r.count() == 2, s"$id results wrong")
-      assert(csvBytes(eBatch, id) == golden,
-        s"$id batched CSV bytes differ from the per-request path")
+      assert(e.results(id).get.count() == 2, s"$id results wrong")
+      assert(oneCsv(new java.io.File(e.workRoot + s"/out/$id/results_csv")) == csv,
+        s"$id CSV bytes differ from the merge entry's")
+      assert(parquetParts(new java.io.File(e.workRoot + s"/out/$id/results")) == parts,
+        s"$id results parquet is not a copy of the merge entry's")
     }
   }
 
-  test("batched path, oversized member: an artifact spanning >1 read split " +
-    "demotes to writeSingle — one csv file, one header, byte-golden order") {
-    // round-15 verdict #2 'done' criterion. The batched promote move is
-    // only byte-golden while a request's staged CSV is ONE part file; an
-    // artifact larger than a read split re-reads as several tasks, each
-    // writing its own headered part with unpinned inter-part order. Force
-    // that shape deterministically: tiny parquet row groups (the staged
-    // write) + tiny maxPartitionBytes (the staged re-read), a 4000-zone
-    // base so each member carries enough rows to split. The guard must
-    // detect the multi-part staging and demote to writeSingle's
-    // coalesce(1), whose bytes equal the per-request path's exactly.
+  test("a result spanning several read splits still gives one CSV file, " +
+    "one header, rows in the results parquet's order") {
+    // tiny parquet row groups (the merge fill) + tiny maxPartitionBytes
+    // (the CSV rendering's read) make a 4000-zone result read back as
+    // several tasks; the rendering must still be one headered file whose
+    // rows follow the results parquet
     val hc = spark.sparkContext.hadoopConfiguration
     val prevBlock = Option(hc.get("parquet.block.size"))
     val prevMax = spark.conf.get("spark.sql.files.maxPartitionBytes")
@@ -97,31 +110,23 @@ class EngineSpec extends AnyFunSuite {
       val bigPixels = (1 to 4000).map(i =>
         (i, (i % 17).toDouble, 1.0, "A", 1998)).toDF(
         "asdf_id", "value", "weight", "cls", "temporal")
-      val eBatch = newEngine()
+      val e = newEngine()
       val ids = Seq("req-m0", "req-m1")
-      ids.foreach(i => eBatch.submit(request.copy(id = i)))
-      assert(eBatch.tick(bigBase, bigPixels, locations) == ids.map(_ -> 1).toMap)
-      // non-vacuity: under these confs this artifact really is >1 split
-      val splits = spark.read.parquet(
-        eBatch.workRoot + "/out/req-m0/results").rdd.getNumPartitions
-      assert(splits > 1, s"fixture too small to force a split (got $splits)")
-      val eSingle = newEngine()
-      eSingle.submit(request.copy(id = "req-ms"))
-      assert(eSingle.tick(bigBase, bigPixels, locations) == Map("req-ms" -> 1))
-      def csvOneFile(e: Engine, id: String): String = {
-        val dir = new java.io.File(e.workRoot + s"/out/$id/results_csv")
-        val f = dir.listFiles().filter(_.getName.endsWith(".csv"))
-        assert(f.length == 1, s"expected ONE csv file in $dir, got ${f.length}")
-        new String(java.nio.file.Files.readAllBytes(f.head.toPath))
-      }
-      val golden = csvOneFile(eSingle, "req-ms")
-      val header = golden.linesIterator.next()
-      assert(golden.linesIterator.count(_ == header) == 1,
-        "golden csv must carry exactly one header line")
+      ids.foreach(i => e.submit(request.copy(id = i)))
+      assert(e.tick(bigBase, bigPixels, locations) == ids.map(_ -> 1).toMap)
       ids.foreach { id =>
-        val got = csvOneFile(eBatch, id)
-        assert(got == golden, s"$id demoted CSV bytes differ from the " +
-          "per-request path (order or header breakage)")
+        val results = e.results(id).get
+        // non-vacuity: under these confs this result really is >1 split
+        val splits = results.rdd.getNumPartitions
+        assert(splits > 1, s"fixture too small to force a split (got $splits)")
+        val lines = oneCsv(new java.io.File(e.workRoot + s"/out/$id/results_csv"))
+          .linesIterator.toSeq
+        assert(lines.count(_ == lines.head) == 1,
+          "the csv must carry exactly one header line")
+        val order = results.select("asdf_id").collect().map(_.getInt(0)).toSeq
+        assert(order.size == 4000)
+        assert(lines.tail.map(_.takeWhile(_ != ',').toInt) == order,
+          s"$id CSV rows are not in the results parquet's order")
       }
     } finally {
       prevBlock match {
@@ -238,6 +243,29 @@ class EngineSpec extends AnyFunSuite {
       assert(names.exists(_.endsWith("request.json")))
       assert(names.exists(_.contains("results_csv")))
     } finally zf.close()
+  }
+
+  test("bundle refuses an unknown id and a request whose artifacts failed, " +
+    "creating no zip") {
+    val e = newEngine()
+    val zipDir = Files.createTempDirectory("graft_zip")
+    val unknown = zipDir.resolve("unknown.zip")
+    val err = intercept[IllegalArgumentException](e.bundle("no-such-id", unknown.toString))
+    assert(err.getMessage.contains("no-such-id"), err.getMessage)
+    assert(!Files.exists(unknown), "no zip may be created for an unknown id")
+    // a directory where request.json belongs makes the artifact step fail
+    // after results/ was written: the request ends at -2 with a torn dir
+    Files.createDirectories(java.nio.file.Paths.get(e.workRoot, "out", "req-1", "request.json"))
+    e.submit(request)
+    val prevErr = System.err
+    System.setErr(new java.io.PrintStream(new java.io.ByteArrayOutputStream(), true))
+    try assert(e.tick(base, pixels, locations) == Map("req-1" -> -2))
+    finally System.setErr(prevErr)
+    assert(e.results("req-1").isEmpty)
+    val torn = zipDir.resolve("torn.zip")
+    val err2 = intercept[IllegalArgumentException](e.bundle("req-1", torn.toString))
+    assert(err2.getMessage.contains("req-1"), err2.getMessage)
+    assert(!Files.exists(torn), "no zip may be created for a failed request")
   }
 
   test("a restarted engine still holds submitted requests and can process them") {

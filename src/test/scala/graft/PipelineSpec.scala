@@ -85,7 +85,8 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("buildOutput: wide merge with reference column grammar, end-to-end") {
-    val (out, echo) = pipeline().buildOutput(request, base, pixels, locations)
+    val (entry, echo) = pipeline().buildOutput(request, base, pixels, locations)
+    val out = spark.read.parquet(entry)
     val cols = out.columns.toSeq
     assert(cols.head == "asdf_id" && cols.last == "name")
     assert(cols.contains("udel_precip_v401_min__1998__mean"))
@@ -120,7 +121,7 @@ class PipelineSpec extends AnyFunSuite {
     // which is what collapses the duplicate-request floor.
     val root = Files.createTempDirectory("graft_pipe").toString
     val p = new Pipeline(spark, new Cache(spark, root))
-    val r1 = p.buildOutput(request, base, pixels, locations)._1
+    val r1 = spark.read.parquet(p.buildOutput(request, base, pixels, locations)._1)
       .orderBy("asdf_id").collect().toSeq
     def newest(f: java.io.File): Long = {
       val kids = Option(f.listFiles()).getOrElse(Array.empty)
@@ -128,7 +129,8 @@ class PipelineSpec extends AnyFunSuite {
     }
     val stamp = newest(new java.io.File(root))
     Thread.sleep(20)
-    val r2 = p.buildOutput(request.copy(id = "twin"), base, pixels, locations)._1
+    val r2 = spark.read.parquet(
+      p.buildOutput(request.copy(id = "twin"), base, pixels, locations)._1)
       .orderBy("asdf_id").collect().toSeq
     assert(r1 == r2, "memoized merge returned different rows")
     assert(newest(new java.io.File(root)) == stamp,
@@ -151,7 +153,9 @@ class PipelineSpec extends AnyFunSuite {
       finally System.setErr(prevErr)
     assert(out.map(_._1) == Seq("hi", request.id, "bad", "boom"))
     assert(out.map(_._2) == Seq(1, 1, -2, -2))
-    assert(out.head._3.count() == 2)
+    // status 1 names the merged result's filled cache entry; -2 names none
+    assert(spark.read.parquet(out.head._3).count() == 2)
+    assert(out.drop(2).forall(_._3.isEmpty))
     // a failing request names its cause on stderr
     assert(err.toString.linesIterator.exists(_.startsWith("request boom failed: ")),
       s"no failure cause logged for boom:\n$err")
