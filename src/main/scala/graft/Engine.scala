@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.model._
-import graft.ops.{Artifacts, Cache, StateTable}
+import graft.ops.{Artifacts, Cache, Fs, StateTable}
 import org.apache.spark.sql.functions._
 
 /** The engine facade — the reference's cron driver
@@ -94,14 +94,16 @@ final class Engine(val spark: SparkSession, workDir: String) {
       df.filter(col("id") === id).select("status")
         .collect().headOption.map(_.getInt(0)))
 
-  /** One cron pass: drain new/waiting requests in priority order, process
-    * each end-to-end, persist status transitions (1 complete / -2 error)
-    * and publish each completed request's artifacts under `out/<id>`.
-    * One request-store read up front and ONE status commit per tick. The
-    * artifacts are file copies of the merged result's cache entry
-    * ([[Artifacts.publish]]), so the engine itself writes nothing through
-    * Spark but the request store; a failed copy demotes only its own
-    * request to -2. */
+  /** One cron pass: new/waiting requests start in priority order, up to
+    * one per core in flight ([[Pipeline.inFlight]]); each is processed
+    * end-to-end and, once complete, publishes its artifacts under
+    * `out/<id>`. Requests that need the same work item or merged result
+    * share one fill. One request-store read up front and ONE status
+    * commit per tick, after every request has finished (1 complete / -2
+    * error). The artifacts are file copies of the merged result's cache
+    * entry ([[Artifacts.publish]]), so the engine itself writes nothing
+    * through Spark but the request store; a failed copy demotes only its
+    * own request to -2. */
   def tick(base: DataFrame, pixels: DataFrame, locations: DataFrame): Map[String, Int] = {
     // only pending work reaches the driver, and only per tick: the status
     // predicate is pushed into the request-store scan — the driver heap
@@ -113,10 +115,12 @@ final class Engine(val spark: SparkSession, workDir: String) {
     val pending: Seq[Request] = requests.read().toSeq.flatMap(
       _.filter(col("status").isin(-1, 0)).as[Request].collect()
         .sortBy(r => (r.stage.headOption.map(_.time).getOrElse(0L), r.id)))
-    val outcomes = pipeline.tick(pending, base, pixels, locations).map {
-      case (id, 1, entry) =>
-        id -> Artifacts.publish(spark, entry, s"$outDir/$id", id, now())
-      case (id, st, _) => id -> st
+    val outcomes = Pipeline.inFlight(spark, pipeline.drainOrder(pending)) { req =>
+      pipeline.process(req, base, pixels, locations) match {
+        case (1, entry) =>
+          req.id -> Artifacts.publish(cache, entry, s"$outDir/${req.id}", req.id, now())
+        case (st, _) => req.id -> st
+      }
     }
     if (outcomes.nonEmpty) {
       val oDF = outcomes.toDF("id", "new_status")
@@ -149,7 +153,7 @@ final class Engine(val spark: SparkSession, workDir: String) {
 
   /** Completed merged result for a request, if any. */
   def results(id: String): Option[DataFrame] =
-    if (completed(id)) Some(spark.read.parquet(s"$outDir/$id/results"))
+    if (completed(id)) Some(Fs.readParquet(spark, s"$outDir/$id/results"))
     else None
 
   /** Bundle a completed request's artifacts (S9); refuses, before creating

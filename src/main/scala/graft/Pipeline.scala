@@ -1,5 +1,7 @@
 package graft
 
+import java.util.concurrent.{Callable, ExecutionException, Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model._
@@ -211,32 +213,45 @@ final class Pipeline(
     (entry, echo)
   }
 
-  /** One cron tick (§3.1): drain the queue head in priority order and
-    * process each request end-to-end. `queue` is the request state table;
-    * only the (small) queue head is collected. Returns (request id, final
-    * status, merged result's cache entry): 1 complete, -2 error — the
-    * reference's error branch marks failed requests -2 rather than
-    * aborting the batch (`queue/processing.py:164-167,188-194`). The merge
-    * fill is eager, so status 1 means the merged result is on disk at the
-    * returned location; a -2 row's location is empty. */
-  def tick(queue: Seq[Request], base: DataFrame, pixels: DataFrame,
-      locations: DataFrame): Seq[(String, Int, String)] = {
-    val ordered = queue
-      .filter(r => r.status == -1 || r.status == 0)
-      .sortBy(r => (-r.priority, r.stage.find(_.name == "submit").map(_.time).getOrElse(0L)))
-    ordered.map { req =>
-      val valid = req.boundary != null && req.boundary.name.nonEmpty &&
-        (req.release_data.nonEmpty || req.raster_data.nonEmpty)
-      if (!valid) (req.id, -2, "")
-      else try {
-        (req.id, 1, buildOutput(req, base, pixels, locations)._1)
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          Pipeline.logFailure(req.id, e)
-          (req.id, -2, "")
-      }
+  /** The requests a tick drains, in priority order: new (-1) and
+    * waiting (0) ones, highest priority first, then earliest submit. */
+  def drainOrder(queue: Seq[Request]): Seq[Request] = queue
+    .filter(r => r.status == -1 || r.status == 0)
+    .sortBy(r => (-r.priority, r.stage.find(_.name == "submit").map(_.time).getOrElse(0L)))
+
+  /** Process one request end-to-end. Returns its status and its merged
+    * result's cache entry: 1 complete, -2 error — the reference's error
+    * branch marks failed requests -2 rather than aborting the batch
+    * (`queue/processing.py:164-167,188-194`). The merge fill is eager, so
+    * status 1 means the merged result is on disk at the returned
+    * location; a -2 request's location is empty, and a failure's cause
+    * is logged ([[Pipeline.logFailure]]). */
+  def process(req: Request, base: DataFrame, pixels: DataFrame,
+      locations: DataFrame): (Int, String) = {
+    val valid = req.boundary != null && req.boundary.name.nonEmpty &&
+      (req.release_data.nonEmpty || req.raster_data.nonEmpty)
+    if (!valid) (-2, "")
+    else try (1, buildOutput(req, base, pixels, locations)._1)
+    catch {
+      case scala.util.control.NonFatal(e) =>
+        Pipeline.logFailure(req.id, e)
+        (-2, "")
     }
   }
+
+  /** One cron tick (§3.1): the queue head's requests start in priority
+    * order ([[drainOrder]]), up to one per core in flight
+    * ([[Pipeline.inFlight]]), and each is processed end-to-end
+    * ([[process]]); requests that need the same work item or merged
+    * result share one fill. `queue` is the request state table; only the
+    * (small) queue head is collected. Returns (request id, final status,
+    * merged result's cache entry) in priority order. */
+  def tick(queue: Seq[Request], base: DataFrame, pixels: DataFrame,
+      locations: DataFrame): Seq[(String, Int, String)] =
+    Pipeline.inFlight(spark, drainOrder(queue)) { req =>
+      val (status, entry) = process(req, base, pixels, locations)
+      (req.id, status, entry)
+    }
 }
 
 object Pipeline {
@@ -244,4 +259,33 @@ object Pipeline {
     * pass's log says why it failed. */
   def logFailure(id: String, e: Throwable): Unit =
     System.err.println(s"request $id failed: ${e.getClass.getName}: ${e.getMessage}")
+
+  /** `run` over every item, with up to the session's default parallelism
+    * (N under `local[N]`) running at once; results come back in `items`'
+    * order. A cold request is mostly driver latency and one-task jobs,
+    * so overlapping requests is what shortens a tick. The threads are
+    * created here, by the calling thread, so each inherits its Spark
+    * local properties (job group, scheduler pool, callers' tags); they
+    * are named `graft-tick-<n>`, are daemons, and none outlives the call.
+    * One item, or a parallelism of one, runs on the calling thread. */
+  def inFlight[A, B](spark: SparkSession, items: Seq[A])(run: A => B): Seq[B] = {
+    val width = math.min(spark.sparkContext.defaultParallelism, items.size)
+    if (width <= 1) items.map(run)
+    else {
+      val n = new AtomicInteger
+      val pool = Executors.newFixedThreadPool(width, { (r: Runnable) =>
+        val t = new Thread(r, s"graft-tick-${n.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      })
+      try {
+        val running = items.map(a => pool.submit(new Callable[B] { def call(): B = run(a) }))
+        try running.map(_.get)
+        catch { case e: ExecutionException => throw e.getCause }
+      } finally {
+        pool.shutdownNow()
+        pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+      }
+    }
+  }
 }

@@ -3,12 +3,7 @@ package graft.ops
 import java.io.{BufferedOutputStream, FileOutputStream}
 import java.nio.file.{Files, Path, Paths}
 import java.util.zip.{ZipEntry, ZipOutputStream}
-import scala.jdk.CollectionConverters._
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import graft.ops.HashKey._
 
 /** Output artifact builders (SURVEY.md §2.1 S5/S6/S9 + §3.1 build_output;
@@ -26,19 +21,19 @@ object Artifacts {
     * `results/`, its CSV rendering into `results_csv/` (each stamped
     * `_SUCCESS` after its files), and the `request.json` echo. The CSV
     * rendering is written once per entry, into `<entry>/_csv/`, so every
-    * request sharing the merged result copies the same bytes; the cache
-    * drops it with the entry on a refill or invalidate. Returns the
-    * request's status: 1, or -2 after logging the cause and removing
-    * `results/_SUCCESS`, so a failed copy never serves a torn result. */
-  def publish(spark: SparkSession, entry: String, out: String, id: String,
+    * request sharing the merged result copies the same bytes (requests
+    * publishing the same entry at once share one write,
+    * [[Cache.fillOnce]]); the cache drops it with the entry on a refill or
+    * invalidate. Returns the request's status: 1, or -2 after logging the
+    * cause and removing `results/_SUCCESS`, so a failed copy never serves
+    * a torn result. */
+  def publish(cache: Cache, entry: String, out: String, id: String,
       completeTime: Long): Int =
     try {
       val src = Paths.get(entry)
       val csv = src.resolve("_csv")
-      // the footer's schema skips the inference job a bare read launches
-      if (!Files.exists(csv.resolve("_SUCCESS")))
-        writeCsv(spark.read.schema(footerSchema(spark, partFiles(src, ".parquet").head))
-          .parquet(entry), csv.toString)
+      cache.fillOnce(csv.toString)(Files.exists(csv.resolve("_SUCCESS")))(
+        writeCsv(Fs.readParquet(cache.spark, entry), csv.toString))
       copyParts(src, ".parquet", Paths.get(out, "results"))
       copyParts(csv, ".csv", Paths.get(out, "results_csv"))
       writeRequestJson(Map("id" -> id, "complete_time" -> completeTime),
@@ -50,29 +45,11 @@ object Artifacts {
       -2
     }
 
-  private def partFiles(dir: Path, suffix: String): Seq[Path] = {
-    val s = Files.list(dir)
-    try s.iterator().asScala.filter { f =>
-      val n = f.getFileName.toString
-      n.startsWith("part-") && n.endsWith(suffix)
-    }.toSeq.sorted
-    finally s.close()
-  }
-
   private def copyParts(from: Path, suffix: String, to: Path): Unit = {
     Fs.deleteTree(to)
     Files.createDirectories(to)
-    partFiles(from, suffix).foreach(f => Files.copy(f, to.resolve(f.getFileName)))
+    Fs.partFiles(from, suffix).foreach(f => Files.copy(f, to.resolve(f.getFileName)))
     Files.createFile(to.resolve("_SUCCESS"))
-  }
-
-  /** The schema Spark records in the footer of a parquet file it wrote. */
-  private def footerSchema(spark: SparkSession, file: Path): StructType = {
-    val r = ParquetFileReader.open(HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(file.toUri), spark.sparkContext.hadoopConfiguration))
-    try DataType.fromJson(r.getFileMetaData.getKeyValueMetaData
-      .get(ParquetReadSupport.SPARK_METADATA_KEY)).asInstanceOf[StructType]
-    finally r.close()
   }
 
   /** S5: merged result → headered CSV, reference-faithful dotted column

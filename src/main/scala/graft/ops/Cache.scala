@@ -1,6 +1,7 @@
 package graft.ops
 
 import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.{CompletableFuture, ConcurrentHashMap}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Content-addressed result memoization — the reference's signature
@@ -21,9 +22,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `_`-prefixed entries inside a key dir belong to that entry (the merged
   * result's CSV rendering, `_csv/`): Spark's parquet reads and [[probe]]
   * skip them, and refilling or invalidating the key removes them with it.
+  *
+  * Fills are single-flight per path ([[fillOnce]]): requests that run at
+  * once and need the same entry share one write.
   */
-final class Cache(spark: SparkSession, root: String, version: String = "v1") {
+final class Cache(val spark: SparkSession, root: String, version: String = "v1") {
   private def dir(key: String) = s"$root/$version/$key"
+
+  /** The writes running now, by the path each writes; an entry leaves
+    * the map when its write ends, so the map never outgrows the threads
+    * filling this cache. */
+  private val inFlight = new ConcurrentHashMap[String, CompletableFuture[Unit]]()
 
   /** Q3 completion probe, the cache's one done predicate: key dir
     * present with `_SUCCESS` and a non-empty parquet file. */
@@ -35,19 +44,38 @@ final class Cache(spark: SparkSession, root: String, version: String = "v1") {
     }
   }
 
+  /** Run `write` for `path` unless `done`, at most once at a time per
+    * path: a caller that finds another thread writing `path` waits for
+    * that write to end, then checks `done` again, so a shared entry is
+    * written once and a failed write is retried by the next caller. */
+  @scala.annotation.tailrec
+  private[ops] def fillOnce(path: String)(done: => Boolean)(write: => Unit): Unit =
+    if (!done) {
+      val mine = new CompletableFuture[Unit]()
+      inFlight.putIfAbsent(path, mine) match {
+        case null =>
+          try { if (!done) write }
+          finally { inFlight.remove(path, mine); mine.complete(()) }
+        case running =>
+          running.join()
+          fillOnce(path)(done)(write)
+      }
+    }
+
   /** Fill `key` from `compute` unless it passes [[probe]] (the key dir
     * and its `_SUCCESS` live on the filesystem and so survive a process
     * restart). Returns the key's dir, which then holds the result. */
   def fill(key: String)(compute: => DataFrame): String = {
-    if (!probe(key)) compute.write.mode("overwrite").parquet(dir(key))
+    fillOnce(dir(key))(probe(key))(compute.write.mode("overwrite").parquet(dir(key)))
     dir(key)
   }
 
-  /** Memoized compute: [[fill]], then read back. Reading back (rather
-    * than returning `compute` directly) means downstream plans see a
-    * plain Parquet scan — prunable and reusable. */
+  /** Memoized compute: [[fill]], then read back with the entry's footer
+    * schema. Reading back (rather than returning `compute` directly)
+    * means downstream plans see a plain Parquet scan — prunable and
+    * reusable. */
   def getOrCompute(key: String)(compute: => DataFrame): DataFrame =
-    spark.read.parquet(fill(key)(compute))
+    Fs.readParquet(spark, fill(key)(compute))
 
   /** Fill MANY missing keys with ONE Spark job (the batch side of
     * incremental view maintenance): write `df` partitioned by `partCol`

@@ -1,10 +1,42 @@
 package graft.ops
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Filesystem helpers shared by the cache, the state table and the
-  * artifact copies. */
+  * artifact copies, and the schema-known read of a parquet dir. */
 private[graft] object Fs {
+  /** The `part-*<suffix>` files directly under `dir`, sorted by name. */
+  def partFiles(dir: Path, suffix: String): Seq[Path] = {
+    val s = Files.list(dir)
+    try s.iterator().asScala.filter { f =>
+      val n = f.getFileName.toString
+      n.startsWith("part-") && n.endsWith(suffix)
+    }.toSeq.sorted
+    finally s.close()
+  }
+
+  /** The schema Spark records in the footer of a parquet file it wrote. */
+  private def footerSchema(spark: SparkSession, file: Path): StructType = {
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+      new org.apache.hadoop.fs.Path(file.toUri), spark.sparkContext.hadoopConfiguration))
+    try DataType.fromJson(r.getFileMetaData.getKeyValueMetaData
+      .get(ParquetReadSupport.SPARK_METADATA_KEY)).asInstanceOf[StructType]
+    finally r.close()
+  }
+
+  /** A parquet dir Spark wrote, read with its first part file's footer
+    * schema: a bare `spark.read.parquet(dir)` launches a schema-inference
+    * job, this launches none until an action runs. */
+  def readParquet(spark: SparkSession, dir: String): DataFrame =
+    spark.read.schema(footerSchema(spark, partFiles(Paths.get(dir), ".parquet").head))
+      .parquet(dir)
+
   /** Recursive delete, children first; a no-op on a missing path.
     * `Files.walk` does not follow symlinks, so a link is removed, never
     * its target. */

@@ -138,6 +138,184 @@ class EngineSpec extends AnyFunSuite {
     }
   }
 
+  /** What the session did while `body` ran: the jobs it started, the
+    * most queries with a job running at once, and every file-source
+    * write as (output path, format). Jobs count per query (their root
+    * SQL execution, or the job itself outside one) because adaptive
+    * execution runs one query's stages as concurrent jobs. */
+  final case class Seen(jobs: Int, peakQueries: Int, writes: Seq[(String, String)])
+
+  def observe[T](body: => T): (T, Seen) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val sc = spark.sparkContext
+    org.apache.spark.TestBus.drain(sc)
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val writeL = new QueryExecutionListener {
+      def record(qe: QueryExecution): Unit = qe.analyzed.foreach {
+        case c: InsertIntoHadoopFsRelationCommand =>
+          writes.add(c.outputPath.toUri.getPath -> c.fileFormat.toString): Unit
+        case _ => ()
+      }
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = record(qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = record(qe)
+    }
+    val jobL = new SparkListener {
+      val running = scala.collection.mutable.Map.empty[Int, String] // job -> query
+      var started, peak = 0
+      override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+        val p = Option(e.properties)
+        def prop(k: String) = p.flatMap(x => Option(x.getProperty(k)))
+        started += 1
+        running(e.jobId) = prop("spark.sql.execution.root.id")
+          .orElse(prop("spark.sql.execution.id")).getOrElse(s"job-${e.jobId}")
+        peak = math.max(peak, running.values.toSet.size)
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized { running -= e.jobId }
+    }
+    spark.listenerManager.register(writeL)
+    sc.addSparkListener(jobL)
+    try {
+      val out = body
+      org.apache.spark.TestBus.drain(sc)
+      (out, jobL.synchronized(Seen(jobL.started, jobL.peak,
+        writes.toArray(Array.empty[(String, String)]).toSeq)))
+    } finally {
+      sc.removeSparkListener(jobL)
+      spark.listenerManager.unregister(writeL)
+    }
+  }
+
+  /** `body` with stderr discarded (failing requests log their cause). */
+  def quiet[T](body: => T): T = {
+    val prevErr = System.err
+    System.setErr(new java.io.PrintStream(new java.io.ByteArrayOutputStream(), true))
+    try body finally System.setErr(prevErr)
+  }
+
+  /** Bytes of each `part-*<suffix>` file in `dir`, in name order (part
+    * names carry a per-write id, so the bytes are what compare). */
+  def partBytes(dir: String, suffix: String): Seq[Seq[Byte]] =
+    new java.io.File(dir).listFiles().filter(f => f.getName.startsWith("part-") &&
+      f.getName.endsWith(suffix)).sortBy(_.getName)
+      .map(f => Files.readAllBytes(f.toPath).toSeq).toSeq
+
+  test("one tick runs its requests at once, one fill per cache key, with the " +
+    "artifacts of a tick that runs them one by one") {
+    def udel(files: Seq[String], methods: String*) =
+      RasterSelection("udel", methods, files.map(RasterFile(_)))
+    val afdb = ReleaseSelection("nigeriaaims", filters = Map("donors" -> Seq("AFDB")))
+    val all = ReleaseSelection("nigeriaaims")
+    def req(id: String, rel: Seq[ReleaseSelection], ras: RasterSelection*) =
+      Request(id = id, boundary = Boundary("nga_adm0_gadm28"),
+        release_data = rel, raster_data = ras)
+    // started in id order, up to four at once: c-0 and c-1 share a whole
+    // merged result, and most requests share work items with another
+    val reqs = Seq(
+      req("c-0", Seq(afdb), udel(Seq("udel_1998"), "mean")),
+      req("c-1", Seq(afdb), udel(Seq("udel_1998"), "mean")),
+      req("c-2", Nil, udel(Seq("udel_1998"), "mean", "max")),
+      req("c-3", Seq(all), udel(Seq("udel_1998"), "max")),
+      req("c-4", Seq(afdb), udel(Seq("udel_1998"), "nope")), // fails at plan time
+      req("c-5", Seq(afdb, all)),
+      req("c-6", Nil, udel(Seq("udel"), "min", "sum")),
+      req("c-7", Seq(all), udel(Seq("udel_1998", "udel"), "median")),
+      req("c-8", Nil, udel(Seq("udel_1998"), "max", "mean")))
+    val expected = reqs.map(r => r.id -> (if (r.id == "c-4") -2 else 1)).toMap
+    val e = newEngine()
+    e.submitAll(reqs)
+    val (out, seen) = observe(quiet(e.tick(base, pixels, locations)))
+    assert(out == expected)
+    assert(seen.peakQueries >= 2,
+      s"the tick never ran two queries' jobs at once (peak ${seen.peakQueries})")
+    // every cache entry was written once, by one parquet write, and each
+    // merged result's CSV rendering by one CSV write
+    val cacheRoot = s"${e.workRoot}/cache/v1/"
+    val entries = new java.io.File(cacheRoot).listFiles()
+      .filter(f => f.isDirectory && !f.getName.startsWith("_")).map(_.getName).toSeq
+    val cacheWrites = seen.writes.collect {
+      case (path, format) if path.startsWith(cacheRoot) => path.stripPrefix(cacheRoot) -> format
+    }
+    val parquet = cacheWrites.filter(_._2 == "Parquet").map(_._1)
+    val csv = cacheWrites.filter(_._2 == "CSV").map(_._1)
+    assert(parquet.sorted == entries.sorted,
+      s"cache entries and parquet writes differ: ${parquet.diff(parquet.distinct)}")
+    assert(csv.sorted == entries.filter(_.startsWith("merge_")).map(_ + "/_csv").sorted,
+      s"merged results and CSV writes differ: $csv")
+    assert(entries.count(_.startsWith("merge_")) == expected.count(_._2 == 1) - 1,
+      "c-0 and c-1 must share one merged result")
+    // the same requests ticked one per tick give the same artifacts
+    val serial = newEngine()
+    quiet(reqs.foreach { r =>
+      serial.submit(r)
+      assert(serial.tick(base, pixels, locations) == Map(r.id -> expected(r.id)))
+    })
+    expected.foreach {
+      case (id, 1) =>
+        Seq("results" -> ".parquet", "results_csv" -> ".csv").foreach { case (sub, suffix) =>
+          val got = partBytes(s"${e.workRoot}/out/$id/$sub", suffix)
+          assert(got.nonEmpty, s"$id has no $sub")
+          assert(got == partBytes(s"${serial.workRoot}/out/$id/$sub", suffix),
+            s"$id $sub differs from the one-request-per-tick engine's")
+        }
+      case (id, _) => assert(e.results(id).isEmpty, s"failed $id has results")
+    }
+  }
+
+  test("no graft-tick thread outlives a tick, whether a request throws or not") {
+    import scala.jdk.CollectionConverters._
+    def tickThreads() = Thread.getAllStackTraces.keySet.asScala.toSeq
+      .filter(_.getName.startsWith("graft-tick-"))
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    @volatile var sampling = true
+    val sampler = new Thread(() => while (sampling) {
+      tickThreads().foreach(t => seen.add(t.getName))
+      Thread.sleep(2)
+    })
+    sampler.setDaemon(true)
+    sampler.start()
+    try {
+      // a request that throws inside the tick ends at -2 ...
+      val e = newEngine()
+      val broken = request.copy(id = "t-x", raster_data = Seq(RasterSelection(
+        name = "x", extract_types = Seq("nope"), files = Seq(RasterFile("x_1998")))))
+      e.submitAll(Seq(request.copy(id = "t-0"), broken, request.copy(id = "t-2")))
+      assert(quiet(e.tick(base, pixels, locations)) ==
+        Map("t-0" -> 1, "t-x" -> -2, "t-2" -> 1))
+      assert(tickThreads().isEmpty, "a tick with a failing request left threads")
+      e.submitAll(Seq(request.copy(id = "t-3"), request.copy(id = "t-4")))
+      assert(e.tick(base, pixels, locations) == Map("t-3" -> 1, "t-4" -> 1))
+      assert(tickThreads().isEmpty, "a normal tick left threads")
+      // ... and one that escapes the pool ends the call with its cause
+      val err = intercept[IllegalStateException](Pipeline.inFlight(spark, 0 until 8) { i =>
+        if (i == 3) throw new IllegalStateException("boom")
+        Thread.sleep(50); i
+      })
+      assert(err.getMessage == "boom")
+      assert(tickThreads().isEmpty, "an escaping failure left threads")
+    } finally {
+      sampling = false
+      sampler.join()
+    }
+    assert(!seen.isEmpty, "no tick ran on graft-tick threads")
+  }
+
+  test("results and a cache hit read with the entry's own schema: no job " +
+    "until an action runs") {
+    val e = newEngine()
+    e.submit(request)
+    assert(e.tick(base, pixels, locations) == Map("req-1" -> 1))
+    val item = e.pipeline.checkRequest(request).head
+    val ((res, hit), seen) = observe((e.results("req-1").get,
+      e.cache.getOrCompute(item.key)(sys.error("a filled key must not recompute"))))
+    assert(seen.jobs == 0, s"reading back launched ${seen.jobs} job(s)")
+    assert(res.schema == spark.read.parquet(s"${e.workRoot}/out/req-1/results").schema)
+    assert(hit.schema == spark.read.parquet(s"${e.workRoot}/cache/v1/${item.key}").schema)
+    assert(res.count() == 2 && hit.count() == 2)
+  }
+
   test("completed requests are not reprocessed on the next tick") {
     val e = newEngine()
     e.submit(request)
