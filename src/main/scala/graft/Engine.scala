@@ -54,40 +54,26 @@ final class Engine(val spark: SparkSession, workDir: String) {
     * super-linear-in-live write). The deltas merge
     * into every read immediately (snapshot wins on key overlap — the
     * same insert-only MERGE semantics) and fold into the snapshot at the
-    * next tick's commit. */
+    * next tick's commit. Idempotence spans the whole history: the store
+    * drops an id that a tick already retired to its archive, checked
+    * under its writer lease, so a re-submit racing that tick cannot
+    * re-enter the queue either (the reference's find-then-insert runs
+    * against the full collection, which never forgets a completed id). */
   def submitAll(reqs: Seq[Request]): Seq[String] = {
     if (reqs.isEmpty) return Seq.empty
     val ts = now()
     val stamped = reqs.map(r =>
       r.copy(status = -1, stage = Seq(StageTime("submit", ts))))
-    // MERGE sources must be key-unique: keep the first body per id
-    val unique = stamped.groupBy(_.id).map(_._2.head).toSeq
-    // idempotence must span the ARCHIVE too: the store's MERGE
-    // existing-wins rule only sees live rows, so without this anti-join a
-    // re-submitted id whose row was compacted to the archive would
-    // re-enter the queue as new and reprocess — the reference's
-    // find-then-insert runs against the full collection, which never
-    // forgets a completed id
-    val fresh = requests.archive() match {
-      case Some(arch) =>
-        val archived = unique.map(_.id).toDF("id")
-          .join(arch.select(col("id")), Seq("id"), "left_semi")
-          .collect().map(_.getString(0)).toSet
-        unique.filterNot(r => archived.contains(r.id))
-      case None => unique
-    }
-    if (fresh.nonEmpty) {
-      // `fresh` is key-unique (grouped above) — appendDelta's contract;
-      // cross-batch re-submits resolve earliest-wins at read time, the
-      // same first-body-kept semantics the snapshot MERGE gave. No
-      // version commits here, so no per-submit vacuum: versions only
-      // move at tick time, where the deltas fold and vacuum runs.
-      requests.appendDelta(fresh.toDS().toDF())
-    }
+    // appendDelta's contract: key-unique batches — keep the first body
+    // per id; cross-batch re-submits resolve earliest-wins at read time,
+    // the same first-body-kept semantics the snapshot MERGE gave. No
+    // version commits here, so no per-submit vacuum: versions only move
+    // at tick time, where the deltas fold and vacuum runs.
+    requests.appendDelta(stamped.groupBy(_.id).map(_._2.head).toSeq.toDS().toDF())
     reqs.map(_.id)
   }
 
-  /** Status lookup spans live + archived rows: a compacted (terminal)
+  /** Status lookup spans live + archived rows: a retired (terminal)
     * request still answers with its final status. */
   def status(id: String): Option[Int] =
     requests.readAll().flatMap(df =>
@@ -99,8 +85,11 @@ final class Engine(val spark: SparkSession, workDir: String) {
     * end-to-end and, once complete, publishes its artifacts under
     * `out/<id>`. Requests that need the same work item or merged result
     * share one fill. One request-store read up front and ONE status
-    * commit per tick, after every request has finished (1 complete / -2
-    * error). The artifacts are file copies of the merged result's cache
+    * commit per tick, after every request has finished: the drained
+    * bodies, each with its outcome (1 complete / -2 error), move from the
+    * live queue to the archive as one request-store version
+    * ([[StateTable.retire]]); a tick with nothing pending commits
+    * nothing. The artifacts are file copies of the merged result's cache
     * entry ([[Artifacts.publish]]), so the engine itself writes nothing
     * through Spark but the request store; a failed copy demotes only its
     * own request to -2. */
@@ -115,34 +104,22 @@ final class Engine(val spark: SparkSession, workDir: String) {
     val pending: Seq[Request] = requests.read().toSeq.flatMap(
       _.filter(col("status").isin(-1, 0)).as[Request].collect()
         .sortBy(r => (r.stage.headOption.map(_.time).getOrElse(0L), r.id)))
-    val outcomes = Pipeline.inFlight(spark, pipeline.drainOrder(pending)) { req =>
-      pipeline.process(req, base, pixels, locations) match {
+    val drained = Pipeline.inFlight(spark, pipeline.drainOrder(pending)) { req =>
+      req.copy(status = pipeline.process(req, base, pixels, locations) match {
         case (1, entry) =>
-          req.id -> Artifacts.publish(cache, entry, s"$outDir/${req.id}", req.id, now())
-        case (st, _) => req.id -> st
-      }
+          Artifacts.publish(cache, entry, s"$outDir/${req.id}", req.id, now())
+        case (st, _) => st
+      })
     }
-    if (outcomes.nonEmpty) {
-      val oDF = outcomes.toDF("id", "new_status")
-      // anything pending was read from the table, so it exists and the
-      // update commits a version; the select keeps the body column order
-      requests.update(df => df.join(oDF, Seq("id"), "left")
-        .withColumn("status", coalesce(col("new_status"), col("status")))
-        .select(df.columns.map(col).toSeq: _*))
-    }
-    // terminal-state compaction: finished rows (1 complete / -2 error)
-    // leave the live table for the append-only archive, so the per-tick
-    // pending scan stays bounded by LIVE work even after millions of
-    // completed requests. vacuum bounds versions (the drain commits them
-    // too); compact bounds rows; status()/history stay served via
-    // readAll(). consolidateArchive bounds the archive DIRECTORY count (one
-    // batch lands per compacting tick): submit idempotence scans the
-    // archive, and a months-old engine would otherwise pay a
-    // thousands-of-tiny-dirs multi-path scan on the submit path.
-    requests.compact(_.filter(col("status").isin(1, -2)))
+    // every outcome is terminal, so the live queue keeps only work that
+    // arrived during the tick: the pending scan stays bounded by LIVE
+    // work after millions of completed requests, and status() still
+    // answers from the archive. The bodies are on the driver already, so
+    // the archive batch is written from them, not re-read from the store;
+    // vacuum bounds the versions and the archive batches they list.
+    if (drained.nonEmpty) requests.retire(drained.toDS().toDF())
     requests.vacuum(keep = 4)
-    requests.consolidateArchive()
-    outcomes.toMap
+    drained.map(r => r.id -> r.status).toMap
   }
 
   /** A request's artifacts are complete once `results/_SUCCESS` exists —

@@ -30,12 +30,14 @@ private[graft] object Fs {
     finally r.close()
   }
 
-  /** A parquet dir Spark wrote, read with its first part file's footer
-    * schema: a bare `spark.read.parquet(dir)` launches a schema-inference
-    * job, this launches none until an action runs. */
-  def readParquet(spark: SparkSession, dir: String): DataFrame =
-    spark.read.schema(footerSchema(spark, partFiles(Paths.get(dir), ".parquet").head))
-      .parquet(dir)
+  /** Parquet dirs Spark wrote with one schema, read as one frame with
+    * the first dir's first part file's footer schema: a bare
+    * `spark.read.parquet(dirs)` launches a schema-inference job, this
+    * launches none until an action runs. Even an empty write leaves one
+    * part file carrying the schema. */
+  def readParquet(spark: SparkSession, dirs: String*): DataFrame =
+    spark.read.schema(footerSchema(spark, partFiles(Paths.get(dirs.head), ".parquet").head))
+      .parquet(dirs: _*)
 
   /** Recursive delete, children first; a no-op on a missing path.
     * `Files.walk` does not follow symlinks, so a link is removed, never

@@ -1,7 +1,8 @@
 package graft.ops
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** Versioned Parquet state table — the offline stand-in for the reference's
   * mutable Mongo collections (`asdf.det` / `asdf.extracts` / `asdf.msr`,
@@ -9,6 +10,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * writes produce a new immutable version directory and atomically swap a
   * pointer file (write-temp + atomic move). Old versions are retained —
   * cheap history/debugging, bounded by [[vacuum]].
+  *
+  * ONE COMMIT POINT. A version directory holds the live snapshot, the
+  * names of the delta batches it folded (`_FOLDED`) and the names of the
+  * archive batches it lists (`_ARCHIVE`). The pointer swap that publishes
+  * the snapshot publishes all three, so a reader that reads the pointer
+  * once sees one consistent table, and a batch no published version
+  * lists is invisible (a crashed writer's batch is garbage, never data).
+  *
+  * ONE INVARIANT: a key is live or archived, never both. [[retire]] moves
+  * keys from the live snapshot to the archive in one commit;
+  * [[appendDelta]] and [[upsert]] drop incoming rows whose key is
+  * archived, under the writer lease. So [[archive]] is a plain scan of
+  * the listed batches and [[readAll]] a plain union.
   *
   * Version directories are PER-WRITER-UNIQUE (`v{N}_{uuid}`) and the
   * pointer stores the directory NAME: no writer ever deletes or writes
@@ -19,21 +33,30 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Incremental ingest goes through [[appendDelta]]: an O(batch)
   * append-only delta directory merged into every read and FOLDED into the
-  * snapshot by the next full commit (upsert/update/compact) — without it,
+  * snapshot by the next full commit (commit/upsert/retire) — without it,
   * every submit rewrites the live snapshot and ingest is O(live)
   * (measured: +1k submit cost ~1.2 s against a 10⁵-row live queue,
   * DriveQueueScale round 13; the lifecycle's one super-linear write).
   *
   * This is deliberately a miniature of the transactional-table pattern
-  * (Delta/Iceberg-style) built only on the filesystem primitives available
-  * offline; on a cluster the same layout works on any HDFS-compatible FS
-  * with atomic rename.
+  * (Delta/Iceberg-style, where one commit publishes every file of a
+  * version) built only on the filesystem primitives available offline;
+  * on a cluster the same layout works on any HDFS-compatible FS with
+  * atomic rename.
   */
 final class StateTable(spark: SparkSession, dir: String, keys: Seq[String],
     leaseMs: Long = 10 * 60 * 1000L) {
   private val root = Paths.get(dir)
   private val pointer = root.resolve("_CURRENT")
+  private val deltaRoot = root.resolve("_delta")
+  private val archiveRoot = root.resolve("_archive")
+  private val keyCols = keys.map(col)
   Files.createDirectories(root)
+  require(currentDirName.forall(dn => Files.exists(root.resolve(dn).resolve("_ARCHIVE")))
+      || subdirs(archiveRoot, "b").isEmpty,
+    s"$archiveRoot holds archive batches that the current version does not " +
+      "list: an older layout published them apart from the snapshot; read " +
+      "the table with the previous build or use a new table dir")
 
   /** Pointer content → committed dir name. Pre-round-14 tables stored the
     * bare version number with `v$n` dirs; both forms stay readable. */
@@ -48,26 +71,72 @@ final class StateTable(spark: SparkSession, dir: String, keys: Seq[String],
 
   private def currentVersion: Option[Long] = currentDirName.map(versionOf)
 
+  /** Names of the `prefix*` directories directly under `under`, sorted. */
+  private def subdirs(under: Path, prefix: String): Seq[String] =
+    Option(under.toFile.listFiles()).getOrElse(Array.empty)
+      .filter(f => f.isDirectory && f.getName.startsWith(prefix))
+      .map(_.getName).sorted.toSeq
+
+  /** The names version dir `dn` lists in its `file` (`_FOLDED` or
+    * `_ARCHIVE`); empty when the file is absent. */
+  private def listed(dn: String, file: String): Seq[String] = {
+    val f = root.resolve(dn).resolve(file)
+    if (Files.exists(f)) Files.readString(f).split("\n").filter(_.nonEmpty).toSeq
+    else Seq.empty
+  }
+
   /** Current committed snapshot merged with any un-folded delta batches
     * (None before the first commit when no deltas exist). The snapshot
     * wins on key overlap; among deltas the EARLIEST batch wins — together
     * that preserves [[upsert]]'s insert-only MERGE semantics for rows
     * ingested through [[appendDelta]]. */
-  def read(): Option[DataFrame] = {
-    val snap = currentDirName.map(dn => spark.read.parquet(root.resolve(dn).toString))
-    (snap, deltaView) match {
+  def read(): Option[DataFrame] = liveAt(currentDirName)
+
+  /** Archived rows, if any: one scan of the batches the current version
+    * lists. */
+  def archive(): Option[DataFrame] = archiveAt(currentDirName)
+
+  /** Live ∪ archive — the full-history view ([[read]] is the live view),
+    * both sides from one pointer read. */
+  def readAll(): Option[DataFrame] = {
+    val dn = currentDirName
+    (liveAt(dn), archiveAt(dn)) match {
+      case (Some(l), Some(a)) => Some(l.unionByName(a))
+      case (l, a) => l.orElse(a)
+    }
+  }
+
+  // Every read is schema-known ([[Fs.readParquet]]): no job runs until an
+  // action does.
+  private def liveAt(dn: Option[String]): Option[DataFrame] = {
+    val snap = dn.map(d => Fs.readParquet(spark, root.resolve(d).toString))
+    (snap, deltaView(dn.toSeq.flatMap(listed(_, "_FOLDED")).toSet)) match {
       case (Some(l), Some(d)) =>
-        val keyCols = keys.map(org.apache.spark.sql.functions.col)
         Some(l.unionByName(d.join(l.select(keyCols: _*), keys, "left_anti")))
       case (l, d) => l.orElse(d)
     }
   }
 
+  private def archiveAt(dn: Option[String]): Option[DataFrame] =
+    archived(dn) match {
+      case Seq() => None
+      case batches => Some(Fs.readParquet(spark, batchDirs(batches): _*))
+    }
+
+  /** The archive batches version dir `dn` lists. */
+  private def archived(dn: Option[String]): Seq[String] =
+    dn.toSeq.flatMap(listed(_, "_ARCHIVE"))
+
+  private def batchDirs(names: Seq[String]): Seq[String] =
+    names.map(archiveRoot.resolve(_).toString)
+
+  private def uuid8: String = java.util.UUID.randomUUID().toString.take(8)
+
   // ---- single-writer lease ---------------------------------------------
   // The table is SINGLE-WRITER by contract (the Mongo reference got
   // per-document atomicity for free; a snapshot table cannot): every
-  // mutating entry point (commit / upsert / update / compact / vacuum /
-  // consolidateArchive) runs under an exclusive lease held in `_LOCK`,
+  // mutating entry point (commit / appendDelta / upsert / retire /
+  // vacuum) runs under an exclusive lease held in `_LOCK`,
   // acquired with CREATE_NEW — the one atomic test-and-set a plain
   // filesystem offers — and a second writer FAILS LOUDLY with
   // ConcurrentModificationException instead of silently losing the other
@@ -141,14 +210,20 @@ final class StateTable(spark: SparkSession, dir: String, keys: Seq[String],
     }
   }
 
-  /** Commit a full new snapshot: write a uniquely-named staging dir,
-    * atomically rename it to its per-writer-unique `v{N+1}_{uuid}/` name,
-    * and atomically swap the pointer. Readers only ever follow the
-    * pointer, so a crashed writer leaves garbage data but never a torn
-    * table. Writer-exclusive: runs under the single-writer lease (see
-    * above), and re-checks lease ownership immediately before the pointer
-    * swap so a stolen lease aborts loudly instead of clobbering the
-    * stealer's commit.
+  /** Commit a full new snapshot that keeps the current archive list (see
+    * [[publish]]). Writer-exclusive: runs under the single-writer lease. */
+  def commit(df: DataFrame): Long = withWriterLease {
+    publish(df, archived(currentDirName))
+  }
+
+  /** Publish `df` as the live snapshot and `batches` as the archive list
+    * of a new version: write a uniquely-named staging dir, atomically
+    * rename it to its per-writer-unique `v{N+1}_{uuid}/` name, and
+    * atomically swap the pointer. Readers only ever follow the pointer,
+    * so a crashed writer leaves garbage data but never a torn table. The
+    * caller holds the lease; lease ownership is re-checked immediately
+    * before the pointer swap so a stolen lease aborts loudly instead of
+    * clobbering the stealer's commit.
     *
     * The per-WRITER-unique version dir closes the destructive half of the
     * advisory lease's residual race (round-13 advisor): two writers
@@ -164,32 +239,30 @@ final class StateTable(spark: SparkSession, dir: String, keys: Seq[String],
     * caller's `df` was derived from [[read]] under this same lease (or
     * deliberately replaces the whole table), so every delta batch
     * existing now is superseded by the new snapshot. The consumed batch
-    * names are recorded in a `_FOLDED` file INSIDE the new version dir —
-    * atomic with the data via the same rename+swap, so a crash at any
-    * point leaves either the old pointer + live deltas or the new
-    * pointer + folded deltas, never a state where delta rows are lost or
-    * double-visible. Swept dirs: the batches the REPLACED snapshot had
-    * folded are deleted at the START of the next commit (one-cycle grace
-    * for readers holding the previous lazy view, like
-    * [[consolidateArchive]]'s doomed list). */
-  def commit(df: DataFrame): Long = withWriterLease {
+    * names are recorded in the new version's `_FOLDED` file, atomic with
+    * the data via the same rename+swap, so a crash at any point leaves
+    * either the old pointer + live deltas or the new pointer + folded
+    * deltas, never a state where delta rows are lost or double-visible.
+    * Swept dirs: the batches the REPLACED snapshot had folded are deleted
+    * at the START of the next commit (one-cycle grace for readers holding
+    * the previous lazy view). */
+  private def publish(df: DataFrame, batches: Seq[String]): Long = {
     val next = currentVersion.getOrElse(-1L) + 1
     // delta lifecycle: sweep what the snapshot being replaced already
     // folded, then consume every batch still on disk (a late appendDelta
     // from a lease stealer lands AFTER this listing and simply stays
     // live — "not listed" = "not folded" is the safe direction)
     Fs.reapStale(deltaRoot, ".tmp")
-    foldedNames.foreach(n => Fs.deleteTree(deltaRoot.resolve(n)))
-    val consumed = Option(deltaRoot.toFile.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("d"))
-      .map(_.getName).sorted
-    val dirName = s"v${next}_${java.util.UUID.randomUUID().toString.take(8)}"
-    val stage = root.resolve(
-      s".tmpv_${java.util.UUID.randomUUID().toString.take(8)}")
+    currentDirName.toSeq.flatMap(listed(_, "_FOLDED"))
+      .foreach(n => Fs.deleteTree(deltaRoot.resolve(n)))
+    val consumed = subdirs(deltaRoot, "d")
+    val dirName = s"v${next}_$uuid8"
+    val stage = root.resolve(s".tmpv_$uuid8")
     try {
       df.write.mode("overwrite").parquet(stage.toString)
       if (consumed.nonEmpty)
         Files.writeString(stage.resolve("_FOLDED"), consumed.mkString("\n"))
+      Files.writeString(stage.resolve("_ARCHIVE"), batches.mkString("\n"))
       val tmp = root.resolve(s"_CURRENT.tmp$next")
       Files.writeString(tmp, dirName)
       // Ownership + progress re-check IMMEDIATELY before the pointer
@@ -220,51 +293,41 @@ final class StateTable(spark: SparkSession, dir: String, keys: Seq[String],
 
   // ---- O(batch) incremental ingest (delta batches) -----------------------
 
-  private val deltaRoot = root.resolve("_delta")
-
   /** Append a batch of NEW rows in O(batch): one write-temp + atomic move
-    * into `_delta/`, no snapshot rewrite. Rows become visible to [[read]]
-    * immediately (merged view, snapshot wins on key overlap — the same
-    * insert-only MERGE a direct [[upsert]] would give) and are folded
-    * into the snapshot by the next full commit. The batch must be
-    * key-unique WITHIN itself (the caller dedups, as [[upsert]] already
-    * requires of its MERGE source); across batches the earliest batch
-    * wins deterministically. Runs under the writer lease — appends
+    * into `_delta/`, no snapshot rewrite. Rows whose key is archived are
+    * dropped (a finished key never re-enters live). The rest become
+    * visible to [[read]] immediately (merged view, snapshot wins on key
+    * overlap — the same insert-only MERGE a direct [[upsert]] would give)
+    * and are folded into the snapshot by the next full commit. The batch
+    * must be key-unique WITHIN itself (the caller dedups, as [[upsert]]
+    * already requires of its MERGE source); across batches the earliest
+    * batch wins deterministically. Runs under the writer lease — appends
     * serialize with full commits, so a fold can never lose a
-    * concurrently-appended batch. */
+    * concurrently-appended batch, and the archive check cannot straddle a
+    * [[retire]] of the same key. */
   def appendDelta(df: DataFrame): Unit = withWriterLease {
     Files.createDirectories(deltaRoot)
-    val name = f"d${System.currentTimeMillis()}%013d_" +
-      java.util.UUID.randomUUID().toString.take(8)
+    val name = f"d${System.currentTimeMillis()}%013d_$uuid8"
     val tmp = deltaRoot.resolve(s".tmp_$name")
-    df.write.mode("overwrite").parquet(tmp.toString)
+    // a submit batch is small: one file, not one per local partition
+    unarchived(df).coalesce(1).write.mode("overwrite").parquet(tmp.toString)
     Files.move(tmp, deltaRoot.resolve(name), StandardCopyOption.ATOMIC_MOVE)
   }
 
-  /** Names of delta batches already folded into the CURRENT snapshot
-    * (recorded in its `_FOLDED` file) — invisible to readers, swept at
-    * the next commit. */
-  private def foldedNames: Set[String] =
-    currentDirName.map { dn =>
-      val f = root.resolve(dn).resolve("_FOLDED")
-      if (Files.exists(f))
-        Files.readString(f).split("\n").filter(_.nonEmpty).toSet
-      else Set.empty[String]
-    }.getOrElse(Set.empty)
+  /** `df` without the rows whose key is archived; called under the lease. */
+  private def unarchived(df: DataFrame): DataFrame =
+    archive().fold(df)(a => df.join(a.select(keyCols: _*), keys, "left_anti"))
 
   /** Un-folded delta batches as one merged frame: earliest batch wins per
     * key (batch names are zero-padded epoch millis, so the string min is
     * the numeric min). None when no live batch exists. */
-  private def deltaView: Option[DataFrame] = {
-    val folded = foldedNames
-    val dirs = Option(deltaRoot.toFile.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("d")
-        && !folded(f.getName))
-      .map(_.toString).sorted
+  private def deltaView(folded: Set[String]): Option[DataFrame] = {
+    val dirs = subdirs(deltaRoot, "d").filterNot(folded)
+      .map(deltaRoot.resolve(_).toString)
     if (dirs.isEmpty) None
     else {
-      import org.apache.spark.sql.functions._
-      val df = spark.read.parquet(dirs.toSeq: _*)
+      import org.apache.spark.sql.functions.{input_file_name, min_by, regexp_extract, struct}
+      val df = Fs.readParquet(spark, dirs: _*)
       val others = df.columns.filterNot(keys.contains).toSeq
       if (others.isEmpty) Some(df.dropDuplicates(keys))
       // min_by on the batch name alone: non-key payloads may carry Map
@@ -273,7 +336,7 @@ final class StateTable(spark: SparkSession, dir: String, keys: Seq[String],
       // not an ordering over the payload
       else Some(df
         .withColumn("_b", regexp_extract(input_file_name(), "/(d[^/]+)/[^/]+$", 1))
-        .groupBy(keys.map(col): _*)
+        .groupBy(keyCols: _*)
         .agg(min_by(struct(others.map(col): _*), col("_b")).as("_w"))
         .select(df.columns.toSeq.map(n =>
           if (keys.contains(n)) col(n) else col("_w").getField(n).as(n)): _*))
@@ -281,179 +344,46 @@ final class StateTable(spark: SparkSession, dir: String, keys: Seq[String],
   }
 
   /** MERGE: existing rows win, new rows insert; first commit just inserts.
-    * `refreshCols` defaults EMPTY here — a generic state table keeps strict
-    * insert-only MERGE semantics regardless of its schema; callers wanting
-    * the queue's `$set {classification, priority, update_time}` refresh
-    * (Q2) opt in explicitly. The lease spans the read AND the commit —
-    * the whole read-modify-write is writer-exclusive, which is exactly
-    * the lost-update window a commit-only lock would leave open. */
+    * Rows whose key is archived are dropped first (the live/archive
+    * invariant). `refreshCols` defaults EMPTY here — a generic state
+    * table keeps strict insert-only MERGE semantics regardless of its
+    * schema; callers wanting the queue's `$set {classification, priority,
+    * update_time}` refresh (Q2) opt in explicitly. The lease spans the
+    * read AND the commit — the whole read-modify-write is
+    * writer-exclusive, which is exactly the lost-update window a
+    * commit-only lock would leave open. */
   def upsert(incoming: DataFrame, refreshCols: Seq[String] = Seq.empty): Long =
     withWriterLease {
-      commit(read().map(Queue.upsert(_, incoming, keys, refreshCols))
-        .getOrElse(incoming))
+      val fresh = unarchived(incoming)
+      commit(read().map(Queue.upsert(_, fresh, keys, refreshCols)).getOrElse(fresh))
     }
 
-  /** Apply a whole-table transformation transactionally (e.g. a Q1 status
-    * transition). No-op (and no new version) before the first commit.
-    * Lease spans read + commit (see [[upsert]]). */
-  def update(f: DataFrame => DataFrame): Option[Long] =
-    withWriterLease { read().map(f).map(commit) }
-
-  private val archiveRoot = root.resolve("_archive")
-  // names of batch dirs already merged into a combined batch, awaiting
-  // their deferred sweep (see [[consolidateArchive]])
-  private val doomedMarker = archiveRoot.resolve("_doomed.txt")
-
-  private def doomedNames: Set[String] =
-    if (Files.exists(doomedMarker))
-      Files.readString(doomedMarker).split("\n").filter(_.nonEmpty).toSet
-    else Set.empty
-
-  /** Reap `.tmp_*` write-staging dirs abandoned by crashed
-    * compact/consolidate/append attempts: per-attempt-unique names mean
-    * no retry ever overwrites them, so without this they accumulate
-    * forever (a consolidation tmp alone is a full archive copy). Only
-    * stale subtrees go, never an in-flight write ([[Fs.reapStale]]). */
-  private def reapStaleTmp(): Unit = Fs.reapStale(archiveRoot, ".tmp")
-
-  /** Archived (terminal-history) rows, if any — one append-only batch per
-    * [[compact]] call, read back as ONE multi-path scan, deduped by key:
-    * archived rows are terminal (their content never changes), so a key
-    * transiently present in two batches — a [[consolidateArchive]] that
-    * crashed between its atomic move and the old-dir sweep — yields one
-    * row, not duplicates, for every reader. The winner is DETERMINISTIC:
-    * max (numeric batch version, batch name) per key — the version is
-    * PARSED out of the `b<version>_<uuid>` name rather than compared
-    * lexicographically, because unpadded names invert at ten (`"b10_x"`
-    * sorts below `"b2_y"` as strings, which would hand the win to the
-    * OLDER batch). Not dropDuplicates' arbitrary pick — so even if a
-    * future writer ever violated terminal-immutability across batches,
-    * every reader would still agree on the newest row rather than
-    * diverge run-to-run. */
-  def archive(): Option[DataFrame] = {
-    val doomed = doomedNames
-    val batches = Option(archiveRoot.toFile.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("b")
-        && !doomed(f.getName))
-      .map(_.toString).sorted
-    if (batches.isEmpty) None
-    else {
-      import org.apache.spark.sql.functions._
-      val df = spark.read.parquet(batches.toSeq: _*)
-      val others = df.columns.filterNot(keys.contains).toSeq
-      if (others.isEmpty) Some(df.dropDuplicates(keys))
-      else Some(df
-        .withColumn("_b", regexp_extract(input_file_name(), "/(b[^/]+)/[^/]+$", 1))
-        .withColumn("_bv", regexp_extract(col("_b"), "^b(\\d+)", 1).cast("long"))
-        .groupBy(keys.map(col): _*)
-        .agg(max_by(struct(others.map(col): _*),
-          struct(col("_bv"), col("_b"))).as("_w"))
-        // restore the original column order and names
-        .select(df.columns.toSeq.map(n =>
-          if (keys.contains(n)) col(n) else col("_w").getField(n).as(n)): _*))
+  /** Move finished rows from the live table to the archive in ONE commit.
+    * `rows` carry their final content (e.g. a terminal status) and must be
+    * key-unique; rows whose key is not live under the lease are dropped,
+    * so no key is ever archived twice. The rows land as one new batch dir
+    * — or, once the current list already holds 16 batches, as one
+    * combined batch of the listed batches plus the rows, so a reader's
+    * archive scan stays a bounded number of dirs — and the new version
+    * publishes live minus those keys together with the new list. A crash
+    * before the pointer swap leaves an unlisted batch that no reader sees
+    * and [[vacuum]] reaps; the replaced batches of a combine stay on disk
+    * while any retained version lists them. None (and no commit) while
+    * the table has no live view. */
+  def retire(rows: DataFrame): Option[Long] = withWriterLease {
+    val dn = currentDirName
+    liveAt(dn).map { live =>
+      val batch = rows.join(live.select(keyCols: _*), keys, "left_semi")
+      val batches = archived(dn)
+      val name = s"b${dn.fold(0L)(versionOf(_) + 1)}_$uuid8"
+      // one tick's rows are few: one file, as for a delta batch
+      val (written, list) =
+        if (batches.size < 16) (batch.coalesce(1), batches :+ name)
+        else (Fs.readParquet(spark, batchDirs(batches): _*).unionByName(batch), Seq(name))
+      written.write.parquet(archiveRoot.resolve(name).toString)
+      publish(live.join(rows.select(keyCols: _*), keys, "left_anti"), list)
     }
   }
-
-  /** Bound the archive's DIRECTORY count: [[compact]] appends one batch
-    * dir per call, and a frequent consumer (the engine's
-    * submit-idempotence anti-join) would otherwise pay a multi-path scan
-    * over thousands of tiny dirs after months of ticks. Above
-    * `maxBatches`, merge everything into ONE combined batch under the
-    * same write-temp + atomic-move discipline.
-    *
-    * The merged dirs are NOT deleted immediately: they go on a doomed
-    * list ([[archive]] skips them) and are swept at the NEXT call — a
-    * reader that listed the batch dirs before the merge keeps resolvable
-    * paths for at least one full cycle, the same grace [[vacuum]]'s
-    * version slack gives live readers (an immediate sweep made any held
-    * lazy archive frame fail with FileNotFound mid-tick). Crash windows:
-    * dying after the combined move but before the doomed write leaves
-    * old + combined visible together — identical terminal content, so
-    * [[archive]]'s key-dedup hides it and the next call re-merges; dying
-    * mid-sweep leaves doomed entries whose dirs are already gone —
-    * [[deleteTree]] is a no-op on missing paths. */
-  def consolidateArchive(maxBatches: Int = 16): Unit = withWriterLease {
-    reapStaleTmp()
-    // phase 2 of the PREVIOUS consolidation: sweep what it doomed
-    doomedNames.foreach(n => Fs.deleteTree(archiveRoot.resolve(n)))
-    if (Files.exists(doomedMarker)) Files.delete(doomedMarker)
-    val batches = Option(archiveRoot.toFile.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("b")).sortBy(_.getName)
-    if (batches.length > maxBatches) {
-      val combined = spark.read.parquet(batches.map(_.toString).toSeq: _*)
-        .dropDuplicates(keys)
-      val name = s"b${currentVersion.getOrElse(0L)}_c" +
-        java.util.UUID.randomUUID().toString.take(8)
-      val tmp = archiveRoot.resolve(s".tmp_$name")
-      combined.write.mode("overwrite").parquet(tmp.toString)
-      Files.move(tmp, archiveRoot.resolve(name), StandardCopyOption.ATOMIC_MOVE)
-      // phase 1: doom the merged dirs (write-temp + atomic move)
-      val markerTmp = archiveRoot.resolve(".tmp_doomed")
-      Files.writeString(markerTmp, batches.map(_.getName).mkString("\n"))
-      Files.move(markerTmp, doomedMarker, StandardCopyOption.ATOMIC_MOVE,
-        StandardCopyOption.REPLACE_EXISTING)
-    }
-  }
-
-  /** Live ∪ archive — the full-history view ([[read]] is the live view).
-    * Live wins on key overlap: a compaction that archived rows but
-    * crashed before committing their removal leaves the same key on both
-    * sides until the retry — this view must not show it twice. */
-  def readAll(): Option[DataFrame] = (read(), archive()) match {
-    case (Some(l), Some(a)) =>
-      val keyCols = keys.map(org.apache.spark.sql.functions.col)
-      Some(l.unionByName(a.join(l.select(keyCols: _*), keys, "left_anti")))
-    case (l, a) => l.orElse(a)
-  }
-
-  /** Terminal-state compaction: `doomed` selects rows that are finished
-    * (terminal status, aged out, …); they move from the live snapshot into
-    * an append-only archive batch. [[vacuum]] bounds VERSIONS — this
-    * bounds live ROWS, so a scan of the live table stays proportional to
-    * in-flight work even after millions of completed rows. History stays
-    * durable and queryable through [[archive]]/[[readAll]].
-    *
-    * Crash safety: rows already present in the archive are excluded from
-    * the new batch (one anti-join), so a compaction that died between the
-    * archive write and the commit cannot double-archive its rows on retry
-    * — even when unrelated commits bumped the version in between (batch
-    * dirs are never assumed re-runnable in place). If everything doomed
-    * was already archived by such a crashed attempt, the batch write is
-    * skipped but the live removal still commits. Returns the new live
-    * version, or None when nothing matched. */
-  def compact(doomed: DataFrame => DataFrame): Option[Long] =
-    withWriterLease { read().flatMap { df =>
-      val keyCols = keys.map(org.apache.spark.sql.functions.col)
-      val dead = doomed(df)
-      if (dead.isEmpty) None
-      else {
-        val unarchived = archive() match {
-          case Some(a) => dead.join(a.select(keyCols: _*), keys, "left_anti")
-          case None => dead
-        }
-        if (!unarchived.isEmpty) {
-          Files.createDirectories(archiveRoot)
-          reapStaleTmp()
-          // write-temp + ATOMIC move under a per-attempt unique name:
-          // [[archive]] has no _SUCCESS gate, so a torn direct write at a
-          // version-derived path would (a) be read back as real rows and
-          // (b) be OVERWRITTEN by a same-version retry — whose anti-join
-          // excluded the torn rows — permanently losing the partially
-          // archived rows from both live and archive. Dot-prefixed tmp
-          // dirs are invisible to archive(); an abandoned tmp from a
-          // crashed attempt is dead weight, never data.
-          // getOrElse: a DELTA-ONLY table (appendDelta before any full
-          // commit) compacts from the merged view with no snapshot version
-          val batch = s"b${currentVersion.getOrElse(0L)}_" +
-            java.util.UUID.randomUUID().toString.take(8)
-          val tmp = archiveRoot.resolve(s".tmp_$batch")
-          unarchived.write.mode("overwrite").parquet(tmp.toString)
-          Files.move(tmp, archiveRoot.resolve(batch),
-            StandardCopyOption.ATOMIC_MOVE)
-        }
-        Some(commit(df.join(dead.select(keyCols: _*), keys, "left_anti")))
-      }
-    } }
 
   private def versionDirs: Seq[java.io.File] =
     if (!Files.exists(root)) Seq.empty
@@ -472,7 +402,15 @@ final class StateTable(spark: SparkSession, dir: String, keys: Seq[String],
   /** Drop all but the newest `keep` versions — plus unreferenced
     * same-number TWINS of the current version (the garbage a losing
     * writer's per-writer-unique dir becomes when its pointer swap
-    * aborted; twins at older numbers age out with their number).
+    * aborted; twins at older numbers age out with their number) — and
+    * the archive batches no version left on disk lists. A batch thus
+    * stays while any retained version lists it (a reader holding an
+    * older version's lazy archive frame keeps resolvable paths for
+    * `keep` versions), and an unlisted one — a crashed [[retire]]'s, or
+    * one a combine replaced — goes once it is out of that window. By the
+    * twin rule's reasoning, only batches named for a version at or below
+    * the current one go: a higher-numbered batch may be another writer's,
+    * not yet published.
     *
     * The pointer is read ONCE and both the version number and the twin
     * discriminator derive from that single read (round-15 advisor: the
@@ -491,6 +429,10 @@ final class StateTable(spark: SparkSession, dir: String, keys: Seq[String],
       val n = versionOf(f.getName)
       if ((n <= cur && !keepNums(n)) || (n == cur && f.getName != curName))
         Fs.deleteTree(f.toPath)
+    }
+    val retained = versionDirs.flatMap(f => listed(f.getName, "_ARCHIVE")).toSet
+    subdirs(archiveRoot, "b").foreach { b =>
+      if (versionOf(b) <= cur && !retained(b)) Fs.deleteTree(archiveRoot.resolve(b))
     }
   }
 }

@@ -20,8 +20,8 @@ import graft.model._
   *    table), one status() lookup, then ONE tick() draining the whole
   *    backlog. The requests are fail-fast (unknown extract type →
   *    plan-time -2), so the measurement isolates the queue machinery
-  *    itself — status-filtered pending scan + driver collect + outcome
-  *    commit + terminal compaction + archive consolidation — from the
+  *    itself — status-filtered pending scan + driver collect + one
+  *    retire commit moving the drained rows to the archive — from the
   *    per-request compute floor, which leg 2 prices separately. An empty
   *    follow-up tick gives the post-drain floor (pending scan over an
   *    empty live table with a 10⁵-row archive).

@@ -640,6 +640,79 @@ class EngineSpec extends AnyFunSuite {
     assert(e.tick(base, pixels, locations).isEmpty, "no reprocessing")
   }
 
+  /** The result of `body` and the root paths of every file scan its
+    * queries ran. */
+  def scannedRoots[T](body: => T): (T, Seq[String]) = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val roots = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new QueryExecutionListener {
+      def record(qe: QueryExecution): Unit = qe.optimizedPlan.foreach {
+        case r: LogicalRelation => r.relation match {
+          case h: HadoopFsRelation =>
+            h.location.rootPaths.foreach(p => roots.add(p.toUri.getPath))
+          case _ => ()
+        }
+        case _ => ()
+      }
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = record(qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = record(qe)
+    }
+    org.apache.spark.TestBus.drain(spark.sparkContext)
+    spark.listenerManager.register(l)
+    try {
+      val out = body
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+      (out, roots.toArray(Array.empty[String]).toSeq)
+    } finally spark.listenerManager.unregister(l)
+  }
+
+  test("a tick reads no archive file; a re-submit of an archived id stays idempotent") {
+    val e = newEngine()
+    val archive = s"${e.workRoot}/requests/_archive/"
+    e.submitAll(Seq(request, request.copy(id = "req-2")))
+    assert(e.tick(base, pixels, locations) == Map("req-1" -> 1, "req-2" -> 1))
+    e.submit(request.copy(id = "req-3"))
+    val (out, roots) = scannedRoots(e.tick(base, pixels, locations))
+    assert(out == Map("req-3" -> 1))
+    assert(roots.exists(_.startsWith(s"${e.workRoot}/requests/")),
+      s"the tick read no request-store file: $roots")
+    assert(!roots.exists(_.startsWith(archive)), s"the tick read the archive: $roots")
+    // a finished id submitted again does not re-enter the queue
+    e.submit(request)
+    val (again, roots2) = scannedRoots(e.tick(base, pixels, locations))
+    assert(again.isEmpty, "an archived id was processed again")
+    assert(!roots2.exists(_.startsWith(archive)), s"the tick read the archive: $roots2")
+    assert(e.status("req-1").contains(1))
+  }
+
+  test("a tick that drains requests commits one request-store version and " +
+    "one archive batch; a tick with nothing pending commits nothing") {
+    val e = newEngine()
+    val store = java.nio.file.Paths.get(e.workRoot, "requests")
+    def version: Long = {
+      val p = store.resolve("_CURRENT")
+      if (!Files.exists(p)) -1L else Files.readString(p).trim.drop(1).takeWhile(_.isDigit).toLong
+    }
+    def dirs(under: java.nio.file.Path): Set[String] =
+      Option(under.toFile.listFiles()).getOrElse(Array.empty)
+        .filter(_.isDirectory).map(_.getName).toSet
+    e.submitAll(Seq(request, request.copy(id = "req-2")))
+    assert(e.tick(base, pixels, locations).size == 2)
+    assert(version == 0L, s"the first tick must publish version 0, got $version")
+    assert(dirs(store.resolve("_archive")).size == 1)
+    e.submit(request.copy(id = "req-3"))
+    assert(e.tick(base, pixels, locations) == Map("req-3" -> 1))
+    assert(version == 1L, s"a draining tick must advance one version, got $version")
+    assert(dirs(store.resolve("_archive")).size == 2, "a draining tick writes one batch")
+    val before = (Files.readString(store.resolve("_CURRENT")), dirs(store),
+      dirs(store.resolve("_archive")))
+    assert(e.tick(base, pixels, locations).isEmpty)
+    assert((Files.readString(store.resolve("_CURRENT")), dirs(store),
+      dirs(store.resolve("_archive"))) == before, "an idle tick committed")
+  }
+
   test("golden fixture request: CSV column grammar and JSON echo are " +
     "byte-stable end-to-end (S5/S6 against the doc_test.py document)") {
     // The captured production request (src/test/resources/

@@ -28,13 +28,14 @@ class StateTableSpec extends AnyFunSuite {
     assert(t.versions == Seq(0L, 1L))
   }
 
-  test("update applies a transactional transition (Q1)") {
+  test("retire moves rows with their final status from live to the archive " +
+    "in one version (Q1)") {
     val t = fresh()
     t.commit(Seq((1L, 0), (2L, 0)).toDF("id", "status"))
-    t.update(df => df.withColumn("status",
-      when(col("id") === 2L, 2).otherwise(col("status"))))
-    val out = t.read().get.as[(Long, Int)].collect().toMap
-    assert(out == Map(1L -> 0, 2L -> 2))
+    assert(t.retire(Seq((2L, 2)).toDF("id", "status")) == Some(1L))
+    assert(t.versions == Seq(0L, 1L))
+    assert(t.read().get.as[(Long, Int)].collect().toMap == Map(1L -> 0))
+    assert(t.archive().get.as[(Long, Int)].collect().toMap == Map(2L -> 2))
   }
 
   test("old versions remain readable until vacuum") {
@@ -46,104 +47,179 @@ class StateTableSpec extends AnyFunSuite {
     assert(t.read().get.as[(Long, Int)].collect().head == ((3L, 3)))
   }
 
-  test("compact moves terminal rows to the archive; live stays bounded") {
+  /** The rows of `df` as (id, status) pairs sorted by id (empty when absent). */
+  def rows(df: Option[org.apache.spark.sql.DataFrame]): Seq[(Long, Int)] =
+    df.map(_.as[(Long, Int)].collect().toSeq.sortBy(_._1)).getOrElse(Seq.empty)
+
+  /** The batch dirs on disk under `dir`'s archive, by name. */
+  def batchDirs(dir: String): Seq[String] =
+    Option(new java.io.File(dir, "_archive").listFiles()).getOrElse(Array.empty)
+      .filter(f => f.isDirectory && f.getName.startsWith("b")).map(_.getName).sorted.toSeq
+
+  /** The batch names the current version of the table at `dir` lists. */
+  def listedBatches(dir: String): Seq[String] = {
+    val cur = Files.readString(java.nio.file.Paths.get(dir, "_CURRENT")).trim
+    Files.readString(java.nio.file.Paths.get(dir, cur, "_ARCHIVE"))
+      .split("\n").filter(_.nonEmpty).toSeq
+  }
+
+  /** A UDF for the rows' key column that throws once a batch dir that was
+    * not under `dir`'s archive when the UDF was made is complete: retire
+    * writes its batch from the rows, then reads them again for the live
+    * snapshot it commits, so the throw lands after the batch write and
+    * before the pointer swap (local mode: executor == this JVM/FS). */
+  def crashAfterBatch(dir: String) = {
+    val published = batchDirs(dir).toSet
+    val archiveDir = s"$dir/_archive"
+    udf { (x: Long) =>
+      if (Option(new java.io.File(archiveDir).listFiles()).getOrElse(Array.empty)
+          .exists(f => !published(f.getName) && new java.io.File(f, "_SUCCESS").exists()))
+        throw new IllegalStateException("crash before the pointer swap")
+      x
+    }
+  }
+
+  test("retire moves finished rows to the archive; live stays bounded; " +
+    "rows whose key is not live are dropped") {
     val t = fresh()
     t.commit(Seq((1L, 1), (2L, 0), (3L, -2), (4L, -1)).toDF("id", "status"))
-    assert(t.compact(_.filter(col("status").isin(1, -2))).isDefined)
+    t.retire(Seq((1L, 1), (3L, -2)).toDF("id", "status"))
     // live = in-flight only
-    assert(t.read().get.as[(Long, Int)].collect().toMap == Map(2L -> 0, 4L -> -1))
+    assert(rows(t.read()) == Seq(2L -> 0, 4L -> -1))
     // archive holds the terminal history; readAll is the union
-    assert(t.archive().get.as[(Long, Int)].collect().toMap == Map(1L -> 1, 3L -> -2))
+    assert(rows(t.archive()) == Seq(1L -> 1, 3L -> -2))
     assert(t.readAll().get.count() == 4)
-    // nothing terminal left: no new version, no empty archive batch
-    val vBefore = t.versions.size
-    assert(t.compact(_.filter(col("status").isin(1, -2))).isEmpty)
-    assert(t.versions.size == vBefore)
-    // later completions append a second batch; both batches stay readable
-    t.update(df => df.withColumn("status",
-      when(col("id") === 2L, 1).otherwise(col("status"))))
-    t.compact(_.filter(col("status").isin(1, -2)))
-    assert(t.read().get.as[(Long, Int)].collect().toMap == Map(4L -> -1))
-    assert(t.archive().get.count() == 3)
-    assert(t.readAll().get.count() == 4)
+    // a later retire appends a second batch; an archived key (1) and an
+    // unknown one (9) are not live, so neither lands in the archive
+    t.retire(Seq((2L, 1), (1L, -2), (9L, 1)).toDF("id", "status"))
+    assert(rows(t.read()) == Seq(4L -> -1))
+    assert(rows(t.archive()) == Seq(1L -> 1, 2L -> 1, 3L -> -2))
+    assert(rows(t.readAll()).size == 4)
   }
 
-  test("compact retry after a crash between archive write and commit") {
+  test("retire is atomic: a crash after the batch write and before the " +
+    "pointer swap changes no view, and vacuum reaps the unlisted batch") {
     val dir = Files.createTempDirectory("graft_state").toString
     val t = new StateTable(spark, dir, Seq("id"))
-    t.commit(Seq((1L, 1), (2L, 0)).toDF("id", "status"))
-    // simulate the crashed first attempt: the archive batch landed (with
-    // the then-live status), but the live-removal commit was lost
-    Seq((1L, 99)).toDF("id", "status")
-      .write.parquet(s"$dir/_archive/b999")
-    // overlap window: key 1 is on both sides — readAll shows it ONCE,
-    // live value winning
-    assert(t.readAll().get.count() == 2)
-    assert(t.readAll().get.filter(col("id") === 1L)
-      .as[(Long, Int)].collect().toSeq == Seq((1L, 1)))
-    // retry: must not double-archive key 1, but must still remove it live
-    assert(t.compact(_.filter(col("status") === 1)).isDefined)
-    assert(t.read().get.as[(Long, Int)].collect().toMap == Map(2L -> 0))
-    assert(t.archive().get.filter(col("id") === 1L).count() == 1)
-    assert(t.readAll().get.count() == 2)
+    t.commit(Seq((1L, 0), (2L, 0), (3L, 0), (4L, 0)).toDF("id", "status"))
+    t.retire(Seq((1L, 1)).toDF("id", "status"))
+    val views = () => (rows(t.read()), rows(t.archive()), rows(t.readAll()))
+    val before = views()
+    val published = batchDirs(dir).toSet
+    intercept[Exception](t.retire(Seq((2L, 1), (3L, -2)).toDF("id", "status")
+      .withColumn("id", crashAfterBatch(dir)(col("id")))))
+    val orphan = batchDirs(dir).filterNot(published)
+    assert(orphan.size == 1, s"the batch write did not happen: ${batchDirs(dir)}")
+    assert(views() == before, "a crashed retire changed what readers see")
+    // named for the version it would have published, above the current
+    // one: vacuum leaves it (it could be another writer's batch in flight)
+    t.vacuum(keep = 1)
+    assert(batchDirs(dir).contains(orphan.head))
+    // the next retire succeeds, and no key is both live and archived
+    t.retire(Seq((2L, 1), (3L, -2)).toDF("id", "status"))
+    assert(rows(t.read()) == Seq(4L -> 0))
+    assert(rows(t.archive()) == Seq(1L -> 1, 2L -> 1, 3L -> -2))
+    assert(rows(t.readAll()).map(_._1) == Seq(1L, 2L, 3L, 4L))
+    // now at or below the current version and listed by no version: reaped
+    t.vacuum(keep = 1)
+    assert(!batchDirs(dir).contains(orphan.head), "the unlisted batch survived vacuum")
+    assert(batchDirs(dir).toSet == listedBatches(dir).toSet)
+    assert(rows(t.archive()) == Seq(1L -> 1, 2L -> 1, 3L -> -2))
   }
 
-  test("consolidateArchive merges batch dirs two-phase; readers keep one cycle of grace") {
+  test("retire combines 16 listed batches into one; a replaced batch stays " +
+    "while a retained version lists it") {
     val dir = Files.createTempDirectory("graft_state").toString
     val t = new StateTable(spark, dir, Seq("id"))
-    // 6 compacting rounds -> 6 archive batch dirs
-    t.commit((1L to 6L).map(i => (i, 0)).toDF("id", "status"))
-    (1L to 6L).foreach { i =>
-      t.update(df => df.withColumn("status",
-        when(col("id") === i, 1).otherwise(col("status"))))
-      t.compact(_.filter(col("status") === 1))
+    t.commit((1L to 18L).map(i => (i, 0)).toDF("id", "status"))
+    (1L to 16L).foreach(i => t.retire(Seq((i, 1)).toDF("id", "status")))
+    assert(listedBatches(dir).size == 16 && batchDirs(dir).size == 16)
+    // a reader holding the archive as it was before the combine
+    val held = t.archive().get
+    t.retire(Seq((17L, 1)).toDF("id", "status"))
+    assert(listedBatches(dir).size == 1, "the 17th retire must combine")
+    assert(rows(t.archive()) == (1L to 17L).map(_ -> 1))
+    assert(batchDirs(dir).size == 17, "replaced batches must stay on disk")
+    // the previous version still lists them: they survive its retention
+    t.vacuum(keep = 2)
+    assert(batchDirs(dir).size == 17)
+    assert(held.count() == 16, "a held archive frame lost its files")
+    // the next retire appends to the combined batch; once no retained
+    // version lists the replaced batches, vacuum reaps them (versions
+    // past ten compare as numbers, not as names)
+    t.retire(Seq((18L, 1)).toDF("id", "status"))
+    assert(listedBatches(dir).size == 2)
+    t.vacuum(keep = 2)
+    assert(batchDirs(dir) == listedBatches(dir).sorted)
+    assert(rows(t.archive()) == (1L to 18L).map(_ -> 1))
+    assert(t.read().get.isEmpty)
+  }
+
+  test("appendDelta and upsert drop rows whose key is archived: a key is " +
+    "live or archived, never both") {
+    val t = fresh()
+    t.commit(Seq((1L, 0), (2L, 0)).toDF("id", "status"))
+    t.retire(Seq((1L, 1)).toDF("id", "status"))
+    t.appendDelta(Seq((1L, -1), (3L, -1)).toDF("id", "status"))
+    assert(rows(t.read()) == Seq(2L -> 0, 3L -> -1))
+    t.upsert(Seq((1L, -1), (4L, -1)).toDF("id", "status"))
+    assert(rows(t.read()) == Seq(2L -> 0, 3L -> -1, 4L -> -1))
+    assert(rows(t.archive()) == Seq(1L -> 1))
+    assert(rows(t.readAll()).map(_._1) == Seq(1L, 2L, 3L, 4L))
+  }
+
+  /** The result of `body` and the number of Spark jobs it started. */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    org.apache.spark.TestBus.drain(sc)
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet(): Unit
     }
-    def batchDirs = Option(new java.io.File(s"$dir/_archive").listFiles())
-      .getOrElse(Array.empty).filter(f => f.isDirectory && f.getName.startsWith("b"))
-    assert(batchDirs.length == 6)
-    assert(t.archive().get.count() == 6)
-    // below the threshold: no-op
-    t.consolidateArchive(maxBatches = 16)
-    assert(batchDirs.length == 6)
-    // above the threshold, PHASE 1: combined batch written, old dirs
-    // doomed but STILL ON DISK (a reader that listed them mid-tick keeps
-    // resolvable paths), archive() already excludes them
-    t.consolidateArchive(maxBatches = 4)
-    assert(batchDirs.length == 7, "old dirs must survive one cycle")
-    assert(t.archive().get.count() == 6)
-    assert(t.archive().get.as[(Long, Int)].collect().toMap ==
-      (1L to 6L).map(_ -> 1).toMap)
-    // PHASE 2 (the next call): doomed dirs swept
-    t.consolidateArchive(maxBatches = 16)
-    assert(batchDirs.length == 1, s"expected 1 combined dir, got ${batchDirs.length}")
-    assert(t.archive().get.count() == 6)
-    // crash-between-move-and-doom simulation: an old-content batch dir
-    // sits next to the combined one -- key-dedup hides it from readers
-    t.archive().get.filter(col("id") === 3L)
-      .write.parquet(s"$dir/_archive/b0_leftover")
-    assert(batchDirs.length == 2)
-    assert(t.archive().get.count() == 6, "key-dedup must hide the leftover")
-    assert(t.readAll().get.count() == 6)
-    // a full consolidation cycle absorbs and then sweeps it
-    t.consolidateArchive(maxBatches = 1)
-    t.consolidateArchive(maxBatches = 1)
-    assert(batchDirs.length == 1 && t.archive().get.count() == 6)
+    sc.addSparkListener(l)
+    try {
+      val out = body
+      org.apache.spark.TestBus.drain(sc)
+      (out, n.get)
+    } finally sc.removeSparkListener(l)
   }
 
-  test("archive winner parses the numeric batch version: b10 beats b2 " +
-    "despite sorting below it lexicographically") {
-    // Batch names are unpadded (b<version>_<uuid>), so string max inverts
-    // at ten: "b10_x" < "b2_y". The winner must come from the NEWEST
-    // version; a lexicographic pick would deterministically hand every
-    // cross-batch rewrite to the stale row once a table reaches v10.
+  test("read(), archive() and readAll() launch no job until an action " +
+    "runs, also over a drained, empty snapshot") {
+    val t = fresh()
+    t.commit(Seq((1L, 0), (2L, 0)).toDF("id", "status"))
+    t.appendDelta(Seq((3L, -1)).toDF("id", "status"))
+    t.retire(Seq((1L, 1)).toDF("id", "status"))
+    t.appendDelta(Seq((4L, -1)).toDF("id", "status"))
+    val ((l, a, all), jobs) = jobsDuring((t.read().get, t.archive().get, t.readAll().get))
+    assert(jobs == 0, s"building the views launched $jobs job(s)")
+    assert(rows(Some(l)) == Seq(2L -> 0, 3L -> -1, 4L -> -1))
+    assert(rows(Some(a)) == Seq(1L -> 1))
+    assert(rows(Some(all)).map(_._1) == Seq(1L, 2L, 3L, 4L))
+    // drain the live table: its snapshot is an empty write
+    t.retire(Seq((2L, 1), (3L, 1), (4L, -2)).toDF("id", "status"))
+    val ((l2, all2), jobs2) = jobsDuring((t.read().get, t.readAll().get))
+    assert(jobs2 == 0, s"building the drained views launched $jobs2 job(s)")
+    assert(l2.schema.fieldNames.toSeq == Seq("id", "status"))
+    assert(l2.isEmpty && all2.count() == 4)
+  }
+
+  test("a table whose archive batches its current version does not list " +
+    "(the older layout) fails loudly at construction") {
     val dir = Files.createTempDirectory("graft_state").toString
-    val t = new StateTable(spark, dir, Seq("id"))
-    Seq((1L, 2)).toDF("id", "status").write.parquet(s"$dir/_archive/b2_old")
-    Seq((1L, 10)).toDF("id", "status").write.parquet(s"$dir/_archive/b10_new")
-    assert(t.archive().get.as[(Long, Int)].collect().toMap == Map(1L -> 10))
-    // and the consolidated-batch name form (b<version>_c<uuid>) parses too
-    Seq((1L, 11)).toDF("id", "status").write.parquet(s"$dir/_archive/b11_cabc")
-    assert(t.archive().get.as[(Long, Int)].collect().toMap == Map(1L -> 11))
+    new StateTable(spark, dir, Seq("id")).commit(Seq((1L, 0)).toDF("id", "status"))
+    // the older layout: batches under _archive/, no list in any version
+    Seq((9L, 1)).toDF("id", "status").write.parquet(s"$dir/_archive/b0_old")
+    val list = java.nio.file.Paths.get(dir,
+      Files.readString(java.nio.file.Paths.get(dir, "_CURRENT")).trim, "_ARCHIVE")
+    Files.delete(list)
+    val err = intercept[IllegalArgumentException](new StateTable(spark, dir, Seq("id")))
+    assert(err.getMessage.contains(s"$dir/_archive"), err.getMessage)
+    assert(err.getMessage.contains("new table dir"), err.getMessage)
+    // with a list (empty here), the same batch is merely unlisted garbage
+    Files.writeString(list, "")
+    assert(rows(new StateTable(spark, dir, Seq("id")).readAll()) == Seq(1L -> 0))
   }
 
   // ---- single-writer lease (the concurrency contract) -------------------
@@ -165,10 +241,10 @@ class StateTableSpec extends AnyFunSuite {
       t.upsert(Seq((2L, 0)).toDF("id", "status"))
     }
     intercept[java.util.ConcurrentModificationException] {
-      t.update(_.withColumn("status", lit(9)))
+      t.appendDelta(Seq((2L, 0)).toDF("id", "status"))
     }
     intercept[java.util.ConcurrentModificationException] {
-      t.compact(_.filter(col("status") === 0))
+      t.retire(Seq((1L, 1)).toDF("id", "status"))
     }
     intercept[java.util.ConcurrentModificationException] { t.vacuum() }
     // readers are never blocked or corrupted by a held lease
@@ -178,8 +254,8 @@ class StateTableSpec extends AnyFunSuite {
     // its own lease afterwards — a second mutation also succeeds)
     Files.delete(lock)
     t.upsert(Seq((2L, 0)).toDF("id", "status"))
-    t.update(_.withColumn("status", col("status") + 1))
-    assert(t.read().get.count() == 2)
+    t.retire(Seq((1L, 1)).toDF("id", "status"))
+    assert(t.read().get.count() == 1 && t.readAll().get.count() == 2)
     assert(!Files.exists(lock), "lease must be released after the mutation")
   }
 
@@ -289,21 +365,18 @@ class StateTableSpec extends AnyFunSuite {
     assert(!Files.exists(java.nio.file.Paths.get(dir, "_LOCK")))
   }
 
-  test("fuzz: 100 random upsert/update/compact/consolidate/restart " +
-    "schedules match an in-memory model (no lost key, live∪archive " +
-    "partition, live stays bounded)") {
-    // The crash-path hardening (archive grace, doomed sweeps, anti-join
-    // re-archive guards) accumulated piecemeal over rounds 4-5; this
-    // model-checks the LAYER'S contract under arbitrary interleavings:
-    //  - upsert is existing-wins MERGE against LIVE rows only (an
-    //    archived id re-enters live — the Engine's archive anti-join is
-    //    the layer above that prevents it; here it must merely not
-    //    corrupt reads: readAll shows live winning);
-    //  - compact moves terminal live rows to the archive, but an id
-    //    ALREADY archived keeps its first archived status (the
-    //    re-archive anti-join) while still leaving the live table;
-    //  - consolidateArchive/restart/stale-tmp litter never change what
-    //    any reader sees.
+  test("fuzz: 100 random upsert/appendDelta/retire/crash-in-retire/vacuum/" +
+    "restart schedules match an in-memory model (no lost key, live and " +
+    "archive disjoint, archive key-unique with no dedup)") {
+    // The layer's contract under arbitrary interleavings:
+    //  - upsert and appendDelta insert new keys only: a live key keeps its
+    //    row, an archived key is dropped (a key is live or archived, never
+    //    both);
+    //  - retire moves the given rows' LIVE keys to the archive with the
+    //    given status and ignores archived or unknown keys;
+    //  - a retire that crashes before its pointer swap, vacuum, restart
+    //    and stale litter (delta staging, an unlisted batch) never change
+    //    what any reader sees.
     for (seed <- 0 until 100) {
       val rnd = new scala.util.Random(seed)
       val dir = Files.createTempDirectory(s"graft_stfuzz$seed").toString
@@ -311,62 +384,70 @@ class StateTableSpec extends AnyFunSuite {
       val liveM = scala.collection.mutable.Map[Long, Int]()
       val archM = scala.collection.mutable.Map[Long, Int]()
       var n = 0L
+      def pick(): Long = {
+        val known = (liveM.keySet ++ archM.keySet).toSeq.sorted
+        known(rnd.nextInt(known.size))
+      }
+      // key-unique batches (the caller's contract, as the Engine dedups)
+      def incoming(): List[(Long, Int)] = (0 until 1 + rnd.nextInt(3)).map { _ =>
+        if ((liveM.nonEmpty || archM.nonEmpty) && rnd.nextInt(3) == 0)
+          (pick(), rnd.nextInt(4) - 2)
+        else { n += 1; (n, -1) }
+      }.toList.distinctBy(_._1)
+      def insert(in: List[(Long, Int)]): Unit = in.foreach { case (id, st) =>
+        if (!liveM.contains(id) && !archM.contains(id)) liveM(id) = st }
+      // finished rows: some live keys, sometimes a known or an unknown stray
+      def finished(): List[(Long, Int)] = {
+        val ids = liveM.keys.toSeq.sorted.filter(_ => rnd.nextBoolean()) ++
+          (if ((liveM.nonEmpty || archM.nonEmpty) && rnd.nextInt(3) == 0) Seq(pick()) else Nil) ++
+          (if (rnd.nextInt(4) == 0) Seq(n + 1000) else Nil)
+        ids.distinct.map(id => (id, if (rnd.nextBoolean()) 1 else -2)).toList
+      }
       for (_ <- 0 until 4 + rnd.nextInt(4)) {
         rnd.nextInt(8) match {
-          case 0 | 1 | 2 => // upsert: new ids + clobber attempts + re-entries
-            // MERGE sources must be key-unique (the Engine dedups its
-            // batches the same way) — keep the first row per id
-            val rows = (0 until 1 + rnd.nextInt(3)).map { _ =>
-              if ((liveM.nonEmpty || archM.nonEmpty) && rnd.nextInt(3) == 0) {
-                val pool = (liveM.keySet ++ archM.keySet).toSeq.sorted
-                (pool(rnd.nextInt(pool.size)), rnd.nextInt(4) - 2)
-              } else { n += 1; (n, -1) }
-            }.toList.distinctBy(_._1)
-            t.upsert(rows.toDF("id", "status"))
-            rows.foreach { case (id, st) =>
-              if (!liveM.contains(id)) liveM(id) = st }
-          case 3 => // transition: -1 -> 0 -> terminal (random terminal)
-            val term = if (rnd.nextBoolean()) 1 else -2
-            t.update(df => df.withColumn("status",
-              when(col("status") === -1, 0)
-                .when(col("status") === 0, term)
-                .otherwise(col("status"))))
-            liveM.mapValuesInPlace((_, s) =>
-              if (s == -1) 0 else if (s == 0) term else s)
-          case 4 => // terminal-state compaction
-            t.compact(_.filter(col("status").isin(1, -2)))
-            liveM.filterInPlace { (id, st) =>
-              val terminal = st == 1 || st == -2
-              if (terminal && !archM.contains(id)) archM(id) = st
-              !terminal
-            }
-          case 5 => // archive-dir bound (semantics-free)
-            t.consolidateArchive(maxBatches = 1 + rnd.nextInt(3))
-          case 6 => // crash + restart
-            t = new StateTable(spark, dir, Seq("id"))
-          case 7 => // abandoned write-staging litter from a crashed attempt
-            val tmp = java.nio.file.Paths.get(dir, "_archive",
-              s".tmp_crashed${rnd.nextInt(100)}")
-            java.nio.file.Files.createDirectories(tmp)
-            tmp.toFile.setLastModified(
-              System.currentTimeMillis() - 2 * 3600 * 1000L): Unit
+          case 0 | 1 =>
+            val in = incoming()
+            t.upsert(in.toDF("id", "status"))
+            insert(in)
+          case 2 =>
+            val in = incoming()
+            t.appendDelta(in.toDF("id", "status"))
+            insert(in)
+          case 3 | 4 =>
+            val done = finished()
+            t.retire(done.toDF("id", "status"))
+            done.foreach { case (id, st) =>
+              if (liveM.remove(id).isDefined) archM(id) = st }
+          case 5 => // crash in retire: after its batch write, before the swap
+            try t.retire(finished().toDF("id", "status")
+              .withColumn("id", crashAfterBatch(dir)(col("id"))))
+            catch { case _: Exception => () }
+          case 6 =>
+            if (rnd.nextBoolean()) t = new StateTable(spark, dir, Seq("id"))
+            else t.vacuum(keep = 1 + rnd.nextInt(4))
+          case 7 => // stale litter: a crashed append's staging dir, and an
+            // unlisted batch named for the next version
+            val tmp = java.nio.file.Paths.get(dir, "_delta", s".tmp_crashed${rnd.nextInt(100)}")
+            Files.createDirectories(tmp)
+            tmp.toFile.setLastModified(System.currentTimeMillis() - 2 * 3600 * 1000L): Unit
+            val next = t.versions.lastOption.fold(0L)(_ + 1)
+            Seq((n + 2000, 1)).toDF("id", "status")
+              .write.parquet(s"$dir/_archive/b${next}_litter${rnd.nextInt(1000)}")
         }
-        // live view must equal the live model EVERY step
-        val live = t.read().map(_.as[(Long, Int)].collect().toMap)
-          .getOrElse(Map.empty)
-        assert(live == liveM.toMap, s"seed=$seed live diverged")
+        // every reader's view equals the model EVERY step
+        val live = rows(t.read())
+        val arch = rows(t.archive())
+        assert(live.toMap == liveM.toMap && live.size == liveM.size,
+          s"seed=$seed live diverged: $live")
+        assert(arch.toMap == archM.toMap && arch.size == archM.size,
+          s"seed=$seed archive diverged or holds a key twice: $arch")
+        assert(live.map(_._1).intersect(arch.map(_._1)).isEmpty,
+          s"seed=$seed a key is both live and archived")
       }
-      // full-history view: live wins, archive fills in, nothing lost
-      val expectAll = archM.toMap ++ liveM.toMap
-      val all = t.readAll().map(_.as[(Long, Int)].collect()).getOrElse(Array.empty)
-      assert(all.map(_._1).distinct.length == all.length,
-        s"seed=$seed readAll must be key-unique")
-      assert(all.toMap == expectAll, s"seed=$seed history diverged")
-      // the archive holds only terminal statuses
-      t.archive().foreach { a =>
-        val bad = a.filter(!col("status").isin(1, -2)).count()
-        assert(bad == 0, s"seed=$seed non-terminal rows in the archive")
-      }
+      val all = rows(t.readAll())
+      assert(all.map(_._1).distinct.size == all.size, s"seed=$seed readAll must be key-unique")
+      assert(all.toMap == (archM ++ liveM).toMap, s"seed=$seed history diverged")
+      assert(all.size == archM.size + liveM.size)
     }
   }
 
@@ -418,9 +499,9 @@ class StateTableSpec extends AnyFunSuite {
     val t = new StateTable(spark, dir, Seq("id"))
     t.commit(Seq((1L, 0)).toDF("id", "status"))
     t.appendDelta(Seq((2L, 1)).toDF("id", "status"))
-    // fold the delta, then compact the delta-born key to the archive
-    t.update(identity)
-    t.compact(_.filter(col("id") === 2L))
+    // fold the delta, then retire the delta-born key to the archive
+    t.commit(t.read().get)
+    t.retire(Seq((2L, 1)).toDF("id", "status"))
     // the delta dir may still exist on disk (one-cycle grace) — the live
     // view must NOT resurrect id=2 from it
     val live = t.read().get.as[(Long, Int)].collect().toMap
