@@ -51,22 +51,21 @@ final class Engine(val spark: SparkSession, workDir: String) {
     * O(batch), not O(live): a snapshot MERGE per submit rewrites the live
     * queue every time (measured ~1.2 s per +1k batch against a 10⁵-row
     * live queue, DriveQueueScale r13 — the lifecycle's one
-    * super-linear-in-live write). The deltas merge
-    * into every read immediately (snapshot wins on key overlap — the
-    * same insert-only MERGE semantics) and fold into the snapshot at the
-    * next tick's commit. Idempotence spans the whole history: the store
-    * drops an id that a tick already retired to its archive, checked
-    * under its writer lease, so a re-submit racing that tick cannot
-    * re-enter the queue either (the reference's find-then-insert runs
-    * against the full collection, which never forgets a completed id). */
+    * super-linear-in-live write). The delta is visible to every read
+    * immediately and folds into the snapshot at the next tick's commit.
+    * Idempotence is decided at insert time, over the whole history: the
+    * store drops an id it already holds — live, in an earlier batch, or
+    * retired to its archive — checked under its writer lease, so a
+    * re-submit keeps the first body and one racing a tick cannot re-enter
+    * the queue either (the reference's find-then-insert runs against the
+    * full collection, which never forgets a completed id). */
   def submitAll(reqs: Seq[Request]): Seq[String] = {
     if (reqs.isEmpty) return Seq.empty
     val ts = now()
     val stamped = reqs.map(r =>
       r.copy(status = -1, stage = Seq(StageTime("submit", ts))))
     // appendDelta's contract: key-unique batches — keep the first body
-    // per id; cross-batch re-submits resolve earliest-wins at read time,
-    // the same first-body-kept semantics the snapshot MERGE gave. No
+    // per id here; the store drops an id an earlier batch holds. No
     // version commits here, so no per-submit vacuum: versions only move
     // at tick time, where the deltas fold and vacuum runs.
     requests.appendDelta(stamped.groupBy(_.id).map(_._2.head).toSeq.toDS().toDF())

@@ -238,20 +238,6 @@ final class Pipeline(
         (-2, "")
     }
   }
-
-  /** One cron tick (§3.1): the queue head's requests start in priority
-    * order ([[drainOrder]]), up to one per core in flight
-    * ([[Pipeline.inFlight]]), and each is processed end-to-end
-    * ([[process]]); requests that need the same work item or merged
-    * result share one fill. `queue` is the request state table; only the
-    * (small) queue head is collected. Returns (request id, final status,
-    * merged result's cache entry) in priority order. */
-  def tick(queue: Seq[Request], base: DataFrame, pixels: DataFrame,
-      locations: DataFrame): Seq[(String, Int, String)] =
-    Pipeline.inFlight(spark, drainOrder(queue)) { req =>
-      val (status, entry) = process(req, base, pixels, locations)
-      (req.id, status, entry)
-    }
 }
 
 object Pipeline {

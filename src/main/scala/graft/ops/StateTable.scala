@@ -1,8 +1,11 @@
 package graft.ops
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.InSet
+import org.apache.spark.sql.functions.{col, struct}
+import org.apache.spark.sql.graft.Bridge
 
 /** Versioned Parquet state table — the offline stand-in for the reference's
   * mutable Mongo collections (`asdf.det` / `asdf.extracts` / `asdf.msr`,
@@ -18,11 +21,14 @@ import org.apache.spark.sql.functions.col
   * once sees one consistent table, and a batch no published version
   * lists is invisible (a crashed writer's batch is garbage, never data).
   *
-  * ONE INVARIANT: a key is live or archived, never both. [[retire]] moves
-  * keys from the live snapshot to the archive in one commit;
-  * [[appendDelta]] and [[upsert]] drop incoming rows whose key is
-  * archived, under the writer lease. So [[archive]] is a plain scan of
-  * the listed batches and [[readAll]] a plain union.
+  * ONE INVARIANT: every key sits in exactly one of three disjoint parts —
+  * the live snapshot, one unfolded delta batch, or the archive.
+  * [[appendDelta]] drops incoming rows whose key is in any part, under
+  * the writer lease, so an insert decides first-body-wins once;
+  * [[retire]] moves live keys to the archive in one commit. So [[read]]
+  * is a plain scan of the snapshot and the unfolded batches, [[archive]]
+  * a plain scan of the listed batches and [[readAll]] their union, and
+  * no read deduplicates.
   *
   * Version directories are PER-WRITER-UNIQUE (`v{N}_{uuid}`) and the
   * pointer stores the directory NAME: no writer ever deletes or writes
@@ -33,7 +39,7 @@ import org.apache.spark.sql.functions.col
   *
   * Incremental ingest goes through [[appendDelta]]: an O(batch)
   * append-only delta directory merged into every read and FOLDED into the
-  * snapshot by the next full commit (commit/upsert/retire) — without it,
+  * snapshot by the next full commit (commit/retire) — without it,
   * every submit rewrites the live snapshot and ingest is O(live)
   * (measured: +1k submit cost ~1.2 s against a 10⁵-row live queue,
   * DriveQueueScale round 13; the lifecycle's one super-linear write).
@@ -57,6 +63,11 @@ final class StateTable(spark: SparkSession, dir: String, keys: Seq[String],
     s"$archiveRoot holds archive batches that the current version does not " +
       "list: an older layout published them apart from the snapshot; read " +
       "the table with the previous build or use a new table dir")
+  require(subdirs(deltaRoot, "d").filterNot(_.startsWith("dk"))
+      .forall(currentDirName.toSeq.flatMap(listed(_, "_FOLDED")).toSet),
+    s"$deltaRoot holds unfolded delta batches an older build appended, whose " +
+      "keys may repeat live ones: fold them by ticking the table once with " +
+      "the previous build, or use a new table dir")
 
   /** Pointer content → committed dir name. Pre-round-14 tables stored the
     * bare version number with `v$n` dirs; both forms stay readable. */
@@ -85,11 +96,9 @@ final class StateTable(spark: SparkSession, dir: String, keys: Seq[String],
     else Seq.empty
   }
 
-  /** Current committed snapshot merged with any un-folded delta batches
-    * (None before the first commit when no deltas exist). The snapshot
-    * wins on key overlap; among deltas the EARLIEST batch wins — together
-    * that preserves [[upsert]]'s insert-only MERGE semantics for rows
-    * ingested through [[appendDelta]]. */
+  /** Current committed snapshot plus the unfolded delta batches: one
+    * scan, key-unique by the invariant (None before the first commit
+    * when no deltas exist). */
   def read(): Option[DataFrame] = liveAt(currentDirName)
 
   /** Archived rows, if any: one scan of the batches the current version
@@ -109,12 +118,10 @@ final class StateTable(spark: SparkSession, dir: String, keys: Seq[String],
   // Every read is schema-known ([[Fs.readParquet]]): no job runs until an
   // action does.
   private def liveAt(dn: Option[String]): Option[DataFrame] = {
-    val snap = dn.map(d => Fs.readParquet(spark, root.resolve(d).toString))
-    (snap, deltaView(dn.toSeq.flatMap(listed(_, "_FOLDED")).toSet)) match {
-      case (Some(l), Some(d)) =>
-        Some(l.unionByName(d.join(l.select(keyCols: _*), keys, "left_anti")))
-      case (l, d) => l.orElse(d)
-    }
+    val folded = dn.toSeq.flatMap(listed(_, "_FOLDED")).toSet
+    val dirs = dn.map(root.resolve(_)).toSeq ++
+      subdirs(deltaRoot, "dk").filterNot(folded).map(deltaRoot.resolve(_))
+    if (dirs.isEmpty) None else Some(Fs.readParquet(spark, dirs.map(_.toString): _*))
   }
 
   private def archiveAt(dn: Option[String]): Option[DataFrame] =
@@ -132,16 +139,30 @@ final class StateTable(spark: SparkSession, dir: String, keys: Seq[String],
 
   private def uuid8: String = java.util.UUID.randomUUID().toString.take(8)
 
+  /** The rows of `df`'s key columns, on the driver. */
+  private def keysOf(df: DataFrame): Array[Row] = df.select(keyCols: _*).collect()
+
+  /** Holds on the rows whose key is one of `ks` (rows of the key
+    * columns): one set-membership test (`InSet`), so filtering by a
+    * collected key set builds no join. Not `isin`: that puts one
+    * expression per key into the plan, and a filter over a local frame (a
+    * tick's rows) is evaluated before the optimizer turns the list into a
+    * set, one list scan per row (measured: an 11,000-request drain tick
+    * took 170 s instead of 14 s). */
+  private def keyIn(ks: Array[Row]): Column =
+    Bridge.column(InSet(Bridge.expression(struct(keyCols: _*)),
+      ks.map(CatalystTypeConverters.convertToCatalyst).toSet))
+
   // ---- single-writer lease ---------------------------------------------
   // The table is SINGLE-WRITER by contract (the Mongo reference got
   // per-document atomicity for free; a snapshot table cannot): every
-  // mutating entry point (commit / appendDelta / upsert / retire /
+  // mutating entry point (commit / appendDelta / retire /
   // vacuum) runs under an exclusive lease held in `_LOCK`,
   // acquired with CREATE_NEW — the one atomic test-and-set a plain
   // filesystem offers — and a second writer FAILS LOUDLY with
   // ConcurrentModificationException instead of silently losing the other
-  // writer's read-modify-write (two upserts that both read v_N would both
-  // commit a v_{N+1}-style successor; one merge vanished). A lease left
+  // writer's read-modify-write (two retires that both read v_N would both
+  // commit a v_{N+1}-style successor; one retire vanished). A lease left
   // by a CRASHED writer is stolen once it is older than `leaseMs`
   // (10 min default — an order of magnitude above any tick's
   // commit time). Residual windows, documented rather than hidden:
@@ -255,7 +276,7 @@ final class StateTable(spark: SparkSession, dir: String, keys: Seq[String],
     Fs.reapStale(deltaRoot, ".tmp")
     currentDirName.toSeq.flatMap(listed(_, "_FOLDED"))
       .foreach(n => Fs.deleteTree(deltaRoot.resolve(n)))
-    val consumed = subdirs(deltaRoot, "d")
+    val consumed = subdirs(deltaRoot, "dk")
     val dirName = s"v${next}_$uuid8"
     val stage = root.resolve(s".tmpv_$uuid8")
     try {
@@ -294,69 +315,32 @@ final class StateTable(spark: SparkSession, dir: String, keys: Seq[String],
   // ---- O(batch) incremental ingest (delta batches) -----------------------
 
   /** Append a batch of NEW rows in O(batch): one write-temp + atomic move
-    * into `_delta/`, no snapshot rewrite. Rows whose key is archived are
-    * dropped (a finished key never re-enters live). The rest become
-    * visible to [[read]] immediately (merged view, snapshot wins on key
-    * overlap — the same insert-only MERGE a direct [[upsert]] would give)
-    * and are folded into the snapshot by the next full commit. The batch
-    * must be key-unique WITHIN itself (the caller dedups, as [[upsert]]
-    * already requires of its MERGE source); across batches the earliest
-    * batch wins deterministically. Runs under the writer lease — appends
-    * serialize with full commits, so a fold can never lose a
-    * concurrently-appended batch, and the archive check cannot straddle a
-    * [[retire]] of the same key. */
+    * into `_delta/`, no snapshot rewrite. Rows whose key is already in the
+    * table — live, in an unfolded batch, or archived — are dropped, so the
+    * first body a key arrived with wins, decided once, here. The batch
+    * must be key-unique WITHIN itself (the caller dedups). The rest become
+    * visible to [[read]] immediately and are folded into the snapshot by
+    * the next full commit. Costs one key-only scan of [[readAll]] filtered
+    * to the batch's keys, and the write (none when every key is present).
+    * Runs under the writer lease — appends serialize with full commits,
+    * so a fold can never lose a concurrently-appended batch, and the
+    * presence check cannot straddle a [[retire]] of the same key. Batch
+    * dirs are named `dk<epoch millis>_<uuid>`; an older build's
+    * `d<epoch millis>_<uuid>` batch may repeat a live key (see the
+    * constructor's check). */
   def appendDelta(df: DataFrame): Unit = withWriterLease {
-    Files.createDirectories(deltaRoot)
-    val name = f"d${System.currentTimeMillis()}%013d_$uuid8"
-    val tmp = deltaRoot.resolve(s".tmp_$name")
-    // a submit batch is small: one file, not one per local partition
-    unarchived(df).coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    Files.move(tmp, deltaRoot.resolve(name), StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  /** `df` without the rows whose key is archived; called under the lease. */
-  private def unarchived(df: DataFrame): DataFrame =
-    archive().fold(df)(a => df.join(a.select(keyCols: _*), keys, "left_anti"))
-
-  /** Un-folded delta batches as one merged frame: earliest batch wins per
-    * key (batch names are zero-padded epoch millis, so the string min is
-    * the numeric min). None when no live batch exists. */
-  private def deltaView(folded: Set[String]): Option[DataFrame] = {
-    val dirs = subdirs(deltaRoot, "d").filterNot(folded)
-      .map(deltaRoot.resolve(_).toString)
-    if (dirs.isEmpty) None
-    else {
-      import org.apache.spark.sql.functions.{input_file_name, min_by, regexp_extract, struct}
-      val df = Fs.readParquet(spark, dirs: _*)
-      val others = df.columns.filterNot(keys.contains).toSeq
-      if (others.isEmpty) Some(df.dropDuplicates(keys))
-      // min_by on the batch name alone: non-key payloads may carry Map
-      // columns (request bodies), which Spark cannot order — so the
-      // within-batch tie-break is the caller's key-uniqueness contract,
-      // not an ordering over the payload
-      else Some(df
-        .withColumn("_b", regexp_extract(input_file_name(), "/(d[^/]+)/[^/]+$", 1))
-        .groupBy(keyCols: _*)
-        .agg(min_by(struct(others.map(col): _*), col("_b")).as("_w"))
-        .select(df.columns.toSeq.map(n =>
-          if (keys.contains(n)) col(n) else col("_w").getField(n).as(n)): _*))
+    val incoming = keysOf(df)
+    val present = readAll().fold(Array.empty[Row])(all =>
+      keysOf(all.filter(keyIn(incoming))))
+    if (present.length < incoming.length) {
+      Files.createDirectories(deltaRoot)
+      val name = f"dk${System.currentTimeMillis()}%013d_$uuid8"
+      val tmp = deltaRoot.resolve(s".tmp_$name")
+      // a submit batch is small: one file, not one per local partition
+      df.filter(!keyIn(present)).coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      Files.move(tmp, deltaRoot.resolve(name), StandardCopyOption.ATOMIC_MOVE)
     }
   }
-
-  /** MERGE: existing rows win, new rows insert; first commit just inserts.
-    * Rows whose key is archived are dropped first (the live/archive
-    * invariant). `refreshCols` defaults EMPTY here — a generic state
-    * table keeps strict insert-only MERGE semantics regardless of its
-    * schema; callers wanting the queue's `$set {classification, priority,
-    * update_time}` refresh (Q2) opt in explicitly. The lease spans the
-    * read AND the commit — the whole read-modify-write is
-    * writer-exclusive, which is exactly the lost-update window a
-    * commit-only lock would leave open. */
-  def upsert(incoming: DataFrame, refreshCols: Seq[String] = Seq.empty): Long =
-    withWriterLease {
-      val fresh = unarchived(incoming)
-      commit(read().map(Queue.upsert(_, fresh, keys, refreshCols)).getOrElse(fresh))
-    }
 
   /** Move finished rows from the live table to the archive in ONE commit.
     * `rows` carry their final content (e.g. a terminal status) and must be
@@ -373,7 +357,10 @@ final class StateTable(spark: SparkSession, dir: String, keys: Seq[String],
   def retire(rows: DataFrame): Option[Long] = withWriterLease {
     val dn = currentDirName
     liveAt(dn).map { live =>
-      val batch = rows.join(live.select(keyCols: _*), keys, "left_semi")
+      // the rows' keys that are live: one key-only scan, then both writes
+      // filter by that local set
+      val inLive = keyIn(keysOf(live.filter(keyIn(keysOf(rows)))))
+      val batch = rows.filter(inLive)
       val batches = archived(dn)
       val name = s"b${dn.fold(0L)(versionOf(_) + 1)}_$uuid8"
       // one tick's rows are few: one file, as for a delta batch
@@ -381,7 +368,7 @@ final class StateTable(spark: SparkSession, dir: String, keys: Seq[String],
         if (batches.size < 16) (batch.coalesce(1), batches :+ name)
         else (Fs.readParquet(spark, batchDirs(batches): _*).unionByName(batch), Seq(name))
       written.write.parquet(archiveRoot.resolve(name).toString)
-      publish(live.join(rows.select(keyCols: _*), keys, "left_anti"), list)
+      publish(live.filter(!inLive), list)
     }
   }
 

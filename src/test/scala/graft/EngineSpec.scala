@@ -564,7 +564,7 @@ class EngineSpec extends AnyFunSuite {
             val body = mkReq(id, failing)
               .copy(status = -1, stage = Seq(StageTime("submit", 0L)))
             new graft.ops.StateTable(spark, s"$dir/requests", Seq("id"))
-              .upsert(Seq(body).toDS().toDF()): Unit
+              .appendDelta(Seq(body).toDS().toDF())
         }
       }
       // drain: a restarted engine finishes everything
@@ -713,11 +713,28 @@ class EngineSpec extends AnyFunSuite {
       dirs(store.resolve("_archive"))) == before, "an idle tick committed")
   }
 
+  test("a tick of repeat requests runs at most 4 request-store jobs: one " +
+    "pending read and three in retire, for 2 requests and for 8") {
+    // every work item and merged result of a repeat request is a cache
+    // hit and its artifacts are file copies, so each job the tick starts
+    // is the request store's
+    val e = newEngine()
+    e.submit(request)
+    assert(e.tick(base, pixels, locations) == Map("req-1" -> 1))
+    Seq(2, 8).foreach { n =>
+      val ids = (1 to n).map(i => s"rep-$n-$i")
+      e.submitAll(ids.map(id => request.copy(id = id)))
+      val (out, jobs) = TestSpark.jobsDuring(e.tick(base, pixels, locations))
+      assert(out == ids.map(_ -> 1).toMap)
+      assert(jobs <= 4, s"a tick of $n repeat requests ran $jobs jobs")
+    }
+  }
+
   test("golden fixture request: CSV column grammar and JSON echo are " +
     "byte-stable end-to-end (S5/S6 against the doc_test.py document)") {
     // The captured production request (src/test/resources/
     // request_fixture.json, from the reference's queue/doc_test.py:12-96)
-    // driven through the REAL lifecycle: submit → Pipeline.tick →
+    // driven through the REAL lifecycle: submit → Engine.tick →
     // Artifacts. Byte-golden on (1) the results CSV — column ORDER
     // (asdf_id, extract columns, passthrough), the dotted display-name
     // grammar with BOTH msr hash segments (the fixture's two donor

@@ -245,23 +245,12 @@ class ExtractsSpec extends AnyFunSuite {
     // no job: under AQE even a LAZY localCheckpoint materializes every
     // upstream stage at construction time (measured: 18 jobs just
     // building the guided mad frame without the guard).
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        { jobs.incrementAndGet(); () }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      graft.ops.Ckpt.planOnly {
-        Extracts.extract(px, "mad")        // guided (registered) form
-        Extracts.extract(px, "mad_buffer") // buffering parity baseline
-        Extracts.guidedTileBounds(px, 4)   // histogram builder (same
-        // checkpoint helpers — must stay job-free under planOnly too)
-      }
-      Thread.sleep(500) // listener events drain async
-      assert(jobs.get() == 0,
-        s"mad construction ran ${jobs.get()} job(s); dry-run would scan")
-    } finally spark.sparkContext.removeSparkListener(l)
+    val (_, jobs) = TestSpark.jobsDuring(graft.ops.Ckpt.planOnly {
+      Extracts.extract(px, "mad")        // guided (registered) form
+      Extracts.extract(px, "mad_buffer") // buffering parity baseline
+      Extracts.guidedTileBounds(px, 4)   // histogram builder (same
+      // checkpoint helpers — must stay job-free under planOnly too)
+    })
+    assert(jobs == 0, s"mad construction ran $jobs job(s); dry-run would scan")
   }
 }

@@ -148,9 +148,13 @@ class PipelineSpec extends AnyFunSuite {
     val err = new java.io.ByteArrayOutputStream()
     val prevErr = System.err
     System.setErr(new java.io.PrintStream(err, true))
+    // Engine.tick's composition: drain order, up to one request per core
+    // in flight, each processed end-to-end
     val out =
-      try p.tick(Seq(request, invalid, hi, broken), base, pixels, locations)
-      finally System.setErr(prevErr)
+      try Pipeline.inFlight(spark, p.drainOrder(Seq(request, invalid, hi, broken))) { req =>
+        val (status, entry) = p.process(req, base, pixels, locations)
+        (req.id, status, entry)
+      } finally System.setErr(prevErr)
     assert(out.map(_._1) == Seq("hi", request.id, "bad", "boom"))
     assert(out.map(_._2) == Seq(1, 1, -2, -2))
     // status 1 names the merged result's filled cache entry; -2 names none

@@ -19,10 +19,13 @@ class StateTableSpec extends AnyFunSuite {
     assert(t.read().get.count() == 1)
   }
 
-  test("upsert merges with existing-wins semantics across versions") {
+  test("appendDelta inserts new keys only: a folded key keeps its row " +
+    "across versions") {
     val t = fresh()
-    t.upsert(Seq((1L, 1), (2L, 2)).toDF("id", "status"))
-    t.upsert(Seq((2L, 0), (3L, 0)).toDF("id", "status"))
+    t.appendDelta(Seq((1L, 1), (2L, 2)).toDF("id", "status"))
+    t.commit(t.read().get)
+    t.appendDelta(Seq((2L, 0), (3L, 0)).toDF("id", "status"))
+    t.commit(t.read().get)
     val out = t.read().get.as[(Long, Int)].collect().toMap
     assert(out == Map(1L -> 1, 2L -> 2, 3L -> 0)) // 2 kept its state
     assert(t.versions == Seq(0L, 1L))
@@ -63,18 +66,16 @@ class StateTableSpec extends AnyFunSuite {
       .split("\n").filter(_.nonEmpty).toSeq
   }
 
-  /** A UDF for the rows' key column that throws once a batch dir that was
-    * not under `dir`'s archive when the UDF was made is complete: retire
-    * writes its batch from the rows, then reads them again for the live
-    * snapshot it commits, so the throw lands after the batch write and
-    * before the pointer swap (local mode: executor == this JVM/FS). */
+  /** A UDF for the rows' key column that leaves a crashed writer's stale
+    * lease in `dir` while retire reads the rows: retire still writes its
+    * batch, then finds its lease gone at the check before the pointer
+    * swap and aborts — the state a writer that crashed between the batch
+    * write and the swap leaves behind. The next writer steals the stale
+    * lease (local mode: executor == this JVM/FS). */
   def crashAfterBatch(dir: String) = {
-    val published = batchDirs(dir).toSet
-    val archiveDir = s"$dir/_archive"
+    val lock = java.nio.file.Paths.get(dir, "_LOCK")
     udf { (x: Long) =>
-      if (Option(new java.io.File(archiveDir).listFiles()).getOrElse(Array.empty)
-          .exists(f => !published(f.getName) && new java.io.File(f, "_SUCCESS").exists()))
-        throw new IllegalStateException("crash before the pointer swap")
+      Files.writeString(lock, s"crashed-writer ${System.currentTimeMillis() - 3600 * 1000L}")
       x
     }
   }
@@ -155,34 +156,44 @@ class StateTableSpec extends AnyFunSuite {
     assert(t.read().get.isEmpty)
   }
 
-  test("appendDelta and upsert drop rows whose key is archived: a key is " +
-    "live or archived, never both") {
-    val t = fresh()
+  test("appendDelta drops rows whose key the table holds — in the " +
+    "snapshot, an unfolded batch or the archive — and writes no batch " +
+    "when it holds them all") {
+    val dir = Files.createTempDirectory("graft_state").toString
+    val t = new StateTable(spark, dir, Seq("id"))
     t.commit(Seq((1L, 0), (2L, 0)).toDF("id", "status"))
     t.retire(Seq((1L, 1)).toDF("id", "status"))
     t.appendDelta(Seq((1L, -1), (3L, -1)).toDF("id", "status"))
     assert(rows(t.read()) == Seq(2L -> 0, 3L -> -1))
-    t.upsert(Seq((1L, -1), (4L, -1)).toDF("id", "status"))
+    t.appendDelta(Seq((1L, -1), (2L, 9), (3L, 9), (4L, -1)).toDF("id", "status"))
     assert(rows(t.read()) == Seq(2L -> 0, 3L -> -1, 4L -> -1))
     assert(rows(t.archive()) == Seq(1L -> 1))
     assert(rows(t.readAll()).map(_._1) == Seq(1L, 2L, 3L, 4L))
+    assert(parts(dir).map(_._1).sorted == Seq(1L, 2L, 3L, 4L))
+    val before = deltaDirs(dir)
+    t.appendDelta(Seq((1L, 5), (4L, 5)).toDF("id", "status"))
+    assert(deltaDirs(dir) == before, "a batch of held keys wrote a batch dir")
   }
 
-  /** The result of `body` and the number of Spark jobs it started. */
-  def jobsDuring[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    org.apache.spark.TestBus.drain(sc)
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        n.incrementAndGet(): Unit
+  /** Where each key of the table at `dir` sits, read straight from the
+    * files the pointer names: (key, part dir) for the current snapshot,
+    * every unfolded delta batch and every listed archive batch. */
+  def parts(dir: String): Seq[(Long, String)] = {
+    val root = java.nio.file.Paths.get(dir)
+    val cur = Option.when(Files.exists(root.resolve("_CURRENT")))(
+      Files.readString(root.resolve("_CURRENT")).trim)
+    def listed(file: String): Seq[String] = cur.toSeq.flatMap { c =>
+      val f = root.resolve(c).resolve(file)
+      if (Files.exists(f)) Files.readString(f).split("\n").filter(_.nonEmpty).toSeq
+      else Nil
     }
-    sc.addSparkListener(l)
-    try {
-      val out = body
-      org.apache.spark.TestBus.drain(sc)
-      (out, n.get)
-    } finally sc.removeSparkListener(l)
+    val dirs = cur.map(c => s"$dir/$c").toSeq ++
+      deltaDirs(dir).filterNot(listed("_FOLDED").toSet).map(d => s"$dir/_delta/$d") ++
+      listed("_ARCHIVE").map(b => s"$dir/_archive/$b")
+    if (dirs.isEmpty) Seq.empty
+    else spark.read.schema("id LONG, status INT").parquet(dirs: _*)
+      .select(col("id"), input_file_name()).as[(Long, String)].collect().toSeq
+      .map { case (id, f) => id -> dirs.find(d => f.contains(s"$d/")).get }
   }
 
   test("read(), archive() and readAll() launch no job until an action " +
@@ -192,14 +203,14 @@ class StateTableSpec extends AnyFunSuite {
     t.appendDelta(Seq((3L, -1)).toDF("id", "status"))
     t.retire(Seq((1L, 1)).toDF("id", "status"))
     t.appendDelta(Seq((4L, -1)).toDF("id", "status"))
-    val ((l, a, all), jobs) = jobsDuring((t.read().get, t.archive().get, t.readAll().get))
+    val ((l, a, all), jobs) = TestSpark.jobsDuring((t.read().get, t.archive().get, t.readAll().get))
     assert(jobs == 0, s"building the views launched $jobs job(s)")
     assert(rows(Some(l)) == Seq(2L -> 0, 3L -> -1, 4L -> -1))
     assert(rows(Some(a)) == Seq(1L -> 1))
     assert(rows(Some(all)).map(_._1) == Seq(1L, 2L, 3L, 4L))
     // drain the live table: its snapshot is an empty write
     t.retire(Seq((2L, 1), (3L, 1), (4L, -2)).toDF("id", "status"))
-    val ((l2, all2), jobs2) = jobsDuring((t.read().get, t.readAll().get))
+    val ((l2, all2), jobs2) = TestSpark.jobsDuring((t.read().get, t.readAll().get))
     assert(jobs2 == 0, s"building the drained views launched $jobs2 job(s)")
     assert(l2.schema.fieldNames.toSeq == Seq("id", "status"))
     assert(l2.isEmpty && all2.count() == 4)
@@ -222,12 +233,30 @@ class StateTableSpec extends AnyFunSuite {
     assert(rows(new StateTable(spark, dir, Seq("id")).readAll()) == Seq(1L -> 0))
   }
 
+  test("a table holding an older build's unfolded delta batch, whose keys " +
+    "may repeat live ones, fails loudly at construction") {
+    val dir = Files.createTempDirectory("graft_state").toString
+    new StateTable(spark, dir, Seq("id")).commit(Seq((1L, 0)).toDF("id", "status"))
+    // the older build's append: a `d` batch repeating live key 1
+    Seq((1L, 9), (2L, -1)).toDF("id", "status").coalesce(1)
+      .write.parquet(s"$dir/_delta/d0000000000001_0ld0ld00")
+    val err = intercept[IllegalArgumentException](new StateTable(spark, dir, Seq("id")))
+    assert(err.getMessage.contains(s"$dir/_delta"), err.getMessage)
+    assert(err.getMessage.contains("previous build"), err.getMessage)
+    assert(err.getMessage.contains("new table dir"), err.getMessage)
+    // once a published version lists it as folded, it is invisible and
+    // the table opens
+    val cur = Files.readString(java.nio.file.Paths.get(dir, "_CURRENT")).trim
+    Files.writeString(java.nio.file.Paths.get(dir, cur, "_FOLDED"), "d0000000000001_0ld0ld00")
+    assert(rows(new StateTable(spark, dir, Seq("id")).read()) == Seq(1L -> 0))
+  }
+
   // ---- single-writer lease (the concurrency contract) -------------------
   // The Mongo reference got per-document write atomicity for free; a
   // snapshot table cannot, so StateTable is single-writer by contract and
   // a second concurrent writer must FAIL LOUDLY rather than silently lose
-  // the other writer's read-modify-write. These tests fail on the
-  // pre-lease implementation (any interleaving of two upserts lost one).
+  // the other writer's read-modify-write (without the lease, an append
+  // landing between a retire's read and its commit is folded away unread).
 
   test("lease: a held foreign lease makes every mutator fail loudly; " +
     "reads stay live and nothing is clobbered") {
@@ -238,7 +267,7 @@ class StateTableSpec extends AnyFunSuite {
     val lock = java.nio.file.Paths.get(dir, "_LOCK")
     Files.writeString(lock, s"other-writer ${System.currentTimeMillis()}")
     intercept[java.util.ConcurrentModificationException] {
-      t.upsert(Seq((2L, 0)).toDF("id", "status"))
+      t.commit(Seq((2L, 0)).toDF("id", "status"))
     }
     intercept[java.util.ConcurrentModificationException] {
       t.appendDelta(Seq((2L, 0)).toDF("id", "status"))
@@ -253,7 +282,7 @@ class StateTableSpec extends AnyFunSuite {
     // once the other writer releases, this writer proceeds (and releases
     // its own lease afterwards — a second mutation also succeeds)
     Files.delete(lock)
-    t.upsert(Seq((2L, 0)).toDF("id", "status"))
+    t.appendDelta(Seq((2L, 0)).toDF("id", "status"))
     t.retire(Seq((1L, 1)).toDF("id", "status"))
     assert(t.read().get.count() == 1 && t.readAll().get.count() == 2)
     assert(!Files.exists(lock), "lease must be released after the mutation")
@@ -269,7 +298,7 @@ class StateTableSpec extends AnyFunSuite {
     t.commit(Seq((1L, 0)).toDF("id", "status")) // steal succeeds
     assert(t.read().get.count() == 1)
     Files.writeString(lock, "garbage-without-timestamp")
-    t.upsert(Seq((2L, 0)).toDF("id", "status"))
+    t.appendDelta(Seq((2L, 0)).toDF("id", "status"))
     assert(t.read().get.count() == 2)
   }
 
@@ -340,17 +369,23 @@ class StateTableSpec extends AnyFunSuite {
       new Thread(() => {
         try {
           val mine = new StateTable(spark, dir, Seq("id"))
-          for (i <- 0 until perWriter) {
+          def retrying(op: => Unit): Unit = {
             var done = false
             while (!done) {
-              try {
-                mine.upsert(Seq((w * 100L + i, w)).toDF("id", "status"))
-                done = true
-              } catch {
+              try { op; done = true }
+              catch {
                 case _: java.util.ConcurrentModificationException =>
                   Thread.sleep(5) // contention is the CONTRACT; retry
               }
             }
+          }
+          // each writer appends its keys and retires the even ones: a
+          // retire reads live and commits live minus its keys, folding
+          // every batch on disk
+          for (i <- 0 until perWriter) {
+            val row = Seq((w * 100L + i, w)).toDF("id", "status")
+            retrying(mine.appendDelta(row))
+            if (i % 2 == 0) retrying(mine.retire(row): Unit)
           }
         } catch { case e: Throwable => failures.add(e) }
       })
@@ -358,20 +393,24 @@ class StateTableSpec extends AnyFunSuite {
     threads.foreach(_.start()); threads.foreach(_.join())
     assert(failures.isEmpty, s"unexpected: ${failures.peek()}")
     val t = new StateTable(spark, dir, Seq("id"))
-    val got = t.read().get.as[(Long, Int)].collect().toMap
     val want = (for (w <- 0 until writers; i <- 0 until perWriter)
       yield (w * 100L + i) -> w).toMap
-    assert(got == want, "a concurrent read-modify-write was lost")
+    assert(rows(t.read()).toMap == want.filter(_._1 % 2 == 1),
+      "a concurrent append or retire was lost")
+    assert(rows(t.archive()).toMap == want.filter(_._1 % 2 == 0),
+      "a concurrent retire was lost")
     assert(!Files.exists(java.nio.file.Paths.get(dir, "_LOCK")))
   }
 
-  test("fuzz: 100 random upsert/appendDelta/retire/crash-in-retire/vacuum/" +
-    "restart schedules match an in-memory model (no lost key, live and " +
-    "archive disjoint, archive key-unique with no dedup)") {
+  test("fuzz: 100 random appendDelta/fold/retire/crash-in-retire/vacuum/" +
+    "restart schedules match an in-memory model (no lost key, every key in " +
+    "exactly one of snapshot, unfolded deltas and archive, reads key-unique " +
+    "with no dedup)") {
     // The layer's contract under arbitrary interleavings:
-    //  - upsert and appendDelta insert new keys only: a live key keeps its
-    //    row, an archived key is dropped (a key is live or archived, never
-    //    both);
+    //  - appendDelta inserts new keys only: a live key keeps its row, an
+    //    archived key is dropped, and every key sits in exactly one of the
+    //    snapshot, one unfolded delta batch and the archive;
+    //  - a full commit of read() (a fold) changes no view;
     //  - retire moves the given rows' LIVE keys to the archive with the
     //    given status and ignores archived or unknown keys;
     //  - a retire that crashes before its pointer swap, vacuum, restart
@@ -407,12 +446,10 @@ class StateTableSpec extends AnyFunSuite {
         rnd.nextInt(8) match {
           case 0 | 1 =>
             val in = incoming()
-            t.upsert(in.toDF("id", "status"))
-            insert(in)
-          case 2 =>
-            val in = incoming()
             t.appendDelta(in.toDF("id", "status"))
             insert(in)
+          case 2 =>
+            t.read().foreach(t.commit): Unit
           case 3 | 4 =>
             val done = finished()
             t.retire(done.toDF("id", "status"))
@@ -434,20 +471,25 @@ class StateTableSpec extends AnyFunSuite {
             Seq((n + 2000, 1)).toDF("id", "status")
               .write.parquet(s"$dir/_archive/b${next}_litter${rnd.nextInt(1000)}")
         }
-        // every reader's view equals the model EVERY step
+        // every reader's view equals the model EVERY step, with no key
+        // read twice
         val live = rows(t.read())
         val arch = rows(t.archive())
+        val all = rows(t.readAll())
         assert(live.toMap == liveM.toMap && live.size == liveM.size,
-          s"seed=$seed live diverged: $live")
+          s"seed=$seed live diverged or holds a key twice: $live")
         assert(arch.toMap == archM.toMap && arch.size == archM.size,
           s"seed=$seed archive diverged or holds a key twice: $arch")
-        assert(live.map(_._1).intersect(arch.map(_._1)).isEmpty,
-          s"seed=$seed a key is both live and archived")
+        assert(all.toMap == (archM ++ liveM).toMap && all.size == archM.size + liveM.size,
+          s"seed=$seed readAll diverged or holds a key twice: $all")
+        // and on disk every key sits in exactly one part
+        val ps = parts(dir)
+        assert(ps.map(_._1).distinct.size == ps.size,
+          s"seed=$seed a key sits in two parts: ${ps.groupBy(_._1).filter(_._2.size > 1)}")
+        assert(ps.filter(_._2.contains("/_archive/")).map(_._1).toSet == archM.keySet &&
+          ps.filterNot(_._2.contains("/_archive/")).map(_._1).toSet == liveM.keySet,
+          s"seed=$seed parts diverged: $ps")
       }
-      val all = rows(t.readAll())
-      assert(all.map(_._1).distinct.size == all.size, s"seed=$seed readAll must be key-unique")
-      assert(all.toMap == (archM ++ liveM).toMap, s"seed=$seed history diverged")
-      assert(all.size == archM.size + liveM.size)
     }
   }
 
@@ -466,14 +508,14 @@ class StateTableSpec extends AnyFunSuite {
     // delta-only table (no snapshot yet)
     t.appendDelta(Seq((1L, -1)).toDF("id", "status"))
     assert(t.read().get.as[(Long, Int)].collect().toMap == Map(1L -> -1))
-    // snapshot wins on key overlap; earliest delta batch wins across batches
+    // a full commit replaces the table; an append of a key an earlier
+    // batch holds is dropped at insert: the first row wins
     t.commit(Seq((1L, 5)).toDF("id", "status"))
     t.appendDelta(Seq((2L, -1)).toDF("id", "status"))
-    Thread.sleep(5) // distinct batch-name millis
     t.appendDelta(Seq((2L, 99), (3L, -1)).toDF("id", "status"))
     val out = t.read().get.as[(Long, Int)].collect().toMap
     assert(out == Map(1L -> 5, 2L -> -1, 3L -> -1),
-      s"snapshot/earliest-wins merge broken: $out")
+      s"insert-only append broken: $out")
   }
 
   test("delta: a full commit folds batches into the snapshot; dirs sweep one cycle later") {
@@ -481,10 +523,11 @@ class StateTableSpec extends AnyFunSuite {
     val t = new StateTable(spark, dir, Seq("id"))
     t.commit(Seq((1L, 0)).toDF("id", "status"))
     t.appendDelta(Seq((2L, -1)).toDF("id", "status"))
+    t.appendDelta(Seq((3L, -1)).toDF("id", "status"))
     val before = deltaDirs(dir)
-    assert(before.size == 1)
-    // the fold: an upsert derives from read() (snapshot + delta) and commits
-    t.upsert(Seq((3L, -1)).toDF("id", "status"))
+    assert(before.size == 2)
+    // the fold: a commit of read() (snapshot + deltas)
+    t.commit(t.read().get)
     assert(t.read().get.as[(Long, Int)].collect().toMap ==
       Map(1L -> 0, 2L -> -1, 3L -> -1))
     // the folded dir survives ONE cycle (grace for readers holding the old
