@@ -1,9 +1,10 @@
 package graft
 
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.Request
-import graft.ops.Tables
+import graft.ops.{Fs, Tables}
 
 /** One cron pass as a runnable main — the operational analog of the
   * reference's `queue/processing.py` (bootstrap → ingest submissions →
@@ -27,20 +28,15 @@ object CronTick {
     // single-flight guard: state-table commits are read-modify-write, so
     // two passes sharing a workDir (a slow pass overlapping the next cron
     // fire) would race version writes and lose transitions. An OS file
-    // lock is held for the whole pass; a second instance reports and
-    // exits 0 — standard cron overlap behavior, next fire picks it up.
-    new java.io.File(workDir).mkdirs()
-    val lockChannel = java.nio.channels.FileChannel.open(
-      java.nio.file.Paths.get(workDir, ".cron.lock"),
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.WRITE)
-    val lock = lockChannel.tryLock()
-    if (lock == null) {
-      println("""{"ticked":0,"completed":0,"errors":0,"skipped":"pass already running"}""")
-      lockChannel.close()
-      return
-    }
+    // lock is held for the whole pass and released however it ends; a
+    // second instance reports and exits 0 — standard cron overlap
+    // behavior, next fire picks it up.
+    Files.createDirectories(Paths.get(workDir))
+    Fs.tryLocked(Paths.get(workDir, ".cron.lock"))(pass(workDir, sfDir, args.lift(2)))
+      .getOrElse(println("""{"ticked":0,"completed":0,"errors":0,"skipped":"pass already running"}"""))
+  }
 
+  private def pass(workDir: String, sfDir: String, dropFile: Option[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // only stop a session this pass created — embedded callers (tests,
     // notebooks) keep theirs
@@ -57,7 +53,7 @@ object CronTick {
 
     val engine = new Engine(spark, workDir)
     var skipped = 0L
-    args.lift(2).foreach { drop =>
+    dropFile.foreach { drop =>
       // an explicitly-passed path that doesn't exist is an operator error,
       // not "nothing to ingest" — silently draining zero documents while
       // submissions pile up would look exactly like a healthy pass
@@ -98,6 +94,5 @@ object CronTick {
     val errors = outcomes.count(_._2 == -2)
     println(s"""{"ticked":${outcomes.size},"completed":$completed,"errors":$errors,"skipped_malformed":$skipped}""")
     if (!hadSession) spark.stop()
-    lock.release(); lockChannel.close()
   }
 }

@@ -55,10 +55,12 @@ final class Engine(val spark: SparkSession, workDir: String) {
     * immediately and folds into the snapshot at the next tick's commit.
     * Idempotence is decided at insert time, over the whole history: the
     * store drops an id it already holds — live, in an earlier batch, or
-    * retired to its archive — checked under its writer lease, so a
+    * retired to its archive — checked under its writer lock, so a
     * re-submit keeps the first body and one racing a tick cannot re-enter
-    * the queue either (the reference's find-then-insert runs against the
-    * full collection, which never forgets a completed id). */
+    * the queue either: another writer on the store fails loudly with a
+    * ConcurrentModificationException (the reference's find-then-insert
+    * runs against the full collection, which never forgets a completed
+    * id). */
   def submitAll(reqs: Seq[Request]): Seq[String] = {
     if (reqs.isEmpty) return Seq.empty
     val ts = now()

@@ -1,6 +1,7 @@
 package graft.ops
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.channels.FileChannel
+import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 import scala.jdk.CollectionConverters._
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -8,8 +9,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
 import org.apache.spark.sql.types.{DataType, StructType}
 
-/** Filesystem helpers shared by the cache, the state table and the
-  * artifact copies, and the schema-known read of a parquet dir. */
+/** Filesystem helpers shared by the cache, the state table, the cron
+  * pass and the artifact copies, and the schema-known read of a parquet
+  * dir. */
 private[graft] object Fs {
   /** The `part-*<suffix>` files directly under `dir`, sorted by name. */
   def partFiles(dir: Path, suffix: String): Seq[Path] = {
@@ -38,6 +40,28 @@ private[graft] object Fs {
   def readParquet(spark: SparkSession, dirs: String*): DataFrame =
     spark.read.schema(footerSchema(spark, partFiles(Paths.get(dirs.head), ".parquet").head))
       .parquet(dirs: _*)
+
+  /** The lock files some thread of this JVM holds, by real path. */
+  private val held = java.util.concurrent.ConcurrentHashMap.newKeySet[Path]()
+
+  /** Runs `f` holding an exclusive OS lock on `lockFile` (created if
+    * absent), or returns None without running it while another thread of
+    * this JVM or another process holds it. The kernel drops the lock when
+    * its holder's process dies, so a crashed holder leaves nothing stale.
+    * POSIX record locks belong to the process: a second channel in this
+    * JVM could not see the first one's lock, and closing it would drop
+    * that lock, hence the in-JVM set. For the same reason nothing else
+    * may open `lockFile`, and nothing may delete it: a second writer
+    * would lock a fresh inode. */
+  def tryLocked[T](lockFile: Path)(f: => T): Option[T] = {
+    val abs = lockFile.toAbsolutePath
+    val key = abs.getParent.toRealPath().resolve(abs.getFileName)
+    if (!held.add(key)) None
+    else try {
+      val ch = FileChannel.open(key, StandardOpenOption.CREATE, StandardOpenOption.WRITE)
+      try Option(ch.tryLock()).map(_ => f) finally ch.close() // close releases
+    } finally held.remove(key)
+  }
 
   /** Recursive delete, children first; a no-op on a missing path.
     * `Files.walk` does not follow symlinks, so a link is removed, never

@@ -24,18 +24,19 @@ import org.apache.spark.sql.graft.Bridge
   * ONE INVARIANT: every key sits in exactly one of three disjoint parts —
   * the live snapshot, one unfolded delta batch, or the archive.
   * [[appendDelta]] drops incoming rows whose key is in any part, under
-  * the writer lease, so an insert decides first-body-wins once;
+  * the writer lock, so an insert decides first-body-wins once;
   * [[retire]] moves live keys to the archive in one commit. So [[read]]
   * is a plain scan of the snapshot and the unfolded batches, [[archive]]
   * a plain scan of the listed batches and [[readAll]] their union, and
   * no read deduplicates.
   *
-  * Version directories are PER-WRITER-UNIQUE (`v{N}_{uuid}`) and the
-  * pointer stores the directory NAME: no writer ever deletes or writes
-  * into a directory another writer created, so even a double-held lease
-  * (the advisory-lease residue documented below) can no longer destroy a
-  * winner's committed version — the loser's directory becomes
-  * unreferenced garbage that [[vacuum]] reaps (round-13 advisor).
+  * Version directories are uniquely named (`v{N}_{uuid}`) and the
+  * pointer stores the directory NAME, so a commit writes straight into a
+  * directory no reader follows until the pointer swap.
+  *
+  * ONE WRITER at a time, by an OS file lock on `_LOCK`; a second writer
+  * fails loudly. Like `CronTick`'s pass lock, the store needs `java.nio`
+  * on a local POSIX filesystem.
   *
   * Incremental ingest goes through [[appendDelta]]: an O(batch)
   * append-only delta directory merged into every read and FOLDED into the
@@ -46,12 +47,10 @@ import org.apache.spark.sql.graft.Bridge
   *
   * This is deliberately a miniature of the transactional-table pattern
   * (Delta/Iceberg-style, where one commit publishes every file of a
-  * version) built only on the filesystem primitives available offline;
-  * on a cluster the same layout works on any HDFS-compatible FS with
-  * atomic rename.
+  * version) built only on local filesystem primitives: atomic rename and
+  * a record lock.
   */
-final class StateTable(spark: SparkSession, dir: String, keys: Seq[String],
-    leaseMs: Long = 10 * 60 * 1000L) {
+final class StateTable(spark: SparkSession, dir: String, keys: Seq[String]) {
   private val root = Paths.get(dir)
   private val pointer = root.resolve("_CURRENT")
   private val deltaRoot = root.resolve("_delta")
@@ -153,163 +152,71 @@ final class StateTable(spark: SparkSession, dir: String, keys: Seq[String],
     Bridge.column(InSet(Bridge.expression(struct(keyCols: _*)),
       ks.map(CatalystTypeConverters.convertToCatalyst).toSet))
 
-  // ---- single-writer lease ---------------------------------------------
-  // The table is SINGLE-WRITER by contract (the Mongo reference got
-  // per-document atomicity for free; a snapshot table cannot): every
-  // mutating entry point (commit / appendDelta / retire /
-  // vacuum) runs under an exclusive lease held in `_LOCK`,
-  // acquired with CREATE_NEW — the one atomic test-and-set a plain
-  // filesystem offers — and a second writer FAILS LOUDLY with
-  // ConcurrentModificationException instead of silently losing the other
-  // writer's read-modify-write (two retires that both read v_N would both
-  // commit a v_{N+1}-style successor; one retire vanished). A lease left
-  // by a CRASHED writer is stolen once it is older than `leaseMs`
-  // (10 min default — an order of magnitude above any tick's
-  // commit time). Residual windows, documented rather than hidden:
-  // two stealers of the same stale lock can interleave delete/create
-  // (loser's create fails loudly — safe — but the loser may first delete
-  // the winner's fresh lock in a sub-millisecond window), and a writer
-  // PAUSED past its whole lease (not crashed) can be stolen from — the
-  // pointer-swap guard below re-checks lease ownership immediately
-  // before the commit's atomic move, shrinking that window to the move
-  // itself. This is the standard advisory-lease trade on a FS without
-  // compare-and-swap file content; on HDFS-compatible stores the same
-  // CREATE_NEW discipline holds.
+  // ---- single writer ----------------------------------------------------
+  // Every mutator (commit / appendDelta / retire / vacuum) is a
+  // read-modify-write: two retires that both read v_N would each publish
+  // a successor, and one retire would vanish. So each runs under an OS
+  // lock on `_LOCK` ([[Fs.tryLocked]]), and a second writer, on another
+  // instance or in another process, FAILS LOUDLY instead of waiting. Calls
+  // on one instance queue on its monitor. The kernel drops a crashed
+  // writer's lock with its process, so there is no stale lock to steal.
   private val lockFile = root.resolve("_LOCK")
-  private val leaseToken = java.util.UUID.randomUUID().toString
-  private var leaseDepth = 0 // guarded by `synchronized` in withWriterLease
 
-  private def contention(holder: String): Nothing =
-    throw new java.util.ConcurrentModificationException(
-      s"StateTable at $root is being written by another writer ($holder); " +
-        "the table is single-writer — serialize writers or let the stale " +
-        s"lease expire (leaseMs=$leaseMs)")
-
-  private def tryLock(): Boolean =
-    try {
-      Files.writeString(lockFile,
-        s"$leaseToken ${System.currentTimeMillis()}",
-        java.nio.file.StandardOpenOption.CREATE_NEW)
-      true
-    } catch { case _: java.nio.file.FileAlreadyExistsException => false }
-
-  private def acquireLease(): Unit =
-    if (!tryLock()) {
-      val held = try Files.readString(lockFile) catch { case _: Exception => "" }
-      val stale = held.split(" ") match {
-        case Array(_, ts) =>
-          try System.currentTimeMillis() - ts.toLong > leaseMs
-          catch { case _: NumberFormatException => true }
-        case _ => true // vanished or unparseable: treat as stale, retry once
-      }
-      if (!stale) contention(held.takeWhile(_ != ' '))
-      // delete ONLY if the lock still holds the exact content we judged
-      // stale — a fresh lock written by a concurrent stealer in between
-      // survives (shrinks the documented delete/create window to the
-      // re-read-to-delete gap; commit's staging-dir rename makes even
-      // that residue write-write safe)
-      try {
-        val now = try Files.readString(lockFile) catch { case _: Exception => "" }
-        if (now == held) Files.deleteIfExists(lockFile)
-      } catch { case _: Exception => () }
-      if (!tryLock()) contention("concurrent steal")
-    }
-
-  private def releaseLease(): Unit =
-    try {
-      if (Files.exists(lockFile)
-          && Files.readString(lockFile).startsWith(leaseToken))
-        Files.delete(lockFile)
-    } catch { case _: Exception => () }
-
-  private def withWriterLease[T](f: => T): T = synchronized {
-    if (leaseDepth > 0) { leaseDepth += 1; try f finally leaseDepth -= 1 }
-    else {
-      acquireLease()
-      leaseDepth = 1
-      try f finally { leaseDepth = 0; releaseLease() }
-    }
+  private def withWriterLock[T](f: => T): T = synchronized {
+    Fs.tryLocked(lockFile)(f).getOrElse(throw new java.util.ConcurrentModificationException(
+      s"StateTable at $root is being written by another writer; the table " +
+        "is single-writer: serialize writers or retry"))
   }
 
   /** Commit a full new snapshot that keeps the current archive list (see
-    * [[publish]]). Writer-exclusive: runs under the single-writer lease. */
-  def commit(df: DataFrame): Long = withWriterLease {
+    * [[publish]]). Writer-exclusive: runs under the writer lock. */
+  def commit(df: DataFrame): Long = withWriterLock {
     publish(df, archived(currentDirName))
   }
 
+  /** Test-only seam: runs after a commit wrote its version dir, before the
+    * pointer swap — lets a spec crash a commit at that point. */
+  protected[graft] var beforeSwap: () => Unit = () => ()
+
   /** Publish `df` as the live snapshot and `batches` as the archive list
-    * of a new version: write a uniquely-named staging dir, atomically
-    * rename it to its per-writer-unique `v{N+1}_{uuid}/` name, and
-    * atomically swap the pointer. Readers only ever follow the pointer,
-    * so a crashed writer leaves garbage data but never a torn table. The
-    * caller holds the lease; lease ownership is re-checked immediately
-    * before the pointer swap so a stolen lease aborts loudly instead of
-    * clobbering the stealer's commit.
-    *
-    * The per-WRITER-unique version dir closes the destructive half of the
-    * advisory lease's residual race (round-13 advisor): two writers
-    * racing through the vanished-lock steal window may both compute the
-    * same `next`, but they write DIFFERENT directories and collide only
-    * at the pointer — a single atomic move guarded by the
-    * pointer-advanced re-check. No delete of a possibly-live target ever
-    * happens; the loser's directory is unreferenced garbage reaped by
-    * [[vacuum]]'s same-number-twin rule, and readers never cross a
-    * FileNotFound window.
+    * of a new version: write its uniquely named `v{N+1}_{uuid}/` dir, then
+    * atomically swap the pointer to it. Readers only ever follow the
+    * pointer, so a crashed writer leaves an unreferenced dir but never a
+    * torn table; once the next commit lands that dir is a same-number twin
+    * of the current version, which [[vacuum]] reaps. The caller holds the
+    * writer lock.
     *
     * A full commit also FOLDS the delta batches ([[appendDelta]]): the
-    * caller's `df` was derived from [[read]] under this same lease (or
+    * caller's `df` was derived from [[read]] under this same lock (or
     * deliberately replaces the whole table), so every delta batch
     * existing now is superseded by the new snapshot. The consumed batch
-    * names are recorded in the new version's `_FOLDED` file, atomic with
-    * the data via the same rename+swap, so a crash at any point leaves
-    * either the old pointer + live deltas or the new pointer + folded
-    * deltas, never a state where delta rows are lost or double-visible.
-    * Swept dirs: the batches the REPLACED snapshot had folded are deleted
-    * at the START of the next commit (one-cycle grace for readers holding
-    * the previous lazy view). */
+    * names are recorded in the new version's `_FOLDED` file, published by
+    * the same pointer swap, so a crash at any point leaves either the old
+    * pointer + live deltas or the new pointer + folded deltas, never a
+    * state where delta rows are lost or double-visible. Swept dirs: the
+    * batches the REPLACED snapshot had folded are deleted at the START of
+    * the next commit (one-cycle grace for readers holding the previous
+    * lazy view). */
   private def publish(df: DataFrame, batches: Seq[String]): Long = {
     val next = currentVersion.getOrElse(-1L) + 1
     // delta lifecycle: sweep what the snapshot being replaced already
-    // folded, then consume every batch still on disk (a late appendDelta
-    // from a lease stealer lands AFTER this listing and simply stays
-    // live — "not listed" = "not folded" is the safe direction)
+    // folded, then consume every batch still on disk
     Fs.reapStale(deltaRoot, ".tmp")
     currentDirName.toSeq.flatMap(listed(_, "_FOLDED"))
       .foreach(n => Fs.deleteTree(deltaRoot.resolve(n)))
     val consumed = subdirs(deltaRoot, "dk")
     val dirName = s"v${next}_$uuid8"
-    val stage = root.resolve(s".tmpv_$uuid8")
-    try {
-      df.write.mode("overwrite").parquet(stage.toString)
-      if (consumed.nonEmpty)
-        Files.writeString(stage.resolve("_FOLDED"), consumed.mkString("\n"))
-      Files.writeString(stage.resolve("_ARCHIVE"), batches.mkString("\n"))
-      val tmp = root.resolve(s"_CURRENT.tmp$next")
-      Files.writeString(tmp, dirName)
-      // Ownership + progress re-check IMMEDIATELY before the pointer
-      // swap. An advanced pointer (>= next) means a stealer committed:
-      // abort even if the lock file momentarily carries our token again.
-      def ownedStill: Boolean =
-        try Files.readString(lockFile).startsWith(leaseToken)
-        catch { case _: Exception => false }
-      if (!ownedStill) { Files.deleteIfExists(tmp); contention("lease stolen") }
-      if (currentVersion.exists(_ >= next)) {
-        Files.deleteIfExists(tmp)
-        contention(s"pointer advanced past v$next — lease was stolen and re-committed")
-      }
-      // our own name is uuid-fresh: the move can never hit an existing
-      // dir, and never displaces another writer's data
-      Files.move(stage, root.resolve(dirName), StandardCopyOption.ATOMIC_MOVE)
-      // final narrowing before the swap (the residue is the swap itself)
-      if (currentVersion.exists(_ >= next)) {
-        Files.deleteIfExists(tmp)
-        Fs.deleteTree(root.resolve(dirName)) // our own unreferenced garbage
-        contention(s"pointer advanced to v$next during commit — aborting pointer swap")
-      }
-      Files.move(tmp, pointer, StandardCopyOption.ATOMIC_MOVE,
-        StandardCopyOption.REPLACE_EXISTING)
-      next
-    } finally Fs.deleteTree(stage) // no-op on success (already renamed away)
+    val vdir = root.resolve(dirName)
+    df.write.parquet(vdir.toString)
+    if (consumed.nonEmpty)
+      Files.writeString(vdir.resolve("_FOLDED"), consumed.mkString("\n"))
+    Files.writeString(vdir.resolve("_ARCHIVE"), batches.mkString("\n"))
+    beforeSwap()
+    val tmp = root.resolve(s"_CURRENT.tmp$next")
+    Files.writeString(tmp, dirName)
+    Files.move(tmp, pointer, StandardCopyOption.ATOMIC_MOVE,
+      StandardCopyOption.REPLACE_EXISTING)
+    next
   }
 
   // ---- O(batch) incremental ingest (delta batches) -----------------------
@@ -322,13 +229,13 @@ final class StateTable(spark: SparkSession, dir: String, keys: Seq[String],
     * visible to [[read]] immediately and are folded into the snapshot by
     * the next full commit. Costs one key-only scan of [[readAll]] filtered
     * to the batch's keys, and the write (none when every key is present).
-    * Runs under the writer lease — appends serialize with full commits,
+    * Runs under the writer lock — appends serialize with full commits,
     * so a fold can never lose a concurrently-appended batch, and the
     * presence check cannot straddle a [[retire]] of the same key. Batch
     * dirs are named `dk<epoch millis>_<uuid>`; an older build's
     * `d<epoch millis>_<uuid>` batch may repeat a live key (see the
     * constructor's check). */
-  def appendDelta(df: DataFrame): Unit = withWriterLease {
+  def appendDelta(df: DataFrame): Unit = withWriterLock {
     val incoming = keysOf(df)
     val present = readAll().fold(Array.empty[Row])(all =>
       keysOf(all.filter(keyIn(incoming))))
@@ -344,7 +251,7 @@ final class StateTable(spark: SparkSession, dir: String, keys: Seq[String],
 
   /** Move finished rows from the live table to the archive in ONE commit.
     * `rows` carry their final content (e.g. a terminal status) and must be
-    * key-unique; rows whose key is not live under the lease are dropped,
+    * key-unique; rows whose key is not live under the lock are dropped,
     * so no key is ever archived twice. The rows land as one new batch dir
     * — or, once the current list already holds 16 batches, as one
     * combined batch of the listed batches plus the rows, so a reader's
@@ -354,7 +261,7 @@ final class StateTable(spark: SparkSession, dir: String, keys: Seq[String],
     * and [[vacuum]] reaps; the replaced batches of a combine stay on disk
     * while any retained version lists them. None (and no commit) while
     * the table has no live view. */
-  def retire(rows: DataFrame): Option[Long] = withWriterLease {
+  def retire(rows: DataFrame): Option[Long] = withWriterLock {
     val dn = currentDirName
     liveAt(dn).map { live =>
       // the rows' keys that are live: one key-only scan, then both writes
@@ -381,45 +288,30 @@ final class StateTable(spark: SparkSession, dir: String, keys: Seq[String],
   def versions: Seq[Long] =
     versionDirs.map(f => versionOf(f.getName)).distinct.sorted
 
-  /** Test-only seam: runs after vacuum's single pointer read, before any
-    * delete — lets a spec interleave a lease-stealing writer's commit
-    * deterministically (see StateTableSpec's vacuum-race case). */
-  protected[graft] var onVacuumAfterPointerRead: () => Unit = () => ()
-
   /** Drop all but the newest `keep` versions — plus unreferenced
-    * same-number TWINS of the current version (the garbage a losing
-    * writer's per-writer-unique dir becomes when its pointer swap
-    * aborted; twins at older numbers age out with their number) — and
-    * the archive batches no version left on disk lists. A batch thus
-    * stays while any retained version lists it (a reader holding an
-    * older version's lazy archive frame keeps resolvable paths for
-    * `keep` versions), and an unlisted one — a crashed [[retire]]'s, or
-    * one a combine replaced — goes once it is out of that window. By the
-    * twin rule's reasoning, only batches named for a version at or below
-    * the current one go: a higher-numbered batch may be another writer's,
-    * not yet published.
-    *
-    * The pointer is read ONCE and both the version number and the twin
-    * discriminator derive from that single read (round-15 advisor: the
-    * previous `currentVersion` + `currentDirName.get` pair re-read the
-    * pointer — a lease-stealer's commit landing between the two reads
-    * made `cur` the OLD number and `curName` the NEW name, so the real
-    * current-version dir looked like an unreferenced twin and was
-    * deleted). With one read, a concurrently-advanced pointer is simply
-    * a version `> cur` that vacuum never touches. */
-  def vacuum(keep: Int = 2): Unit = withWriterLease {
-    val curName = currentDirName.getOrElse(return)
-    val cur = versionOf(curName)
-    onVacuumAfterPointerRead()
-    val keepNums = versions.filter(_ <= cur).takeRight(keep).toSet
-    versionDirs.foreach { f =>
-      val n = versionOf(f.getName)
-      if ((n <= cur && !keepNums(n)) || (n == cur && f.getName != curName))
-        Fs.deleteTree(f.toPath)
-    }
-    val retained = versionDirs.flatMap(f => listed(f.getName, "_ARCHIVE")).toSet
-    subdirs(archiveRoot, "b").foreach { b =>
-      if (versionOf(b) <= cur && !retained(b)) Fs.deleteTree(archiveRoot.resolve(b))
+    * same-number TWINS of the current version (the dir a commit that
+    * crashed before its pointer swap left; twins at older numbers age out
+    * with their number) — and the archive batches no version left on
+    * disk lists. A batch thus stays while any retained version lists it
+    * (a reader holding an older version's lazy archive frame keeps
+    * resolvable paths for `keep` versions), and an unlisted one — a
+    * crashed [[retire]]'s, or one a combine replaced — goes once it is
+    * out of that window. Like a crashed commit's dir, a batch named for a
+    * version above the current one waits until a commit reaches that
+    * number. */
+  def vacuum(keep: Int = 2): Unit = withWriterLock {
+    currentDirName.foreach { curName =>
+      val cur = versionOf(curName)
+      val keepNums = versions.filter(_ <= cur).takeRight(keep).toSet
+      versionDirs.foreach { f =>
+        val n = versionOf(f.getName)
+        if ((n <= cur && !keepNums(n)) || (n == cur && f.getName != curName))
+          Fs.deleteTree(f.toPath)
+      }
+      val retained = versionDirs.flatMap(f => listed(f.getName, "_ARCHIVE")).toSet
+      subdirs(archiveRoot, "b").foreach { b =>
+        if (versionOf(b) <= cur && !retained(b)) Fs.deleteTree(archiveRoot.resolve(b))
+      }
     }
   }
 }

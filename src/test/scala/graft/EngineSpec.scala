@@ -485,6 +485,12 @@ class EngineSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       CronTick.main(Array(work, "/root/testdata/sf0.001", "/no/such/file.jsonl"))
     }
+    // the failed pass released its lock: the next pass on the same work
+    // dir runs instead of finding it locked
+    val out = new java.io.ByteArrayOutputStream
+    Console.withOut(out)(CronTick.main(Array(work, "/root/testdata/sf0.001")))
+    assert(out.toString.contains("\"ticked\":0") &&
+      !out.toString.contains("pass already running"), out.toString)
   }
 
   test("submit is one append to one request table; status reads the body") {

@@ -66,18 +66,16 @@ class StateTableSpec extends AnyFunSuite {
       .split("\n").filter(_.nonEmpty).toSeq
   }
 
-  /** A UDF for the rows' key column that leaves a crashed writer's stale
-    * lease in `dir` while retire reads the rows: retire still writes its
-    * batch, then finds its lease gone at the check before the pointer
-    * swap and aborts — the state a writer that crashed between the batch
-    * write and the swap leaves behind. The next writer steals the stale
-    * lease (local mode: executor == this JVM/FS). */
-  def crashAfterBatch(dir: String) = {
-    val lock = java.nio.file.Paths.get(dir, "_LOCK")
-    udf { (x: Long) =>
-      Files.writeString(lock, s"crashed-writer ${System.currentTimeMillis() - 3600 * 1000L}")
-      x
-    }
+  object Crash extends RuntimeException("crashed before the pointer swap")
+
+  /** Runs `op` with `t`'s commits crashing after the version dir write and
+    * before the pointer swap — for retire, after its archive batch write:
+    * the state a writer killed there leaves behind (the kernel drops its
+    * lock). True when `op` crashed there; a retire with no live view
+    * commits nothing. */
+  def crashedBeforeSwap(t: StateTable)(op: => Any): Boolean = {
+    t.beforeSwap = () => throw Crash
+    try { op; false } catch { case Crash => true } finally t.beforeSwap = () => ()
   }
 
   test("retire moves finished rows to the archive; live stays bounded; " +
@@ -107,8 +105,7 @@ class StateTableSpec extends AnyFunSuite {
     val views = () => (rows(t.read()), rows(t.archive()), rows(t.readAll()))
     val before = views()
     val published = batchDirs(dir).toSet
-    intercept[Exception](t.retire(Seq((2L, 1), (3L, -2)).toDF("id", "status")
-      .withColumn("id", crashAfterBatch(dir)(col("id")))))
+    assert(crashedBeforeSwap(t)(t.retire(Seq((2L, 1), (3L, -2)).toDF("id", "status"))))
     val orphan = batchDirs(dir).filterNot(published)
     assert(orphan.size == 1, s"the batch write did not happen: ${batchDirs(dir)}")
     assert(views() == before, "a crashed retire changed what readers see")
@@ -251,113 +248,44 @@ class StateTableSpec extends AnyFunSuite {
     assert(rows(new StateTable(spark, dir, Seq("id")).read()) == Seq(1L -> 0))
   }
 
-  // ---- single-writer lease (the concurrency contract) -------------------
+  // ---- single writer (the concurrency contract) ---------------------------
   // The Mongo reference got per-document write atomicity for free; a
   // snapshot table cannot, so StateTable is single-writer by contract and
   // a second concurrent writer must FAIL LOUDLY rather than silently lose
-  // the other writer's read-modify-write (without the lease, an append
-  // landing between a retire's read and its commit is folded away unread).
+  // the other writer's read-modify-write (unlocked, an append landing
+  // between a retire's read and its commit is folded away unread).
 
-  test("lease: a held foreign lease makes every mutator fail loudly; " +
-    "reads stay live and nothing is clobbered") {
-    val dir = Files.createTempDirectory("graft_lease").toString
+  test("lock: while another process holds the writer lock every mutator " +
+    "fails loudly and reads stay live; once it is killed the next mutation " +
+    "succeeds at once") {
+    val dir = Files.createTempDirectory("graft_lock").toString
     val t = new StateTable(spark, dir, Seq("id"))
     t.commit(Seq((1L, 0)).toDF("id", "status"))
-    // a FRESH lease held by another writer
-    val lock = java.nio.file.Paths.get(dir, "_LOCK")
-    Files.writeString(lock, s"other-writer ${System.currentTimeMillis()}")
-    intercept[java.util.ConcurrentModificationException] {
-      t.commit(Seq((2L, 0)).toDF("id", "status"))
-    }
-    intercept[java.util.ConcurrentModificationException] {
-      t.appendDelta(Seq((2L, 0)).toDF("id", "status"))
-    }
-    intercept[java.util.ConcurrentModificationException] {
-      t.retire(Seq((1L, 1)).toDF("id", "status"))
-    }
-    intercept[java.util.ConcurrentModificationException] { t.vacuum() }
-    // readers are never blocked or corrupted by a held lease
-    assert(t.read().get.as[(Long, Int)].collect().toSeq == Seq((1L, 0)))
-    assert(t.versions == Seq(0L))
-    // once the other writer releases, this writer proceeds (and releases
-    // its own lease afterwards — a second mutation also succeeds)
-    Files.delete(lock)
+    val javaBin = java.nio.file.Paths.get(System.getProperty("java.home"), "bin", "java")
+    val child = new ProcessBuilder(javaBin.toString, "-Xmx32m",
+      "-cp", System.getProperty("java.class.path"), "graft.HoldLock", s"$dir/_LOCK")
+      .redirectErrorStream(true).start()
+    try {
+      val out = new java.io.BufferedReader(new java.io.InputStreamReader(child.getInputStream))
+      assert(out.readLine() == "locked")
+      intercept[java.util.ConcurrentModificationException] {
+        t.commit(Seq((2L, 0)).toDF("id", "status"))
+      }
+      intercept[java.util.ConcurrentModificationException] {
+        t.appendDelta(Seq((2L, 0)).toDF("id", "status"))
+      }
+      intercept[java.util.ConcurrentModificationException] {
+        t.retire(Seq((1L, 1)).toDF("id", "status"))
+      }
+      intercept[java.util.ConcurrentModificationException] { t.vacuum() }
+      // readers are never blocked or corrupted by a held lock
+      assert(t.read().get.as[(Long, Int)].collect().toSeq == Seq((1L, 0)))
+      assert(t.versions == Seq(0L))
+    } finally child.destroyForcibly().waitFor()
+    // the kernel dropped the killed holder's lock: no wait, no expiry
     t.appendDelta(Seq((2L, 0)).toDF("id", "status"))
     t.retire(Seq((1L, 1)).toDF("id", "status"))
     assert(t.read().get.count() == 1 && t.readAll().get.count() == 2)
-    assert(!Files.exists(lock), "lease must be released after the mutation")
-  }
-
-  test("lease: a stale lease from a crashed writer is stolen; an " +
-    "unparseable lock is treated as stale") {
-    val dir = Files.createTempDirectory("graft_lease").toString
-    val t = new StateTable(spark, dir, Seq("id"), leaseMs = 50L)
-    val lock = java.nio.file.Paths.get(dir, "_LOCK")
-    Files.writeString(lock,
-      s"crashed-writer ${System.currentTimeMillis() - 1000L}")
-    t.commit(Seq((1L, 0)).toDF("id", "status")) // steal succeeds
-    assert(t.read().get.count() == 1)
-    Files.writeString(lock, "garbage-without-timestamp")
-    t.appendDelta(Seq((2L, 0)).toDF("id", "status"))
-    assert(t.read().get.count() == 2)
-  }
-
-  test("lease: stolen mid-commit aborts BEFORE the pointer swap — the " +
-    "stealer's table is never clobbered by the paused loser") {
-    val dir = Files.createTempDirectory("graft_lease").toString
-    val t = new StateTable(spark, dir, Seq("id"))
-    t.commit(Seq((1L, 0)).toDF("id", "status"))
-    // A writer paused past its whole lease: simulate the steal happening
-    // DURING the snapshot write by evaluating a side-effecting expression
-    // inside the committed frame (local mode: executor == this JVM/FS).
-    val lock = java.nio.file.Paths.get(dir, "_LOCK")
-    val steal = udf { (x: Long) =>
-      Files.writeString(lock, s"thief ${System.currentTimeMillis()}"); x
-    }
-    intercept[java.util.ConcurrentModificationException] {
-      t.commit(Seq((2L, 7)).toDF("id", "status")
-        .withColumn("id", steal(col("id"))))
-    }
-    // the pointer is untouched: readers still see the pre-commit snapshot
-    assert(t.read().get.as[(Long, Int)].collect().toSeq == Seq((1L, 0)))
-    // and the thief's lease survives (the loser must not release it)
-    assert(Files.readString(lock).startsWith("thief"))
-  }
-
-  test("lease: an ADVANCED POINTER aborts the commit even when the lock " +
-    "still carries our token — the stealer's version dir survives") {
-    // The r11-advisor window: a writer paused past its lease between the
-    // ownership re-check and deleteTree could delete a stealer's live,
-    // pointer-referenced v$next. The commit now also aborts when the
-    // pointer has advanced to >= next — an advanced pointer proves a
-    // stolen lease re-committed, regardless of what the lock says.
-    val dir = Files.createTempDirectory("graft_leaseadv").toString
-    val t = new StateTable(spark, dir, Seq("id"))
-    t.commit(Seq((1L, 0)).toDF("id", "status"))
-    // simulate the thief's COMPLETED commit (v1 + pointer swap) landing
-    // while the loser's snapshot write is in flight, with the lock left
-    // holding the LOSER's token (the double-hold shape where ownedStill
-    // alone is satisfied and only the pointer tells the truth)
-    val adv = udf { (x: Long) =>
-      val v1 = java.nio.file.Paths.get(dir, "v1")
-      Files.createDirectories(v1)
-      Files.writeString(v1.resolve("_THIEF_MARKER"), "thief")
-      val tmp = java.nio.file.Paths.get(dir, "_CURRENT.thief")
-      Files.writeString(tmp, "1")
-      Files.move(tmp, java.nio.file.Paths.get(dir, "_CURRENT"),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      x
-    }
-    intercept[java.util.ConcurrentModificationException] {
-      t.commit(Seq((2L, 7)).toDF("id", "status")
-        .withColumn("id", adv(col("id"))))
-    }
-    // the stealer's version dir was NOT deleted and the pointer still
-    // references it
-    assert(Files.exists(java.nio.file.Paths.get(dir, "v1", "_THIEF_MARKER")),
-      "loser deleted the stealer's committed version dir")
-    assert(Files.readString(java.nio.file.Paths.get(dir, "_CURRENT")).trim == "1")
   }
 
   test("race: concurrent writers with retry-on-contention lose no update " +
@@ -399,7 +327,8 @@ class StateTableSpec extends AnyFunSuite {
       "a concurrent append or retire was lost")
     assert(rows(t.archive()).toMap == want.filter(_._1 % 2 == 0),
       "a concurrent retire was lost")
-    assert(!Files.exists(java.nio.file.Paths.get(dir, "_LOCK")))
+    assert(graft.ops.Fs.tryLocked(java.nio.file.Paths.get(dir, "_LOCK"))(true).contains(true),
+      "the writer lock must be free once every writer is done")
   }
 
   test("fuzz: 100 random appendDelta/fold/retire/crash-in-retire/vacuum/" +
@@ -456,9 +385,7 @@ class StateTableSpec extends AnyFunSuite {
             done.foreach { case (id, st) =>
               if (liveM.remove(id).isDefined) archM(id) = st }
           case 5 => // crash in retire: after its batch write, before the swap
-            try t.retire(finished().toDF("id", "status")
-              .withColumn("id", crashAfterBatch(dir)(col("id"))))
-            catch { case _: Exception => () }
+            crashedBeforeSwap(t)(t.retire(finished().toDF("id", "status"))): Unit
           case 6 =>
             if (rnd.nextBoolean()) t = new StateTable(spark, dir, Seq("id"))
             else t.vacuum(keep = 1 + rnd.nextInt(4))
@@ -577,7 +504,7 @@ class StateTableSpec extends AnyFunSuite {
     val t = new StateTable(spark, dir, Seq("id"))
     t.commit(Seq((1L, 0)).toDF("id", "status"))
     t.commit(Seq((1L, 1)).toDF("id", "status"))
-    // a losing writer's unreferenced dir at the current version number
+    // a crashed commit's unreferenced dir at the current version number
     val twin = java.nio.file.Paths.get(dir, "v1_loser000")
     Files.createDirectories(twin)
     Files.writeString(twin.resolve("junk"), "x")
@@ -587,33 +514,38 @@ class StateTableSpec extends AnyFunSuite {
     assert(t.read().get.as[(Long, Int)].collect().toMap == Map(1L -> 1))
   }
 
-  test("vacuum race: a lease-stealer's commit landing after the pointer " +
-      "read deletes nothing current (round-15 advisor double-read fix)") {
-    // The pre-fix shape: vacuum read the pointer TWICE (number, then
-    // name). A stealer's commit between the reads made `cur` the old
-    // number and `curName` the new name, so the REAL current-version dir
-    // matched the same-number-twin rule and was deleted. The hook fires
-    // at exactly the historical window — after vacuum's (now single)
-    // pointer read, before any delete — and a zero-lease stealer commits
-    // there. The stolen writer's version and data must survive.
-    val dir = Files.createTempDirectory("graft_vrace").toString
+  test("a commit killed before its pointer swap leaves only its version dir, " +
+    "a same-number twin that vacuum reaps once the next commit lands") {
+    val dir = Files.createTempDirectory("graft_crashdir").toString
     val t = new StateTable(spark, dir, Seq("id"))
-    t.commit(Seq((1L, 0)).toDF("id", "status")) // v0
-    t.commit(Seq((1L, 1)).toDF("id", "status")) // v1 (current at read time)
-    t.onVacuumAfterPointerRead = () => {
-      // leaseMs = -1 makes ANY held lease stale to the stealer —
-      // deterministic steal, no sleep in the test
-      val stealer = new StateTable(spark, dir, Seq("id"), leaseMs = -1L)
-      stealer.commit(Seq((1L, 2)).toDF("id", "status")) // v2, steals _LOCK
-    }
-    t.vacuum(keep = 1)
-    val back = new StateTable(spark, dir, Seq("id"))
-    assert(back.read().get.as[(Long, Int)].collect().toMap == Map(1L -> 2),
-      "the lease-stealer's committed version was damaged by vacuum")
-    // retention math stays relative to the version vacuum READ: v1 kept
-    // (keep=1 of versions <= cur), v0 reaped, v2 untouched
-    val names = new java.io.File(dir).listFiles.map(_.getName).toSet
-    assert(!names.exists(_.startsWith("v0_")), "v0 should be vacuumed")
-    assert(names.exists(_.startsWith("v2_")), "stolen-commit v2 must survive")
+    t.commit(Seq((1L, 0)).toDF("id", "status"))
+    def entries = new java.io.File(dir).list().toSet
+    val before = entries
+    assert(crashedBeforeSwap(t)(t.commit(Seq((2L, 0)).toDF("id", "status"))))
+    val crashed = entries -- before
+    assert(crashed.size == 1 && crashed.head.startsWith("v1_"),
+      s"a crashed commit must leave exactly its own version dir: $crashed")
+    assert(rows(t.read()) == Seq(1L -> 0))
+    t.vacuum(keep = 1) // above the current version: left for now
+    assert(entries.contains(crashed.head))
+    t.commit(Seq((3L, 0)).toDF("id", "status"))
+    t.vacuum(keep = 2)
+    assert(!entries.contains(crashed.head), "the crashed commit's dir survived vacuum")
+    assert(t.versions == Seq(0L, 1L))
+    assert(rows(t.read()) == Seq(3L -> 0))
+  }
+}
+
+/** Holds the OS lock on the file named by its argument until it is killed
+  * or its stdin closes, after printing `locked` — a second process for the
+  * single-writer tests. */
+object HoldLock {
+  def main(args: Array[String]): Unit = {
+    val ch = java.nio.channels.FileChannel.open(java.nio.file.Paths.get(args(0)),
+      java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.WRITE)
+    ch.lock()
+    println("locked")
+    System.out.flush()
+    while (System.in.read() >= 0) ()
   }
 }
